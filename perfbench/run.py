@@ -48,10 +48,11 @@ WORKLOADS = ("curate", "serve")
 CURATE_SCALE = 1.0
 WARM_SCALE = 0.1
 CURATE_TABLES = ("documents", "events")
-# serve: an sf0.1-sized corpus, nproc clients, fixed request counts
+# serve: an sf0.1-sized corpus, nproc / 2 clients, fixed request counts
 SERVE_SCALE = 1.0
-SERVE_REQUESTS = 60      # 10 blocks of the 6 request kinds
-SERVE_WARMUP = 12        # 2 blocks
+SERVE_ROUNDS = 3         # timed rounds; run_s is the median round's
+SERVE_REQUESTS = 18      # per round: 3 blocks of the 6 request kinds
+SERVE_WARMUP = 24        # 4 blocks
 
 RUN_LIMIT_S = 170          # a run's time limit once the build exists
 FIRST_RUN_LIMIT_S = 880    # the same for the run that builds
@@ -136,6 +137,15 @@ def heap():
     return f"{min(max(g, 2), 8)}g"
 
 
+def serve_clients():
+    """serve's closed-loop clients: half the cores. Each request's jobs
+    run on all the cores, and the JIT compiler threads take one to two
+    more; with one client per core the JVM kept every core busy and its
+    runs measured the host's scheduler more than the program (and
+    served fewer requests per second than with half as many)."""
+    return max(1, len(os.sched_getaffinity(0)) // 2)
+
+
 def run_harness(cp, harness_args, data, out, deadline):
     """Runs the harness JVM; returns its result and the DuckDB side of
     the checks (an Oracle)."""
@@ -185,6 +195,10 @@ def run_harness(cp, harness_args, data, out, deadline):
             os.killpg(p.pid, signal.SIGKILL)
             p.wait()
             die(f"harness timed out; log in {out}/harness.log")
+        except BaseException:   # interrupted: the JVM goes with this run
+            os.killpg(p.pid, signal.SIGKILL)
+            p.wait()
+            raise
     if dump and os.path.exists(dump):
         os.replace(dump, archive)
     if p.returncode != 0:
@@ -263,17 +277,26 @@ class Oracle(threading.Thread):
 
 def percentile(values, q):
     """The q-th percentile, interpolated between samples."""
+    if len(values) == 1:
+        return values[0]
     return statistics.quantiles(values, n=100, method="inclusive")[q - 1]
 
 
 def end_to_end(res, inputs):
-    lat = [t["seconds"] for t in res["timed"]]
-    run_s = res["pass_s"][0]
+    """run_s is the median of serve's rounds (each the same mix of
+    requests), or curate's first pass. A request is one of serve's
+    calls, or curate's pass: its one client waits for the whole pass."""
+    if res["workload"] == "serve":
+        rounds = res["pass_s"]
+        lat = [t["seconds"] for t in res["timed"]]
+    else:
+        rounds = lat = res["pass_s"][:1]
+    run_s = statistics.median(rounds)
     return {
         "setup_s": (res["setup_s"], "s"),
         "run_s": (run_s, "s"),
         "docs_per_s": (inputs["docs"] / run_s, "1/s"),
-        "ops_per_s": (len(lat) / run_s, "1/s"),
+        "ops_per_s": (len(lat) / len(rounds) / run_s, "1/s"),
         "op_p50_s": (statistics.median(lat), "s"),
         "op_p90_s": (percentile(lat, 90), "s"),
         "heap_mb": (res["heap_bytes"] / MB, "MB"),
@@ -315,6 +338,9 @@ def main():
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--passes", type=int, default=1, help="curate's timed passes")
     args = ap.parse_args()
+    # SIGTERM unwinds like an exception, so the JVM is stopped and this
+    # run's /tmp/graft_* artifacts are deleted
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     t_start = time.time()
     if not os.path.isdir(PROGRAM_SRC) or not os.path.exists(ORACLE_TOOL):
         die(f"graft's sources are not here ({PROGRAM_SRC}); run from a full checkout")
@@ -335,8 +361,9 @@ def main():
         "--trace", str(args.trace), "--out", work,
         "--data", ",".join([data] + [os.path.join(work, f"data{k}")
                                      for k in range(1, len(corpora))]),
-        "--requests", str(SERVE_REQUESTS), "--warmup", str(SERVE_WARMUP),
-        "--clients", str(len(os.sched_getaffinity(0)))]
+        "--requests", str(SERVE_REQUESTS), "--rounds", str(SERVE_ROUNDS),
+        "--warmup", str(SERVE_WARMUP),
+        "--clients", str(serve_clients())]
     if warm:
         harness_args += ["--warm", os.path.join(work, "warm")]
 
@@ -376,11 +403,12 @@ def main():
         print(f"inputs ({name}): scale={c['scale']} docs={c['docs']} bytes={c['bytes']} "
               f"dup_rate={c['dup_rate']} max_cluster={c['max_cluster']} "
               + " ".join(f"{t}={v['rows']}rows/{v['bytes']}B" for t, v in c["tables"].items()))
-    print(f"timed part: {len(lat)} calls in {e2e['run_s'][0]:.2f} s "
+    print(f"timed part: {len(lat)} calls, run_s {e2e['run_s'][0]:.2f} s "
           f"(--seconds {args.seconds:g}); set-up {res['setup_s']:.2f} s, "
           f"of which JVM and session start {res['session_s']:.2f} s")
     if len(res["pass_s"]) > 1:
-        print("pass times: " + ", ".join(f"{v:.2f} s" for v in res["pass_s"]))
+        print(("round" if args.workload == "serve" else "pass") + " times: "
+              + ", ".join(f"{v:.2f} s" for v in res["pass_s"]))
     print("set-up calls: " + ", ".join(f"{s['label']} {s['seconds']:.2f}"
                                         for s in res["setup_calls"][:16]) + " s")
     if args.workload == "curate":
@@ -397,7 +425,10 @@ def main():
         second = statistics.median(t["seconds"] for t in order[half:])
         print(f"latency median, first half {first:.3f} s, second half {second:.3f} s "
               f"({second / first - 1:+.3f}); {len(res['fillers'])} filler requests")
-    print(f"latency samples: {len(lat)} (p90 has {len(lat) - int(0.9 * len(lat))} beyond it)")
+    if args.workload == "serve":
+        print(f"latency samples: {len(lat)} (p90 has {len(lat) - int(0.9 * len(lat))} beyond it)")
+    else:
+        print("latency samples: 1, the pass")
     print(f"run phases: build check {t_gen - t_start:.1f} s, inputs {t_jvm - t_gen:.1f} s, "
           f"JVM and DuckDB {t_end - t_jvm:.1f} s (checks {res['checks_s']:.1f} s)")
     print(f"checks: {len(oracle.sql)} outputs against DuckDB, "
@@ -432,8 +463,9 @@ def main():
         layers = sorted({n.split(".")[0] for n in pl} - {"registry", "spark"})
         task_cpu = sum(pl[f"{l}.task_cpu_s"] for l in layers)
         off_task = sum(pl[f"{l}.{m}"] for l in layers for m in ("build_s", "plan_s", "wait_s"))
-        print(f"task CPU {task_cpu:.2f} s = {task_cpu / e2e['run_s'][0]:.3f} x run_s "
-              f"({task_cpu / (e2e['run_s'][0] * res['nproc']):.3f} of the cores' time)")
+        wall = sum(res["pass_s"]) if args.workload == "serve" else e2e["run_s"][0]
+        print(f"task CPU {task_cpu:.2f} s = {task_cpu / wall:.3f} x the timed part's wall time "
+              f"({task_cpu / (wall * res['nproc']):.3f} of the cores' time)")
         print(f"build_s + plan_s + wait_s {off_task:.2f} s = "
               f"{off_task / sum(lat):.3f} of the calls' time")
         print("set-up build_s by layer: " + ", ".join(

@@ -24,12 +24,13 @@ import graft.{BenchAccess, GraftSession, SparkEntry}
   * drives it; perfbench/NOTES.md says what each workload measures.
   *
   * Usage: Harness --workload curate|serve --seed N --trace 0|1
-  *   --data DIR[,DIR...] --warm DIR --requests N --warmup N
+  *   --data DIR[,DIR...] --warm DIR --requests N --rounds N --warmup N
   *   --clients N --out DIR
   *
   * `--data` names the timed corpora: one timed pass over each
   * (curate), or the one corpus served (serve). `--warm` is curate's
-  * set-up corpus.
+  * set-up corpus. serve times `--rounds` rounds of `--requests`
+  * requests each.
   */
 object Harness {
   def main(args: Array[String]): Unit = {
@@ -225,7 +226,7 @@ final class Harness(opt: Map[String, String]) {
     val sessionS = (System.currentTimeMillis() - jvmStartMs) / 1e3
 
     val clients = opt("clients").toInt
-    val (setupCalls, requests) =
+    val (setupCalls, rounds) =
       if (workload == "curate") {
         // the same call list once over a small corpus: JIT, codegen
         // and class loading of every call's path, paid before the timed
@@ -234,44 +235,51 @@ final class Harness(opt: Map[String, String]) {
       } else {
         // every serving artifact (IVF-PQ index, SQ8 bounds, co-click
         // matrix) is built by the first request of its kind; a fixed
-        // number of warm-up requests follows in the same closed loop,
-        // so clients whose artifacts are built go on while the index
-        // builds
+        // number of warm-up requests follows in the same closed loop of
+        // `nproc` clients, the IVF-PQ probes last, so that the other
+        // clients warm up while the index builds. Each timed round gets
+        // its own requests and fillers.
         val rng = new Random(seed)
         val first = Workloads.serve.map(_(rng))
-        val (warm, timed) = Workloads.requests(rng,
-          opt("warmup").toInt + opt("requests").toInt + 8 * clients).splitAt(opt("warmup").toInt)
-        (closedLoop(spark, first ++ warm, corpora.head, "setup")._1, timed)
+        val (probes, others) = Workloads.requests(rng, opt("warmup").toInt)
+          .partition(_.query == first.head.query)
+        val rounds = Seq.fill(opt("rounds").toInt)(
+          Workloads.requests(rng, opt("requests").toInt + 8 * clients))
+        (closedLoop(spark, first ++ others ++ probes, corpora.head, "setup", nproc)._1, rounds)
       }
     System.gc()   // the timed part starts from a collected heap
     val setupS = (System.currentTimeMillis() - jvmStartMs) / 1e3
 
     // the timed part: curate's pass over each timed corpus (the first
-    // is the measured one), or serve's requests; it ends when its last
+    // is the measured one), or serve's rounds, one closed loop after
+    // the other (all measured); a pass or round ends when its last
     // measured call returns
     tracer.enter("timed")
+    val timedStart = System.nanoTime()
     var fillers = Seq.empty[Outcome]
-    val passes = corpora.take(if (workload == "curate") corpora.size else 1).map { dir =>
-      val t0 = System.nanoTime()
-      val outs =
-        if (workload == "curate")
-          spanned("curate.pass")(pid =>
+    val passes =
+      if (workload == "curate")
+        corpora.map { dir =>
+          val t0 = System.nanoTime()
+          val outs = spanned("curate.pass")(pid =>
             Workloads.curate.map(op => call(spark, op, dir, pid, "timed")))
-        else {
-          val (measured, rest) = closedLoop(spark, requests, dir, "timed",
-            timed = opt("requests").toInt)
-          fillers = rest
-          measured
+          (secs(t0, outs.map(_.endNs).max), outs)
         }
-      (secs(t0, outs.map(_.endNs).max), t0, outs)
-    }
+      else
+        rounds.map { ops =>
+          val t0 = System.nanoTime()
+          val (measured, rest) = closedLoop(spark, ops, corpora.head, "timed",
+            timed = opt("requests").toInt)
+          fillers ++= rest
+          (secs(t0, measured.map(_.endNs).max), measured)
+        }
     tracer.enter("checks")
     BenchBus.drain(spark.sparkContext)
     val heapBytes = HeapAfterGc()
     // write_amp counts what set-up and the timed part wrote, not the checks
     val outputBytes = tracer.output
 
-    val (_, timedStart, timed) = passes.head
+    val timed = if (workload == "curate") passes.head._2 else passes.flatMap(_._2)
     val c0 = System.nanoTime()
     val verdicts = correctness(spark, timed)
     val checksS = secs(c0, System.nanoTime())
