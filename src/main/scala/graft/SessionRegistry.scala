@@ -3,25 +3,26 @@ package graft
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.LocalDirShim
 
 import scala.collection.concurrent.TrieMap
 
 /** Session-scoped artifact registries (the reference's shared gokart
-  * task outputs): every cached model/frame/index dir is keyed by a
-  * tuple whose FIRST element is the owning SparkSession — per
-  * CLAUDE.md, never by dir alone — and is EVICTED when that
-  * session's SparkContext ends, so a long-lived multi-session JVM
-  * can't leak dead sessions' cached frames/models. The first access
-  * from a context installs one listener on its bus; onApplicationEnd
-  * sweeps every registry for keys owned by that context (all
-  * sessions of a context die with it).
+  * task outputs): every cached model/frame and every disk artifact
+  * is keyed by a tuple whose FIRST element is the owning
+  * SparkSession — per CLAUDE.md, never by dir alone — and is EVICTED
+  * when that session's SparkContext ends, so a long-lived
+  * multi-session JVM can't leak dead sessions' cached frames/models.
+  * The first access from a context installs one listener on its bus;
+  * onApplicationEnd sweeps every registry for keys owned by that
+  * context (all sessions of a context die with it) and deletes the
+  * context's artifact root.
   *
   * API matches TrieMap's (`getOrElseUpdate(key, value)` / `get`),
   * but with a STRONGER build contract: the by-name builder for a key
   * runs at most once even under concurrent first access (per-key
-  * lazy slot), because builders here side-effect (they overwrite a
-  * per-key parquet path) and a double-run could hand a reader a
-  * partially rewritten artifact.
+  * lazy slot), because builders here side-effect (they write disk
+  * artifacts) and a double-run would do the work twice.
   */
 object SessionRegistry {
   /** Declared ceiling for any COLLECTED-ROWS registry entry (mad
@@ -40,15 +41,15 @@ object SessionRegistry {
     * key even under concurrent first access — TrieMap's own
     * getOrElseUpdate may evaluate the by-name argument in two racing
     * threads and discard one result, which is unsafe for our
-    * side-effecting builders (parquet overwrites to a fixed path). */
+    * side-effecting builders. A builder that throws leaves the slot
+    * unbuilt, and the next access runs it again. */
   private final class Slot[V](builder: () => V) {
     @volatile private var built = false
     lazy val value: V = { val r = builder(); built = true; r }
     def isBuilt: Boolean = built
   }
 
-  final class Cache[K <: Product, V] private[SessionRegistry] (
-      clean: Option[V => Unit]) {
+  final class Cache[K <: Product, V] private[SessionRegistry] () {
     private val m = TrieMap.empty[K, Slot[V]]
     private def session(k: K): SparkSession =
       k.productElement(0).asInstanceOf[SparkSession]
@@ -59,10 +60,7 @@ object SessionRegistry {
     }
     def get(k: K): Option[V] = m.get(k).filter(_.isBuilt).map(_.value)
     private[graft] def evict(sc: SparkContext): Unit =
-      m.keys.filter(k => session(k).sparkContext eq sc).foreach { k =>
-        m.remove(k).foreach(s =>
-          if (s.isBuilt) clean.foreach(f => scala.util.Try(f(s.value))))
-      }
+      m.keys.filter(k => session(k).sparkContext eq sc).foreach(m.remove)
     private[graft] def liveKeyCount(spark: SparkSession): Int =
       m.keys.count(k => session(k) eq spark)
     /** Built values owned by the session — lets specs turn "this
@@ -76,61 +74,57 @@ object SessionRegistry {
   }
 
   def cache[K <: Product, V](): Cache[K, V] = {
-    val c = new Cache[K, V](None)
+    val c = new Cache[K, V]()
     all.add(c)
     c
   }
 
-  /** Cache whose values own external resources (tmp artifact dirs):
-    * `clean` runs on each evicted value so a context's disk
-    * artifacts die with its registry entries. */
-  def cacheWithCleanup[K <: Product, V](clean: V => Unit): Cache[K, V] = {
-    val c = new Cache[K, V](Some(clean))
-    all.add(c)
-    c
-  }
+  private val artifacts = cache[(SparkSession, String, Any), String]()
+  private val attempt = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Session-unique token for disk-artifact paths. applicationId
-    * alone is shared by every `newSession()` of one context, so two
-    * sessions' registries (keyed per-session) would map to the SAME
-    * path and the second build would mode-overwrite a dir the first
-    * session may still be lazily reading. Adding the session's
-    * identity hash makes path ownership match registry ownership. */
-  def sessionToken(spark: SparkSession): String =
-    spark.sparkContext.applicationId + "_s" +
-      Integer.toHexString(System.identityHashCode(spark))
+  /** The disk artifact `name` for `key` (a value or tuple compared by
+    * equality — typically the corpus dir plus any parameters), built
+    * at most once per session: `write` gets a fresh path that does
+    * not exist yet, under the context's [[root]], and the path is
+    * published only after `write` returns. A throwing `write` leaves
+    * the entry unbuilt, so the next call retries into another fresh
+    * path — a half-written artifact is never served and a retry never
+    * appends onto a failed attempt; the failed attempt's files go
+    * with the root when the context ends. */
+  def artifact(spark: SparkSession, name: String, key: Any)(
+      write: String => Unit): String =
+    artifacts.getOrElseUpdate((spark, name, key), {
+      val path = scratchPath(spark, name)
+      write(path)
+      path
+    })
 
-  /** Collision-free path component for disk-artifact dirs: the
-    * readable sanitized form of the raw key PLUS a short hash of the
-    * raw bytes. Character sanitization alone is lossy — two distinct
-    * registry keys can map to one /tmp path (e.g. dirs differing only
-    * in '/' vs '_', or multi-part keys whose parts contain the
-    * separator), and the second build would mode-overwrite an
-    * artifact the first key still reads (r08 ADVICE). Multi-part keys
-    * join their raw parts with a separator before calling this. */
-  def pathKey(raw: String): String = {
-    val md5 = java.security.MessageDigest.getInstance("MD5")
-      .digest(raw.getBytes("UTF-8"))
-    raw.replaceAll("[^A-Za-z0-9._-]", "_") + "_h" +
-      md5.take(4).map(b => f"$b%02x").mkString
-  }
+  /** The artifact's path if this session has built it (spec hooks). */
+  def builtArtifact(spark: SparkSession, name: String, key: Any): Option[String] =
+    artifacts.get((spark, name, key))
 
-  /** Recursive delete for tmp artifact dirs (the standard cleanup). */
-  def deleteDir(path: String): Unit = {
-    val root = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(root)) {
-      java.nio.file.Files.walk(root)
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-    }
-  }
+  /** A fresh, not-yet-existing path under the context's root, for
+    * disk state that is not an [[artifact]] (a fit's side tables, a
+    * checkpoint); it lives until its owner deletes it or the context
+    * ends. */
+  private[graft] def scratchPath(spark: SparkSession, name: String): String =
+    new java.io.File(root(spark.sparkContext),
+      s"$name-${attempt.incrementAndGet()}").getPath
 
-  /** Sweep every registry for the context's keys (the listener body;
-    * package-visible so the eviction path is unit-testable without
-    * stopping the suite's shared context). */
+  /** Per-context artifact root: `graft-<application id>` under the
+    * first entry of Spark's local dirs. Every session of the context
+    * shares it; [[evictContext]] deletes it whole. */
+  private[graft] def root(sc: SparkContext): java.io.File =
+    new java.io.File(LocalDirShim.firstLocalDir(sc.getConf), s"graft-${sc.applicationId}")
+
+  /** Sweep every registry for the context's keys and delete its
+    * artifact root (the listener body; package-visible so the
+    * eviction path is unit-testable without stopping the suite's
+    * shared context). */
   private[graft] def evictContext(sc: SparkContext): Unit = {
     all.forEach(_.evict(sc))
     hooked.remove(sc)
+    LocalDirShim.deleteRecursively(root(sc))
   }
 
   private[graft] def isHooked(sc: SparkContext): Boolean = hooked.contains(sc)

@@ -1796,7 +1796,9 @@ object SparkEntry {
         |SELECT doc_id, source, n_tok FROM adm ORDER BY doc_id""".stripMargin,
     // q89: Robertson/Lucene BM25, k1=1.2 b=0.75; per-term
     // contributions rounded to 8dp and summed as DECIMAL so the
-    // score is term-order-independent in both engines
+    // score is term-order-independent in both engines; the exact sum
+    // is rounded to 6dp BEFORE the double cast (rounding the double
+    // splits the engines at a half: 2.08231150 → 2.082312 vs 2.082311)
     "q89_bm25" ->
       """WITH q(term) AS (VALUES ('spark'),('table'),('join'),('data'),('query')),
         |dl AS (
@@ -1819,7 +1821,7 @@ object SparkEntry {
         |      8) AS DECIMAL(18,8)) AS c
         |  FROM tf JOIN df USING (term) JOIN dl USING (doc_id), stats),
         |s AS (
-        |  SELECT doc_id, round(CAST(SUM(c) AS DOUBLE), 6) AS score
+        |  SELECT doc_id, CAST(round(SUM(c), 6) AS DOUBLE) AS score
         |  FROM c GROUP BY doc_id
         |  ORDER BY score DESC, doc_id LIMIT 10)
         |SELECT doc_id, score,

@@ -8,6 +8,7 @@ import org.apache.spark.ml.recommendation.ALS
 import org.apache.spark.ml.regression.FMRegressor
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.LocalDirShim
 
 import graft.Tables
 import graft.functions.TextFns
@@ -310,23 +311,17 @@ object MlOps {
     * its four consumers (q44/q45/q49/q64) back through the corpus
     * explode+join+agg every rep (the round-6 lever; found applied
     * everywhere but here in round 7). */
-  private val itemVecsCache = graft.SessionRegistry
-    .cacheWithCleanup[(SparkSession, String), String](graft.SessionRegistry.deleteDir)
-
   private def itemVecs(spark: SparkSession, dir: String): DataFrame = {
-    val path = itemVecsCache.getOrElseUpdate((spark, dir), {
+    val path = graft.SessionRegistry.artifact(spark, "itemvecs", dir) { p =>
       import org.apache.spark.ml.stat.Summarizer
-      val p = s"/tmp/graft_itemvecs_${graft.SessionRegistry.sessionToken(spark)}_" +
-        graft.SessionRegistry.pathKey(dir)
       val w2v = word2vecModel(spark, dir, 16)
       tokenized(spark, dir)
         .select(col("doc_id"), explode(col("tokens")).as("word"))
         .join(broadcast(w2v.getVectors), Seq("word"))
         .groupBy(col("doc_id"))
         .agg(vector_to_array(Summarizer.mean(col("vector"))).as("iv"))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+        .write.parquet(p)
+    }
     spark.read.parquet(path)
   }
 
@@ -386,32 +381,22 @@ object MlOps {
       .orderBy(col("doc_id"))
   }
 
-  /** Ratings-matrix disk-artifact registry (CLAUDE.md lever: shared
-    * cross-query artifacts are parquet, not persists — they must
-    * survive cache clears). */
-  private val ratingsCache = graft.SessionRegistry
-    .cacheWithCleanup[(SparkSession, String), String](graft.SessionRegistry.deleteDir)
-
   /** Ratings matrix for MF-family models: customer × part implicit
     * strength from ordered quantities (lineitem ⋈ orders shuffles once
     * on the order key; the aggregate shuffles on the (user,item)
     * composite — both partial-agg friendly). Materialized once per
     * (session, corpus) — the reference's TrainMatrixFactorization
-    * INPUT artifact; five query families consume it. */
-  def ratings(spark: SparkSession, dir: String): DataFrame = {
-    val path = ratingsCache.getOrElseUpdate((spark, dir), {
-      val p = s"/tmp/graft_ratings_${graft.SessionRegistry.sessionToken(spark)}_" +
-        graft.SessionRegistry.pathKey(dir)
+    * INPUT artifact; five query families consume it. A disk
+    * artifact, not a persist (CLAUDE.md lever: shared cross-query
+    * artifacts must survive cache clears). */
+  def ratings(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(graft.SessionRegistry.artifact(spark, "ratings", dir)(
       Tables.lineitem(spark, dir)
         .join(Tables.orders(spark, dir),
           col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_custkey").as("user"), col("l_partkey").as("item"))
         .agg(sum(col("l_quantity")).cast("float").as("rating"))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    spark.read.parquet(path)
-  }
+        .write.parquet(_)))
 
   /** Shared seed-fixed ALS fit (q52 recommendations, MF-factor item
     * similarity and the GCMC convolution all consume the same trained
@@ -1291,41 +1276,41 @@ object MlOps {
     // validation aggregation per round would otherwise re-read)
     val train = data.filter(pmod(col("vec_id"), lit(5)) =!= 0).persist()
     val valid = data.filter(pmod(col("vec_id"), lit(5)) === 0).persist()
-    // session-scoped (token includes applicationId): two concurrent
-    // JVMs on the same dir (e.g. Bench alongside sbt test) — or two
-    // sessions of one context — must not overwrite each other's best
-    // checkpoint; a plateau restore would load the other run's model
-    val ckpt = "/tmp/graft_earlystop_" + graft.SessionRegistry.sessionToken(spark) +
-      "_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val stopper = new EarlyStopping[LogisticRegressionModel](
-      tryCount = 2, initialLearningRate = 0.1, decaySpeed = 2.0,
-      threshold = 1e-4, savePath = Some(ckpt),
-      reader = LogisticRegressionModel.load)
-    def logLoss(m: LogisticRegressionModel): Double = {
-      val p = element_at(vector_to_array(col("probability")), 2)
-      val eps = lit(1e-15)
-      math.rint(m.transform(valid)
-        .agg(avg(-(col("label") * log(greatest(p, eps)) +
-          (lit(1.0) - col("label")) * log(greatest(lit(1.0) - p, eps)))))
-        .head().getDouble(0) * 1e6) / 1e6
-    }
+    // a fresh path per call under the context's artifact root: two
+    // concurrent runs must not overwrite each other's best checkpoint
+    // (a plateau restore would load the other run's model)
+    val ckpt = graft.SessionRegistry.scratchPath(spark, "earlystop")
     val rows = scala.collection.mutable.ArrayBuffer[(Long, Long, Double, Double, String)]()
-    var stopped = false
-    var round = 1
-    while (!stopped && round <= 6) {
-      val reg = stopper.learningRate
-      val m = new LogisticRegression()
-        .setMaxIter(4 * round).setRegParam(reg).setTol(1e-9)
-        .fit(train)
-      val loss = logLoss(m)
-      stopped = stopper.doesStop(loss, m)
-      rows += ((round.toLong, (4 * round).toLong, reg, loss,
-        if (stopped) "stop" else "continue"))
-      round += 1
-    }
-    val best = stopper.restore()
-    rows += ((round.toLong, best.getMaxIter.toLong, best.getRegParam,
-      logLoss(best), "restored"))
+    try {
+      val stopper = new EarlyStopping[LogisticRegressionModel](
+        tryCount = 2, initialLearningRate = 0.1, decaySpeed = 2.0,
+        threshold = 1e-4, savePath = Some(ckpt),
+        reader = LogisticRegressionModel.load)
+      def logLoss(m: LogisticRegressionModel): Double = {
+        val p = element_at(vector_to_array(col("probability")), 2)
+        val eps = lit(1e-15)
+        math.rint(m.transform(valid)
+          .agg(avg(-(col("label") * log(greatest(p, eps)) +
+            (lit(1.0) - col("label")) * log(greatest(lit(1.0) - p, eps)))))
+          .head().getDouble(0) * 1e6) / 1e6
+      }
+      var stopped = false
+      var round = 1
+      while (!stopped && round <= 6) {
+        val reg = stopper.learningRate
+        val m = new LogisticRegression()
+          .setMaxIter(4 * round).setRegParam(reg).setTol(1e-9)
+          .fit(train)
+        val loss = logLoss(m)
+        stopped = stopper.doesStop(loss, m)
+        rows += ((round.toLong, (4 * round).toLong, reg, loss,
+          if (stopped) "stop" else "continue"))
+        round += 1
+      }
+      val best = stopper.restore()
+      rows += ((round.toLong, best.getMaxIter.toLong, best.getRegParam,
+        logLoss(best), "restored"))
+    } finally LocalDirShim.deleteRecursively(new java.io.File(ckpt))
     // the loop is fully eager (every consumer of the cached splits has
     // run), so the table-sized caches are released before returning
     train.unpersist(blocking = false)
@@ -1429,9 +1414,7 @@ object MlOps {
     def convU(spark: SparkSession): DataFrame = spark.read.parquet(s"$base/convU")
   }
 
-  private val gcmcFitCache = graft.SessionRegistry
-    .cacheWithCleanup[(SparkSession, String), GcmcFit](f =>
-      graft.SessionRegistry.deleteDir(f.base))
+  private val gcmcFitCache = graft.SessionRegistry.cache[(SparkSession, String), GcmcFit]()
 
   private[graft] def gcmcFitFor(spark: SparkSession, dir: String): GcmcFit =
     gcmcFitCache.getOrElseUpdate((spark, dir), gcmcFitRun(spark, dir))
@@ -1522,8 +1505,7 @@ object MlOps {
       else if (s11 > 1e-9) (b1 / s11, 0.0) // degenerate: f2 ∝ f1 (or zero)
       else (0.0, 0.0)
 
-    val base = s"/tmp/graft_gcmc_${graft.SessionRegistry.sessionToken(spark)}_" +
-      graft.SessionRegistry.pathKey(dir)
+    val base = graft.SessionRegistry.scratchPath(spark, "gcmc")
     Seq("bu" -> bu, "bi" -> bi, "pU" -> pU, "qI" -> qI, "convU" -> convU)
       .foreach { case (n, df) => df.write.mode("overwrite").parquet(s"$base/$n") }
     Seq(bu, bi, pU, qI, convU, r).foreach(_.unpersist(blocking = false))

@@ -86,26 +86,15 @@ object CorpusOps {
     * re-run the corpus gram-explode + broadcast join + rollup per
     * bench rep; the hit table is hit-mass-bounded (docs with ≥1 eval
     * collision), not corpus-sized. */
-  private val contamHitsCache = graft.SessionRegistry
-    .cacheWithCleanup[(SparkSession, String, String, Int), String](
-      graft.SessionRegistry.deleteDir)
-
   private[graft] def contamHits(spark: SparkSession, dir: String,
-      cfg: PipelineConfig = PipelineConfig.default): DataFrame = {
-    val p = contamHitsCache.getOrElseUpdate(
-      (spark, dir, cfg.evalSource, cfg.contamN), {
-        val path = s"/tmp/graft_contam_hits_${graft.SessionRegistry.sessionToken(spark)}_" +
-          graft.SessionRegistry.pathKey(
-            dir + "|" + cfg.evalSource + "|" + cfg.contamN)
-        docGrams(Tables.documents(spark, dir), cfg)
-          .join(broadcast(evalGrams(spark, dir, cfg)), Seq("g"))
-          .groupBy(col("doc_id"), col("source"))
-          .agg(count(lit(1)).as("n_hit"))
-          .write.mode("overwrite").parquet(path)
-        path
-      })
-    spark.read.parquet(p)
-  }
+      cfg: PipelineConfig = PipelineConfig.default): DataFrame =
+    spark.read.parquet(graft.SessionRegistry.artifact(spark, "contam_hits",
+        (dir, cfg.evalSource, cfg.contamN))(
+      docGrams(Tables.documents(spark, dir), cfg)
+        .join(broadcast(evalGrams(spark, dir, cfg)), Seq("g"))
+        .groupBy(col("doc_id"), col("source"))
+        .agg(count(lit(1)).as("n_hit"))
+        .write.parquet(_)))
 
   def contamination(spark: SparkSession, dir: String): DataFrame =
     contamination(spark, dir, PipelineConfig.default)
@@ -801,17 +790,11 @@ object CorpusOps {
     * re-read is scan-cheap and survives cache clears. In kind this
     * is the reference's gokart task artifact for the trained LM's
     * scores. */
-  private val nllCache = graft.SessionRegistry
-    .cacheWithCleanup[(SparkSession, String), String](graft.SessionRegistry.deleteDir)
-
   private[graft] def docNll(spark: SparkSession, dir: String): DataFrame = {
-    val path = nllCache.getOrElseUpdate((spark, dir), {
-      val p = s"/tmp/graft_docnll_${graft.SessionRegistry.sessionToken(spark)}_" +
-        graft.SessionRegistry.pathKey(dir)
+    val path = graft.SessionRegistry.artifact(spark, "docnll", dir) { p =>
       val docs = Tables.documents(spark, dir)
-      bigramModelNll(docs, docs).write.mode("overwrite").parquet(p)
-      p
-    })
+      bigramModelNll(docs, docs).write.parquet(p)
+    }
     spark.read.parquet(path)
   }
 
@@ -893,18 +876,9 @@ object CorpusOps {
     *   the same bounded artifacts the standalone queries use (digest
     *   groups, dup-rate-bounded cluster table, broadcast eval
     *   grams). */
-  private val flagsCache = graft.SessionRegistry
-    .cacheWithCleanup[(SparkSession, String), String](graft.SessionRegistry.deleteDir)
-
-  private[graft] def funnelFlags(spark: SparkSession, dir: String): DataFrame = {
-    val path = flagsCache.getOrElseUpdate((spark, dir), {
-      val p = s"/tmp/graft_flags_${graft.SessionRegistry.sessionToken(spark)}_" +
-        graft.SessionRegistry.pathKey(dir)
-      writeFlagsArtifact(spark, dir, p)
-      p
-    })
-    spark.read.parquet(path)
-  }
+  private[graft] def funnelFlags(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(graft.SessionRegistry.artifact(spark, "flags", dir)(
+      writeFlagsArtifact(spark, dir, _)))
 
   private def writeFlagsArtifact(spark: SparkSession, dir: String, out: String): Unit = {
     val docsAll = Tables.documents(spark, dir)
@@ -963,16 +937,10 @@ object CorpusOps {
           .as("n_chunks"))
       .orderBy(col("source"))
 
-  /** Per-(session, corpus) curated-sink registry — same write-once
-    * discipline as the q74 index dir. */
-  private val curatedDirCache =
-    graft.SessionRegistry
-    .cacheWithCleanup[(SparkSession, String), String](graft.SessionRegistry.deleteDir)
-
   /** The written sink location, if this session has materialized it
     * (spec hook for partition-pruning asserts). */
   private[graft] def curatedSinkDir(spark: SparkSession, dir: String): Option[String] =
-    curatedDirCache.get((spark, dir))
+    graft.SessionRegistry.builtArtifact(spark, "curated", dir)
 
   /** The funnel as a PIPELINE RUN, not just a report: the sampled
     * (curated) docs are WRITTEN to parquet partitioned by source —
@@ -983,25 +951,12 @@ object CorpusOps {
     * gates q85. Write-once per (session, corpus); partitioned by
     * source so a per-source consumer touches one directory. */
   def curatedSink(spark: SparkSession, dir: String): DataFrame = {
-    val out = curatedDirCache.getOrElseUpdate((spark, dir), {
-      // sanitized dir string, NOT hashCode: abs(Int.MinValue) is
-      // negative and two corpora with colliding hashCodes would
-      // silently share (and cross-clobber) one sink path
-      val path = s"/tmp/graft_curated_${graft.SessionRegistry.sessionToken(spark)}_" +
-        graft.SessionRegistry.pathKey(dir)
+    val out = graft.SessionRegistry.artifact(spark, "curated", dir)(
       graft.Tables.writePartitionedKeepSchema(funnelFlags(spark, dir)
         .filter(col("sampled"))
         .select(col("doc_id"), col("lang"), col("n_words"), col("source")),
-        "overwrite", "source", "__schema__", path)
-      path
-    })
-    spark.read.parquet(out)
-      .groupBy(col("source"))
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("n_words")).as("n_tokens"),
-        sum(ceil(col("n_words") / ChunkSize.toDouble).cast("long")).as("n_chunks"))
-      .orderBy(col("source"))
+        "overwrite", "source", "__schema__", _))
+    readCurated(spark, out)
   }
 
   /** q111: TEMPERATURE-BASED SOURCE MIXING — the data-mix planning
@@ -1371,15 +1326,10 @@ object CorpusOps {
       |FROM mix m LEFT JOIN uniq u USING (source)
       |ORDER BY m.source""".stripMargin
 
-  /** Per-(session, corpus) bootstrap+append layout registry (q109). */
-  private val appendDirCache =
-    graft.SessionRegistry
-    .cacheWithCleanup[(SparkSession, String), String](graft.SessionRegistry.deleteDir)
-
   /** The written append layout, if this session materialized it
     * (spec hook for the partition-pruning assert). */
   private[graft] def curatedAppendDir(spark: SparkSession, dir: String): Option[String] =
-    appendDirCache.get((spark, dir))
+    graft.SessionRegistry.builtArtifact(spark, "curated_append", dir)
 
   /** q109: the steady-state funnel's WRITE side, completing q91+q92 —
     * bootstrap the curated store from the funnel's sampled docs
@@ -1393,10 +1343,12 @@ object CorpusOps {
     * the q92 admission CTE chain — read-back fidelity of the merged
     * layout is hash-checked against the same SQL fragments that gate
     * the two pipelines it composes. */
-  def curatedAppend(spark: SparkSession, dir: String): DataFrame = {
-    val out = appendDirCache.getOrElseUpdate((spark, dir), {
-      val path = s"/tmp/graft_curated_append_${graft.SessionRegistry.sessionToken(spark)}_" +
-        graft.SessionRegistry.pathKey(dir)
+  def curatedAppend(spark: SparkSession, dir: String): DataFrame =
+    readCurated(spark, appendLayout(spark, dir))
+
+  /** q109's bootstrap+append layout, write-once per (session, corpus). */
+  private def appendLayout(spark: SparkSession, dir: String): String =
+    graft.SessionRegistry.artifact(spark, "curated_append", dir) { path =>
       graft.Tables.writePartitionedKeepSchema(funnelFlags(spark, dir)
         .filter(col("sampled") && !batchPredicate())
         .select(col("doc_id"), col("lang"), col("n_words"), col("source")),
@@ -1409,24 +1361,20 @@ object CorpusOps {
           Seq("doc_id"))
         .select(col("doc_id"), col("lang"), col("n_words"), col("source"))
         .write.mode("append").partitionBy("source").parquet(path)
-      path
-    })
-    spark.read.parquet(out)
+    }
+
+  /** Per-source rollup of a curated layout (q85's sink, q109, q113). */
+  private def readCurated(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(path)
       .groupBy(col("source"))
       .agg(
         count(lit(1)).as("n_docs"),
         sum(col("n_words")).as("n_tokens"),
         sum(ceil(col("n_words") / ChunkSize.toDouble).cast("long")).as("n_chunks"))
       .orderBy(col("source"))
-  }
-
-  /** Per-(session, corpus) compacted-layout registry (q113). */
-  private val compactDirCache =
-    graft.SessionRegistry
-    .cacheWithCleanup[(SparkSession, String), String](graft.SessionRegistry.deleteDir)
 
   private[graft] def compactedDir(spark: SparkSession, dir: String): Option[String] =
-    compactDirCache.get((spark, dir))
+    graft.SessionRegistry.builtArtifact(spark, "curated_compact", dir)
 
   /** q113: LAYOUT COMPACTION — the maintenance op every append-based
     * lakehouse layout needs: q109's bootstrap+append leaves one file
@@ -1442,25 +1390,12 @@ object CorpusOps {
     * layout; the spec additionally asserts the file count shrank to
     * one per partition. */
   def curatedCompact(spark: SparkSession, dir: String): DataFrame = {
-    // ensure the source layout exists (build only if this session
-    // hasn't yet — the q109 read-back agg is not re-run otherwise),
-    // then compact write-once per (session, corpus)
-    if (appendDirCache.get((spark, dir)).isEmpty) curatedAppend(spark, dir).count()
-    val src = appendDirCache.get((spark, dir)).get
-    val out = compactDirCache.getOrElseUpdate((spark, dir), {
-      val path = src + "_compact"
+    // compact the q109 layout, write-once per (session, corpus)
+    val src = appendLayout(spark, dir)
+    readCurated(spark, graft.SessionRegistry.artifact(spark, "curated_compact", dir)(
       graft.Tables.writePartitionedKeepSchema(
         spark.read.parquet(src).repartition(col("source")),
-        "overwrite", "source", "__schema__", path)
-      path
-    })
-    spark.read.parquet(out)
-      .groupBy(col("source"))
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("n_words")).as("n_tokens"),
-        sum(ceil(col("n_words") / ChunkSize.toDouble).cast("long")).as("n_chunks"))
-      .orderBy(col("source"))
+        "overwrite", "source", "__schema__", _)))
   }
 
   /** Dedup-AWARE train/test split (leakage guard): a plain hash

@@ -275,24 +275,17 @@ object Dedup {
     * Floats: dist and lengths are exact ints, the ratio is one
     * correctly-rounded IEEE division → the admitted pair SET is
     * exact cross-engine (threshold compare on identical doubles);
-    * round(,6) on the emitted ratio is presentation only. */
-  private val editPairCache =
-    graft.SessionRegistry
-      .cacheWithCleanup[(SparkSession, String), String](graft.SessionRegistry.deleteDir)
-
-  /** Disk-artifact wrapper ([[jaccardPairs]]'s discipline): the
+    * round(,6) on the emitted ratio is presentation only.
+    *
+    * Disk-artifact wrapper ([[jaccardPairs]]'s discipline): the
     * verified pair list is written once per (session, corpus) and
     * re-read thereafter — Bench's between-rep cache clears never
     * re-run the posting pyramid + levenshtein verify. The
     * deterministic ORDER BY is re-applied on read (parquet re-reads
     * don't preserve row order). */
   def editDedup(spark: SparkSession, dir: String): DataFrame = {
-    val path = editPairCache.getOrElseUpdate((spark, dir), {
-      val p = s"/tmp/graft_editpairs_${graft.SessionRegistry.sessionToken(spark)}_" +
-        graft.SessionRegistry.pathKey(dir)
-      editDedupDerive(spark, dir).write.mode("overwrite").parquet(p)
-      p
-    })
+    val path = graft.SessionRegistry.artifact(spark, "editpairs", dir)(
+      editDedupDerive(spark, dir).write.parquet(_))
     spark.read.parquet(path).orderBy(col("doc_a"), col("doc_b"))
   }
 
@@ -362,21 +355,14 @@ object Dedup {
     * nonnegative); the final double is one exact-int-over-1e8
     * division, cosine = RAW quotient of identically-derived doubles
     * (lever (k)) with a raw threshold compare (lever (c)) — the
-    * admitted pair SET is exact at any scale. */
-  private val cosPairCache =
-    graft.SessionRegistry
-      .cacheWithCleanup[(SparkSession, String), String](graft.SessionRegistry.deleteDir)
-
-  /** Disk-artifact wrapper (jaccardPairs's discipline) — the admitted
+    * admitted pair SET is exact at any scale.
+    *
+    * Disk-artifact wrapper (jaccardPairs's discipline) — the admitted
     * pair list is written once per (session, corpus), deterministic
     * ORDER BY re-applied on read. */
   def tfidfCosine(spark: SparkSession, dir: String): DataFrame = {
-    val path = cosPairCache.getOrElseUpdate((spark, dir), {
-      val p = s"/tmp/graft_cospairs_${graft.SessionRegistry.sessionToken(spark)}_" +
-        graft.SessionRegistry.pathKey(dir)
-      tfidfCosineDerive(spark, dir).write.mode("overwrite").parquet(p)
-      p
-    })
+    val path = graft.SessionRegistry.artifact(spark, "cospairs", dir)(
+      tfidfCosineDerive(spark, dir).write.parquet(_))
     spark.read.parquet(path).orderBy(col("doc_a"), col("doc_b"))
   }
 
@@ -462,18 +448,13 @@ object Dedup {
     * of [[sigCol]] (64 interpreted lambdas per row measured ~25 ms/
     * 1000 docs×row — fine per arriving event, 100× too slow as a
     * scan); DedupSpec asserts the two produce identical signatures. */
-  private val sigCache = graft.SessionRegistry
-    .cacheWithCleanup[(SparkSession, String), String](graft.SessionRegistry.deleteDir)
-
   private[graft] def groupedSig(spark: SparkSession, dir: String): DataFrame = {
     // the signature TABLE is the materialized artifact every real
     // minhash deployment keeps next to the corpus (it is what makes
     // re-dedup incremental); disk per (session, corpus) like the
     // pair/cluster artifacts — survives cache clears, shared by
     // q32/q71/q75's batch twins
-    val path = sigCache.getOrElseUpdate((spark, dir), {
-      val p = s"/tmp/graft_sigs_${graft.SessionRegistry.sessionToken(spark)}_" +
-        graft.SessionRegistry.pathKey(dir)
+    val path = graft.SessionRegistry.artifact(spark, "sigs", dir) { p =>
       val sh = shingled(spark, dir)
         .select(col("doc_id"), explode(col("shingles")).as("sh"))
         .withColumn("x", pmod(xxhash64(col("sh")), lit(minhashP)))
@@ -483,9 +464,8 @@ object Dedup {
         .agg(minCols.head, minCols.tail: _*)
         .select(col("doc_id"),
           array((0 until minhashK).map(i => col(s"m$i")): _*).as("sig"))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+        .write.parquet(p)
+    }
     spark.read.parquet(path)
   }
 
@@ -684,7 +664,7 @@ object Dedup {
       .orderBy(col("vec_a"), col("vec_b"))
   }
 
-  /** Session-keyed registry for the jaccard near-dup PAIR LIST — the
+  /** Session-keyed disk artifact for the jaccard near-dup PAIR LIST — the
     * shared-artifact pattern (the reference shares computed outputs
     * between tasks through gokart task artifacts; the model
     * registries in MlOps play the same role). clusters() consumes
@@ -693,22 +673,14 @@ object Dedup {
     * re-shingles the whole corpus to re-derive edges it already
     * computed. Keyed by (session, dir): a restarted session must
     * never see a dead session's frame. */
-  private val pairCache =
-    graft.SessionRegistry
-    .cacheWithCleanup[(SparkSession, String), String](graft.SessionRegistry.deleteDir)
-
   private[graft] def jaccardPairs(spark: SparkSession, dir: String): DataFrame = {
     // DISK artifact, not an in-memory persist: the pair list is the
     // reference's gokart FILE artifact in kind, and a parquet
     // re-read (~near-dup-sized) survives spark.catalog.clearCache(),
     // so consumers never re-run the shingle-join pyramid within a
     // session even across cache clears (Bench's between-rep hygiene)
-    val path = pairCache.getOrElseUpdate((spark, dir), {
-      val p = s"/tmp/graft_pairs_${graft.SessionRegistry.sessionToken(spark)}_" +
-        graft.SessionRegistry.pathKey(dir)
-      jaccard(spark, dir).write.mode("overwrite").parquet(p)
-      p
-    })
+    val path = graft.SessionRegistry.artifact(spark, "pairs", dir)(
+      jaccard(spark, dir).write.parquet(_))
     spark.read.parquet(path)
   }
 
@@ -728,23 +700,15 @@ object Dedup {
     * executor; above it the label-propagation loop takes over. */
   val smallGraphEdges = 10000000L
 
-  /** Cluster-table registry — same shared-artifact pattern as
+  /** Cluster-table artifact — same shared-artifact pattern as
     * [[jaccardPairs]]: the cluster table is a pipeline artifact
     * consumed by multiple downstream ops (q35's rollup, q80's
     * representative selection), and it is near-dup-sized, so one
     * persisted copy per (session, corpus) is the right lifetime. */
-  private val clusterCache =
-    graft.SessionRegistry
-    .cacheWithCleanup[(SparkSession, String), String](graft.SessionRegistry.deleteDir)
-
   def clusters(spark: SparkSession, dir: String): DataFrame = {
     // same disk-artifact discipline as [[jaccardPairs]]
-    val path = clusterCache.getOrElseUpdate((spark, dir), {
-      val p = s"/tmp/graft_clusters_${graft.SessionRegistry.sessionToken(spark)}_" +
-        graft.SessionRegistry.pathKey(dir)
-      clusters(spark, dir, smallGraphEdges).write.mode("overwrite").parquet(p)
-      p
-    })
+    val path = graft.SessionRegistry.artifact(spark, "clusters", dir)(
+      clusters(spark, dir, smallGraphEdges).write.parquet(_))
     spark.read.parquet(path)
   }
 
@@ -1082,21 +1046,14 @@ object Dedup {
     * the key); posting-array pair explosion per bucket (no corpus
     * self-join); exact-Jaccard re-verify via plain equi-joins (no
     * broadcast hint — AQE decides from stats, degrades to shuffle
-    * join at 100 TB). */
-  private val pmhPairCache =
-    graft.SessionRegistry
-      .cacheWithCleanup[(SparkSession, String), String](graft.SessionRegistry.deleteDir)
-
-  /** Disk-artifact wrapper (jaccardPairs discipline): q93's verified
+    * join at 100 TB).
+    *
+    * Disk-artifact wrapper (jaccardPairs discipline): q93's verified
     * pair list is written once per (session, corpus) — it now has
     * TWO consumers (the q93 query and q158's quality report). */
   def minhashExact(spark: SparkSession, dir: String): DataFrame = {
-    val path = pmhPairCache.getOrElseUpdate((spark, dir), {
-      val p = s"/tmp/graft_pmhpairs_${graft.SessionRegistry.sessionToken(spark)}_" +
-        graft.SessionRegistry.pathKey(dir)
-      minhashExactDerive(spark, dir).write.mode("overwrite").parquet(p)
-      p
-    })
+    val path = graft.SessionRegistry.artifact(spark, "pmhpairs", dir)(
+      minhashExactDerive(spark, dir).write.parquet(_))
     spark.read.parquet(path).orderBy(col("doc_a"), col("doc_b"))
   }
 
@@ -1208,22 +1165,14 @@ object Dedup {
     * (seeded hyperplanes + float cosine threshold); the cluster
     * structure is spec-asserted against a driver union-find over the
     * same pair list. */
-  /** Session-keyed registry for the embedding near-dup pair list —
+  /** Session-keyed disk artifact for the embedding near-dup pair list —
     * q100's counterpart of [[jaccardPairs]]: componentsOf consumes
     * the edge frame twice (symmetrization), so the LSH + exact-cosine
     * pipeline must not re-execute per consumption. */
-  private val embedPairCache =
-    graft.SessionRegistry
-    .cacheWithCleanup[(SparkSession, String), String](graft.SessionRegistry.deleteDir)
-
   private[graft] def embedPairs(spark: SparkSession, dir: String): DataFrame = {
     // disk artifact like [[jaccardPairs]] — survives cache clears
-    val path = embedPairCache.getOrElseUpdate((spark, dir), {
-      val p = s"/tmp/graft_embpairs_${graft.SessionRegistry.sessionToken(spark)}_" +
-        graft.SessionRegistry.pathKey(dir)
-      embedNearDup(spark, dir).write.mode("overwrite").parquet(p)
-      p
-    })
+    val path = graft.SessionRegistry.artifact(spark, "embpairs", dir)(
+      embedNearDup(spark, dir).write.parquet(_))
     spark.read.parquet(path)
   }
 

@@ -24,20 +24,10 @@ object GraphOps {
     * artifacts also survive Bench's between-rep clearCache().
     * coalesce(1) on write: one vocab-bounded file (~16 B/node — tens
     * of MB even at a 10^7-item catalog), never 32 tiny shards. */
-  private val graphCache = graft.SessionRegistry
-    .cacheWithCleanup[(SparkSession, String, String), String](
-      graft.SessionRegistry.deleteDir)
-
   private def staged(spark: SparkSession, dir: String, name: String)(
-      run: => DataFrame): DataFrame = {
-    val path = graphCache.getOrElseUpdate((spark, dir, name), {
-      val p = s"/tmp/graft_graph_${name}_${graft.SessionRegistry.sessionToken(spark)}_" +
-        graft.SessionRegistry.pathKey(dir)
-      run.coalesce(1).write.mode("overwrite").parquet(p)
-      p
-    })
-    spark.read.parquet(path)
-  }
+      run: => DataFrame): DataFrame =
+    spark.read.parquet(graft.SessionRegistry.artifact(spark, s"graph_$name", dir)(
+      run.coalesce(1).write.parquet(_)))
 
   /** PageRank iteration count / damping / per-step rounding scale.
     * The q145 oracle SQL is GENERATED from these constants

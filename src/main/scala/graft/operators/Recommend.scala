@@ -19,26 +19,17 @@ object Recommend {
 
   private def dec(c: Column): Column = c.cast(DecimalType(18, 4))
 
-  private val ratingsExactCache = graft.SessionRegistry
-    .cacheWithCleanup[(SparkSession, String), String](graft.SessionRegistry.deleteDir)
-
   /** customer × part rating matrix (decimal-exact strengths) —
     * disk artifact per (session, corpus), like MlOps.ratings: the
     * double strengths roundtrip parquet exactly, so q56's oracle
     * parity is unaffected while reps survive cache clears. */
-  def ratingsExact(spark: SparkSession, dir: String): DataFrame = {
-    val path = ratingsExactCache.getOrElseUpdate((spark, dir), {
-      val p = s"/tmp/graft_ratings_exact_${graft.SessionRegistry.sessionToken(spark)}_" +
-        graft.SessionRegistry.pathKey(dir)
+  def ratingsExact(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(graft.SessionRegistry.artifact(spark, "ratings_exact", dir)(
       Tables.lineitem(spark, dir)
         .join(Tables.orders(spark, dir), col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_custkey").as("user"), col("l_partkey").as("item"))
         .agg(sum(dec(col("l_quantity"))).cast("double").as("rating"))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    spark.read.parquet(path)
-  }
+        .write.parquet(_)))
 
   /** Bias-baseline matrix completion: μ (global train mean) and the
     * top-20 user biases b_u = Σr/n − μ, computed in the algebraic

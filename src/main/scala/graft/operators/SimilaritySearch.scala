@@ -351,10 +351,6 @@ object SimilaritySearch {
     adcRerank(scored, emb, queries, nCandidates = 50)
   }
 
-  /** Written-index registry for [[knnIvfPqPersisted]]. */
-  private val indexDirCache = graft.SessionRegistry
-    .cacheWithCleanup[(SparkSession, String), String](graft.SessionRegistry.deleteDir)
-
   /** The PERSISTED form of the q69 index — the actual 100 TB serving
     * layout: one parquet table, one row per corpus vector (codes +
     * id), PARTITIONED BY cent_id. Probing then is partition pruning:
@@ -371,16 +367,12 @@ object SimilaritySearch {
     val emb = embWithNorm(spark, dir)
     val cents = cellArrays(coarseModel(spark, dir, emb))
     val pqCents = centroidArrays(pqCodebooks(spark, dir, emb))
-    val indexDir = indexDirCache.getOrElseUpdate((spark, dir), {
-      val out = graft.sources.Sources.stagingDir("ivfpq", dir) +
-        "_" + graft.SessionRegistry.sessionToken(spark)
+    val indexDir = graft.SessionRegistry.artifact(spark, "ivfpq", dir)(
       nearestCells(emb, cents, keep = 1)
         .select(col("vec_id"),
           graft.plans.PqExprs.codes(col("embedding"), pqCents).as("codes"),
           col("cent_id"))
-        .write.mode("overwrite").partitionBy("cent_id").parquet(out)
-      out
-    })
+        .write.partitionBy("cent_id").parquet(_))
     val queryCells = nearestCells(emb.filter(col("vec_id") < 10), cents, keep = nprobe)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("nrm").as("qnrm"), col("cent_id"))
@@ -425,12 +417,6 @@ object SimilaritySearch {
       .orderBy(col("cent_id"))
   }
 
-  /** Written-index registry for [[indexUpsert]] (separate from the
-    * q74 dir: this one is bootstrapped from the STORE split only and
-    * then mutated by the append). */
-  private val upsertDirCache = graft.SessionRegistry
-    .cacheWithCleanup[(SparkSession, String), String](graft.SessionRegistry.deleteDir)
-
   /** q102: INCREMENTAL ANN index maintenance — the steady-state form
     * of q74's serving layout. The index is bootstrapped once from the
     * STORE vectors (q86's batch/store hash split, applied to vec_id
@@ -464,11 +450,15 @@ object SimilaritySearch {
 
   /** The upserted index contents (exposed for the spec's content-
     * equality assert against [[oneShotEncoded]]). */
-  private[graft] def upsertedRows(spark: SparkSession, dir: String): DataFrame = {
-    val indexDir = upsertDirCache.getOrElseUpdate((spark, dir), {
+  private[graft] def upsertedRows(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(upsertDir(spark, dir))
+
+  /** The written [[indexUpsert]] index (separate from the q74 dir:
+    * this one is bootstrapped from the STORE split only and then
+    * mutated by the append), write-once per (session, corpus). */
+  private def upsertDir(spark: SparkSession, dir: String): String =
+    graft.SessionRegistry.artifact(spark, "ivfpq_upsert", dir) { out =>
       val emb = embWithNorm(spark, dir)
-      val out = graft.sources.Sources.stagingDir("ivfpq_upsert", dir) +
-        "_" + graft.SessionRegistry.sessionToken(spark)
       // opt r09: encode the corpus ONCE — the row-local cell+code
       // kernels (and the embeddings scan under them) previously ran
       // once per split because each write re-derived its own encode
@@ -479,15 +469,12 @@ object SimilaritySearch {
       // table is the slim (vec_id, codes, cent_id) projection —
       // persisted only until both commits land.
       val enc = encodedRows(spark, dir, emb).persist()
-      enc.filter(!isBatchVec).write
-        .mode("overwrite").partitionBy("cent_id").parquet(out)
-      enc.filter(isBatchVec).write
-        .mode("append").partitionBy("cent_id").parquet(out)
-      enc.unpersist()
-      out
-    })
-    spark.read.parquet(indexDir)
-  }
+      try {
+        enc.filter(!isBatchVec).write.partitionBy("cent_id").parquet(out)
+        enc.filter(isBatchVec).write
+          .mode("append").partitionBy("cent_id").parquet(out)
+      } finally enc.unpersist()
+    }
 
   /** What the index would be if built from the whole corpus in one
     * shot — the spec's ground truth for append integrity. */
@@ -502,12 +489,10 @@ object SimilaritySearch {
         sum(when(isBatchVec, 1L).otherwise(0L)).as("n_new"))
       .orderBy(col("cent_id"))
 
-  /** Per-(session, corpus) compacted-index registry (q114). */
-  private val compactIndexCache = graft.SessionRegistry
-    .cacheWithCleanup[(SparkSession, String), String](graft.SessionRegistry.deleteDir)
-
+  /** The q114 compacted index, if this session has written it. */
   private[graft] def compactedIndexDir(spark: SparkSession,
-      dir: String): Option[String] = compactIndexCache.get((spark, dir))
+      dir: String): Option[String] =
+    graft.SessionRegistry.builtArtifact(spark, "ivfpq_compact", dir)
 
   /** q114: ANN INDEX COMPACTION — q113's maintenance discipline for
     * the q102 serving layout: every upsert batch appends one file
@@ -519,16 +504,11 @@ object SimilaritySearch {
     * the upserted layout plus the file accounting are spec-asserted
     * (cell ids come from the seeded KMeans fit → rows-only). */
   def indexCompact(spark: SparkSession, dir: String): DataFrame = {
-    if (upsertDirCache.get((spark, dir)).isEmpty)
-      upsertedRows(spark, dir).count() // build the source layout once
-    val src = upsertDirCache.get((spark, dir)).get
-    val out = compactIndexCache.getOrElseUpdate((spark, dir), {
-      val p = src + "_compact"
+    val src = upsertDir(spark, dir)
+    val out = graft.SessionRegistry.artifact(spark, "ivfpq_compact", dir)(
       spark.read.parquet(src)
         .repartition(col("cent_id"))
-        .write.mode("overwrite").partitionBy("cent_id").parquet(p)
-      p
-    })
+        .write.partitionBy("cent_id").parquet(_))
     spark.read.parquet(out)
       .groupBy(col("cent_id"))
       .agg(

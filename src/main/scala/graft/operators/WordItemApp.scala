@@ -212,19 +212,9 @@ object WordItemApp {
     * discipline (opt r08): two oracle-gated consumers otherwise
     * re-derive the whole split+rank+join pyramid per bench rep under
     * the between-rep clearCache; the frame is test-users×K-bounded. */
-  private val recScoredCache = graft.SessionRegistry
-    .cacheWithCleanup[(SparkSession, String), String](
-      graft.SessionRegistry.deleteDir)
-
-  private[graft] def recScored(spark: SparkSession, dir: String): DataFrame = {
-    val p = recScoredCache.getOrElseUpdate((spark, dir), {
-      val path = s"/tmp/graft_rec_scored_${graft.SessionRegistry.sessionToken(spark)}_" +
-        graft.SessionRegistry.pathKey(dir)
-      recScoredBuild(spark, dir).write.mode("overwrite").parquet(path)
-      path
-    })
-    spark.read.parquet(p)
-  }
+  private[graft] def recScored(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(graft.SessionRegistry.artifact(spark, "rec_scored", dir)(
+      recScoredBuild(spark, dir).write.parquet(_)))
 
   private def recScoredBuild(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window

@@ -24,17 +24,14 @@ object Sources {
     StructField("event_type", StringType),
     StructField("value", DoubleType)))
 
-  /** Collision-free /tmp staging dir per (purpose, input dir). */
-  private[graft] def stagingDir(purpose: String, dir: String): String =
-    s"/tmp/graft_${purpose}_" + graft.SessionRegistry.pathKey(dir)
-
   def roundTrip(spark: SparkSession, dir: String): DataFrame = {
-    val src = Tables.events(spark, dir)
-      .select(col("event_id"), col("event_type"), col("value"))
-    val base = stagingDir("sources", dir)
-    src.write.mode("overwrite").option("header", "true").csv(s"$base/csv")
-    src.write.mode("overwrite").json(s"$base/json")
-    src.write.mode("overwrite").orc(s"$base/orc")
+    val base = graft.SessionRegistry.artifact(spark, "sources", dir) { out =>
+      val src = Tables.events(spark, dir)
+        .select(col("event_id"), col("event_type"), col("value"))
+      src.write.option("header", "true").csv(s"$out/csv")
+      src.write.json(s"$out/json")
+      src.write.orc(s"$out/orc")
+    }
     val fromCsv = spark.read.option("header", "true").schema(schema).csv(s"$base/csv")
     val fromJson = spark.read.schema(schema).json(s"$base/json")
       .select(col("event_id").as("jid"), col("value").as("jvalue"))
@@ -56,14 +53,13 @@ object Sources {
     * PartitionFilters — asserted in SourcesSkewSpec). This is the
     * layout that turns "scan 100 TB" into "scan the 6 TB partition".
     * The aggregate over the partitioned copy hash-matches the DuckDB
-    * oracle on the original parquet. */
-  def partitionedSink(spark: SparkSession, dir: String): DataFrame = {
-    val base = stagingDir("part", dir)
-    Tables.events(spark, dir)
-      .select(col("event_id"), col("event_type"), col("value"), col("user_id"))
-      .write.mode("overwrite").partitionBy("event_type").parquet(base)
-    partitionedRead(spark, base)
-  }
+    * oracle on the original parquet. Write-once per (session,
+    * corpus). */
+  def partitionedSink(spark: SparkSession, dir: String): DataFrame =
+    partitionedRead(spark, graft.SessionRegistry.artifact(spark, "part", dir)(
+      Tables.events(spark, dir)
+        .select(col("event_id"), col("event_type"), col("value"), col("user_id"))
+        .write.partitionBy("event_type").parquet(_)))
 
   private[graft] def partitionedRead(spark: SparkSession, base: String): DataFrame =
     spark.read.parquet(base)
@@ -83,42 +79,30 @@ object Sources {
     * plan has no Exchange. */
   def bucketedJoin(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    val db = s"graft_buckets_${math.abs(dir.hashCode)}"
-    // the catalog is per-JVM but the warehouse dir persists: drop the
-    // table AND clear any stale location before (re)writing
-    def freshWrite(name: String, writeIt: String => Unit): Unit =
-      if (!spark.catalog.tableExists(name)) {
-        spark.sql(s"DROP TABLE IF EXISTS $name")
-        val loc = new org.apache.hadoop.fs.Path(
-          spark.conf.get("spark.sql.warehouse.dir"), name)
-        val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(loc)) fs.delete(loc, true)
-        writeIt(name)
-      }
-    freshWrite(s"${db}_li", n =>
-      Tables.lineitem(spark, dir)
-        .select(col("l_orderkey"), col("l_quantity"))
-        .write.mode("overwrite")
-        .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-        .saveAsTable(n))
-    freshWrite(s"${db}_ord", n =>
-      Tables.orders(spark, dir)
-        .select(col("o_orderkey"), col("o_orderstatus"))
-        .write.mode("overwrite")
-        .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-        .saveAsTable(n))
-    val li = spark.table(s"${db}_li")
-    val ord = spark.table(s"${db}_ord")
-    li.join(ord.hint("merge"), col("l_orderkey") === col("o_orderkey"))
+    // the bucket spec lives in the catalog, so each side is an
+    // external catalog table whose files sit in a write-once
+    // artifact; the table names follow the artifact's fresh dir, so a
+    // rebuild never meets a stale table or location
+    def table(base: String, side: String): String =
+      s"graft_${new java.io.File(base).getName.replace('-', '_')}_$side"
+    val base = graft.SessionRegistry.artifact(spark, "buckets", dir) { p =>
+      def bucketed(df: DataFrame, key: String, side: String): Unit =
+        df.write.bucketBy(8, key).sortBy(key)
+          .option("path", s"$p/$side").saveAsTable(table(p, side))
+      bucketed(Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_quantity")),
+        "l_orderkey", "li")
+      bucketed(Tables.orders(spark, dir).select(col("o_orderkey"), col("o_orderstatus")),
+        "o_orderkey", "ord")
+    }
+    spark.table(table(base, "li"))
+      .join(spark.table(table(base, "ord")).hint("merge"),
+        col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("o_orderstatus"))
   }
 
   // ---- q164: versioned store + time-travel read (mini-lakehouse) --
-
-  private val versionedCache = graft.SessionRegistry
-    .cacheWithCleanup[(SparkSession, String), String](graft.SessionRegistry.deleteDir)
 
   /** The versioned document store: three deterministic commit
     * batches written as `version=K` partitions (the Delta-log
@@ -127,9 +111,7 @@ object Sources {
     * v1 = the base corpus; v2 = revisions for the %13 set, DELETES
     * for the %17 set; v3 = the deleted docs restored. */
   private[graft] def versionedStore(spark: SparkSession, dir: String): String =
-    versionedCache.getOrElseUpdate((spark, dir), {
-      val base = stagingDir("versioned", dir) +
-        "_" + graft.SessionRegistry.sessionToken(spark)
+    graft.SessionRegistry.artifact(spark, "versioned", dir) { base =>
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("text"))
       // src_version rides in the PAYLOAD too (== the partition value
@@ -152,8 +134,7 @@ object Sources {
       commit(3, docs.filter(col("doc_id") % 17 === 3)
         .select(col("doc_id"), concat(col("text"), lit(" back")).as("text"),
           lit("upsert").as("op")))
-      base
-    })
+    }
 
   /** Per-key LAST-WRITER-WINS winner among commits ≤ `version` — THE
     * shared resolution rule of every store read and of vacuum's
@@ -188,11 +169,6 @@ object Sources {
     * vacuum; reads at/after it are byte-identical. */
   private[graft] val VacuumHorizon = 2
 
-  // keyed by horizon too: a cached horizon-2 store must never be
-  // handed to a caller asking for horizon 1 (silent wrong artifact)
-  private val vacuumCache = graft.SessionRegistry
-    .cacheWithCleanup[(SparkSession, String, Int), String](graft.SessionRegistry.deleteDir)
-
   /** VACUUM / retention compaction of the versioned store — the
     * maintenance half of the q164 lakehouse block (Delta VACUUM +
     * checkpoint reduced to its queryable core): all commits ≤ the
@@ -213,10 +189,10 @@ object Sources {
     * {horizon..latest}). */
   private[graft] def vacuumedStore(spark: SparkSession, dir: String,
       horizon: Int = VacuumHorizon): String =
-    vacuumCache.getOrElseUpdate((spark, dir, horizon), {
+    // keyed by horizon too: a cached horizon-2 store must never be
+    // handed to a caller asking for horizon 1 (silent wrong artifact)
+    graft.SessionRegistry.artifact(spark, "vacuumed", (dir, horizon)) { base =>
       val src = spark.read.parquet(versionedStore(spark, dir))
-      val base = stagingDir("vacuumed", dir) +
-        s"_h${horizon}_" + graft.SessionRegistry.sessionToken(spark)
       graft.Tables.writePartitionedKeepSchema(lwwRows(src, horizon)
         .filter(col("op") === "upsert") // tombstone removal
         .select(col("doc_id"), col("text"), col("op"), col("src_version"),
@@ -227,8 +203,7 @@ object Sources {
           .select(col("doc_id"), col("text"), col("op"), col("src_version"),
             col("version")),
         "append", "version", "0", base)
-      base
-    })
+    }
 
   /** q168: the VACUUMED store read at the latest commit — proof the
     * compaction preserved every retained read: the full v3 state
@@ -315,9 +290,6 @@ object Sources {
   private[graft] val ForgetRem = 5L
   private[graft] def isForgotten: Column = col("doc_id") % ForgetMod === ForgetRem
 
-  private val erasedCache = graft.SessionRegistry
-    .cacheWithCleanup[(SparkSession, String), String](graft.SessionRegistry.deleteDir)
-
   /** ERASURE is not deletion: a q164 tombstone only masks a key from
     * later reads — time travel resurrects it, which is exactly what
     * GDPR Art. 17 forbids. Erasure REWRITES history: every commit
@@ -330,16 +302,13 @@ object Sources {
     * broadcast anti-join of a request-bounded table), partitioned
     * write; no shuffle at all. */
   private[graft] def erasedStore(spark: SparkSession, dir: String): String =
-    erasedCache.getOrElseUpdate((spark, dir), {
+    graft.SessionRegistry.artifact(spark, "erased", dir) { base =>
       val src = spark.read.parquet(versionedStore(spark, dir))
-      val base = stagingDir("erased", dir) +
-        "_" + graft.SessionRegistry.sessionToken(spark)
       graft.Tables.writePartitionedKeepSchema(src.filter(!isForgotten)
         .select(col("doc_id"), col("text"), col("op"), col("src_version"),
           col("version")),
         "append", "version", "0", base)
-      base
-    })
+    }
 
   /** q174: the ERASURE AUDIT — the compliance record an erasure job
     * must produce: per commit, how many rows were purged vs retained,

@@ -85,12 +85,8 @@ object ZOrder {
     * layout plus a time-sorted control layout written from the SAME
     * frame (the control is what a reasonable single-dimension ingest
     * would produce — the skipping spec measures z against it). */
-  private val layoutCache = graft.SessionRegistry
-    .cacheWithCleanup[(SparkSession, String), String](graft.SessionRegistry.deleteDir)
   private[graft] def layouts(spark: SparkSession, dir: String): String =
-    layoutCache.getOrElseUpdate((spark, dir), {
-      val base = s"/tmp/graft_zorder_${graft.SessionRegistry.sessionToken(spark)}_" +
-        graft.SessionRegistry.pathKey(dir)
+    graft.SessionRegistry.artifact(spark, "zorder", dir) { base =>
       val (umin, umax, tmin, tmax) = stats(spark, dir)
       val ev = eventsWithSec(spark, dir)
       ev.withColumn("zkey",
@@ -98,12 +94,11 @@ object ZOrder {
         .repartitionByRange(ZFiles, col("zkey"))
         .sortWithinPartitions("zkey")
         .drop("zkey")
-        .write.mode("overwrite").parquet(s"$base/z")
+        .write.parquet(s"$base/z")
       ev.repartitionByRange(ZFiles, col("sec"))
         .sortWithinPartitions("sec")
-        .write.mode("overwrite").parquet(s"$base/linear")
-      base
-    })
+        .write.parquet(s"$base/linear")
+    }
 
   /** The 2-D query box: the middle [25%, 50%] of each dimension
     * range, in exact integer arithmetic (both engines: truncating
@@ -130,12 +125,8 @@ object ZOrder {
     * (SourcesSkewSpec measures the merged layout). This is the
     * steady-state write side of the layout, the same role q109 plays
     * for the curated funnel. */
-  private val appendCache = graft.SessionRegistry
-    .cacheWithCleanup[(SparkSession, String), String](graft.SessionRegistry.deleteDir)
   private[graft] def appendedLayout(spark: SparkSession, dir: String): String =
-    appendCache.getOrElseUpdate((spark, dir), {
-      val base = s"/tmp/graft_zappend_${graft.SessionRegistry.sessionToken(spark)}_" +
-        graft.SessionRegistry.pathKey(dir)
+    graft.SessionRegistry.artifact(spark, "zappend", dir) { base =>
       val ev = eventsWithSec(spark, dir)
       val store = ev.filter(!eventBatchPredicate)
       val batch = ev.filter(eventBatchPredicate)
@@ -149,13 +140,12 @@ object ZOrder {
       withZ(store)
         .repartitionByRange(ZFiles, col("zkey"))
         .sortWithinPartitions("zkey").drop("zkey")
-        .write.mode("overwrite").parquet(s"$base/merged")
+        .write.parquet(s"$base/merged")
       withZ(batch)
         .repartitionByRange(math.max(ZFiles / 4, 2), col("zkey"))
         .sortWithinPartitions("zkey").drop("zkey")
         .write.mode("append").parquet(s"$base/merged")
-      base
-    })
+    }
 
   /** q134 query: q132's box aggregate answered from the APPENDED
     * layout (store + delta files = the whole events table, so the

@@ -411,7 +411,7 @@ class CorpusOpsSpec extends AnyFunSuite {
 
   test("manifest-at-ingest matches the q171 batch leaves exactly") {
     import SparkTest._
-    val staged = java.nio.file.Files.createTempDirectory("graft_manifest")
+    val staged = SparkTest.tempDir("manifest")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/documents.parquet"),
       staged.resolve("documents.parquet"))
@@ -554,7 +554,7 @@ class CorpusOpsSpec extends AnyFunSuite {
     // organics too (tpl is token-mass-bounded here, as a real
     // boilerplate source is against a crawl).
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_anchor_plant").toString
+    val d = SparkTest.tempDir("anchor_plant").toString
     val group = (("aa " * 15) + "by ")
     val organic = for (s <- 0 until 5; i <- 0 until 4) yield
       ((s * 10 + i).toLong, (group * 5).trim, "en", s"web$s")
@@ -764,7 +764,7 @@ class CorpusOpsSpec extends AnyFunSuite {
     // docs), dupfarm (4 byte-identical copies), mirror (one copy of a
     // fresh doc with a LARGER doc_id — keep-first attributes the
     // content to fresh, so mirror's unique supply is zero).
-    val d = java.nio.file.Files.createTempDirectory("graft_epoch_corpus").toString
+    val d = SparkTest.tempDir("epoch_corpus").toString
     val freshDoc = (1 to 60).map(i => f"fresh$i%03d").mkString(" ")
     val dupDoc = (1 to 60).map(i => f"dup$i%03d").mkString(" ")
     val rows = Seq(

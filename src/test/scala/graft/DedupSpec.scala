@@ -59,9 +59,9 @@ class DedupSpec extends AnyFunSuite {
               .map(_.toString).count(_.endsWith(".parquet"))
         }.toMap
     }
-    // the upsert layout path: rebuild its dir name via the registry hook
+    // both layouts' dirs come from the registry
     val compacted = SimilaritySearch.compactedIndexDir(spark, sf).get
-    val src = compacted.stripSuffix("_compact")
+    val src = SessionRegistry.builtArtifact(spark, "ivfpq_upsert", sf).get
     val (srcFiles, cpFiles) = (files(src), files(compacted))
     assert(cpFiles.keySet == srcFiles.keySet)
     cpFiles.foreach { case (cell, n) => assert(n == 1, s"cell $cell has $n files") }
@@ -406,8 +406,7 @@ class DedupSpec extends AnyFunSuite {
   private lazy val plantedDir: String = {
     // per-run temp dir (as the streaming specs do): concurrent suite
     // invocations must not race on one fixed fixture path
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_planted_fixture").toString
+    val dir = SparkTest.tempDir("planted_fixture").toString
     val emb = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding"), col("label"))
     val planted = emb.filter(col("vec_id") < 50)
@@ -653,7 +652,7 @@ class DedupSpec extends AnyFunSuite {
   test("q186 embed outliers: a planted far vector is flagged and is its label's worst") {
     // stage a corpus with one adversarial vector: all components at
     // the clamp boundary (+1), far from any real centroid
-    val staged = java.nio.file.Files.createTempDirectory("graft_emb")
+    val staged = SparkTest.tempDir("emb")
     val plantedId = 999999L
     val base = Tables.embeddings(spark, sf)
     val planted = base.select(col("vec_id"), col("embedding"), col("label"))
@@ -688,7 +687,7 @@ class DedupSpec extends AnyFunSuite {
     val c = graft.operators.CorpusOps.SampleHashC
     val plantedId = Iterator.from(1000000)
       .find(id => ((id % p) * c) % p % 10 == 3).get.toLong
-    val staged = java.nio.file.Files.createTempDirectory("graft_emb_admit")
+    val staged = SparkTest.tempDir("emb_admit")
     Tables.embeddings(spark, sf)
       .unionByName(spark.range(1).select(
         lit(plantedId).as("vec_id"),
@@ -703,7 +702,7 @@ class DedupSpec extends AnyFunSuite {
     // fail-closed: a label the store never saw is rejected with null d2
     val labelOnly = Iterator.from(2000000)
       .find(id => ((id % p) * c) % p % 10 == 3).get.toLong
-    val staged2 = java.nio.file.Files.createTempDirectory("graft_emb_admit2")
+    val staged2 = SparkTest.tempDir("emb_admit2")
     Tables.embeddings(spark, sf)
       .unionByName(spark.range(1).select(
         lit(labelOnly).as("vec_id"),
@@ -732,7 +731,7 @@ class DedupSpec extends AnyFunSuite {
     val c = graft.operators.CorpusOps.SampleHashC
     val id = Iterator.from(3000000)
       .find(id => ((id % p) * c) % p % 10 == 3).get.toLong
-    val staged = java.nio.file.Files.createTempDirectory("graft_emb_drift")
+    val staged = SparkTest.tempDir("emb_drift")
     Tables.embeddings(spark, sf)
       .unionByName(spark.range(1).select(
         lit(id).as("vec_id"),

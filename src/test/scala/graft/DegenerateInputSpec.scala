@@ -32,7 +32,7 @@ class DegenerateInputSpec extends AnyFunSuite {
     (9005L, "alpha beta")) // two tokens
 
   private lazy val plantedDir: String = {
-    val dir = "/tmp/graft_degen_spec"
+    val dir = SparkTest.tempDir("degen_spec").toString
     import spark.implicits._
     // base rows keep the shared defs on realistic text; planted rows
     // are the degenerate battery

@@ -19,7 +19,7 @@ class Doc2VecSpec extends AnyFunSuite {
     * distractors, all ≥ 40 words so every doc token clears the
     * shared fit's minCount under the D2vStride interleave. */
   private lazy val plantedDir: String = {
-    val dir = "/tmp/graft_d2v_spec"
+    val dir = SparkTest.tempDir("d2v_spec").toString
     val rnd = new scala.util.Random(42)
     val themes = Seq(
       "river stone bridge water flow bank current stream pebble shore",

@@ -28,7 +28,7 @@ class EmptyCorpusSpec extends AnyFunSuite {
   import SparkTest.spark
 
   private lazy val emptyDir: String = {
-    val dir = "/tmp/graft_empty_spec"
+    val dir = SparkTest.tempDir("empty_spec").toString
     // zero-row documents with the real schema; other tables real
     // (the sweep tool symlinks them — here only documents consumers
     // run, so writing documents alone keeps the spec fast)

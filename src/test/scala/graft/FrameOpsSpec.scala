@@ -12,6 +12,18 @@ object SparkTest {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
   val sf: String = "/root/testdata/sf0.001"
+
+  /** One per-JVM dir for every spec fixture, deleted at exit. */
+  private lazy val fixtures: java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory("graft-spec-")
+    sys.addShutdownHook(
+      org.apache.spark.sql.graftshim.LocalDirShim.deleteRecursively(d.toFile))
+    d
+  }
+
+  /** A new, empty fixture dir named by `prefix`. */
+  def tempDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(fixtures, prefix)
 }
 
 class FrameOpsSpec extends AnyFunSuite {
@@ -202,7 +214,7 @@ class FrameOpsSpec extends AnyFunSuite {
   private def plantEvents(rows: Seq[(Long, Long, Long, String, String)]): String = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_events_plant").toString
+    val d = SparkTest.tempDir("events_plant").toString
     rows.toDF("event_id", "tsec", "user_id", "event_type", "props")
       .withColumn("ts", timestamp_seconds(col("tsec"))).drop("tsec")
       .withColumn("value", lit(0.0d))

@@ -232,7 +232,7 @@ class MlStreamSpec extends AnyFunSuite {
   }
 
   test("streaming dedup counts match batch distinct after a duplicated replay") {
-    val staged = java.nio.file.Files.createTempDirectory("graft_dedup")
+    val staged = SparkTest.tempDir("dedup")
     // stage the file TWICE: the stream sees every event duplicated
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
@@ -256,7 +256,7 @@ class MlStreamSpec extends AnyFunSuite {
   }
 
   test("stateful streaming sessionization matches batch sessionize") {
-    val staged = java.nio.file.Files.createTempDirectory("graft_sess")
+    val staged = SparkTest.tempDir("sess")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       staged.resolve("events.parquet"))
@@ -279,7 +279,7 @@ class MlStreamSpec extends AnyFunSuite {
   }
 
   test("online decayed-recency state matches the q136 batch feature user-for-user") {
-    val staged = java.nio.file.Files.createTempDirectory("graft_recency")
+    val staged = SparkTest.tempDir("recency")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       staged.resolve("events.parquet"))
@@ -301,7 +301,7 @@ class MlStreamSpec extends AnyFunSuite {
   }
 
   test("anomaly-flags-at-ingest match the q163 batch rule row for row") {
-    val staged = java.nio.file.Files.createTempDirectory("graft_anomaly")
+    val staged = SparkTest.tempDir("anomaly")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       staged.resolve("events.parquet"))
@@ -321,7 +321,7 @@ class MlStreamSpec extends AnyFunSuite {
   }
 
   test("pseudonymize-at-ingest matches the q170 batch scrub row for row") {
-    val staged = java.nio.file.Files.createTempDirectory("graft_pseudo")
+    val staged = SparkTest.tempDir("pseudo")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       staged.resolve("events.parquet"))
@@ -343,7 +343,7 @@ class MlStreamSpec extends AnyFunSuite {
   }
 
   test("quarantine-at-ingest verdicts match the q161 batch rule row for row") {
-    val staged = java.nio.file.Files.createTempDirectory("graft_quarantine")
+    val staged = SparkTest.tempDir("quarantine")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       staged.resolve("events.parquet"))
@@ -368,7 +368,7 @@ class MlStreamSpec extends AnyFunSuite {
   }
 
   test("pii-scrub-at-ingest matches the q182 batch projection doc for doc") {
-    val staged = java.nio.file.Files.createTempDirectory("graft_pii")
+    val staged = SparkTest.tempDir("pii")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/documents.parquet"),
       staged.resolve("documents.parquet"))
@@ -392,7 +392,7 @@ class MlStreamSpec extends AnyFunSuite {
   }
 
   test("embed-admit-at-ingest matches the q190 batch projection vector for vector") {
-    val staged = java.nio.file.Files.createTempDirectory("graft_embadm")
+    val staged = SparkTest.tempDir("embadm")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/embeddings.parquet"),
       staged.resolve("embeddings.parquet"))
@@ -413,7 +413,7 @@ class MlStreamSpec extends AnyFunSuite {
   }
 
   test("leak-gate-at-ingest matches the q218 batch projection vector for vector") {
-    val staged = java.nio.file.Files.createTempDirectory("graft_leakgate")
+    val staged = SparkTest.tempDir("leakgate")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/embeddings.parquet"),
       staged.resolve("embeddings.parquet"))
@@ -444,7 +444,7 @@ class MlStreamSpec extends AnyFunSuite {
 
   test("streaming Misra-Gries: lower-bound invariant at small k, exact at large k") {
     import org.apache.spark.sql.functions._
-    val staged = java.nio.file.Files.createTempDirectory("graft_mg")
+    val staged = SparkTest.tempDir("mg")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/documents.parquet"),
       staged.resolve("documents.parquet"))
@@ -478,7 +478,7 @@ class MlStreamSpec extends AnyFunSuite {
   }
 
   test("ingest token-budget decisions match the q151 batch rule doc for doc") {
-    val staged = java.nio.file.Files.createTempDirectory("graft_budget")
+    val staged = SparkTest.tempDir("budget")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/documents.parquet"),
       staged.resolve("documents.parquet"))
@@ -499,7 +499,7 @@ class MlStreamSpec extends AnyFunSuite {
   }
 
   test("streaming minhash candidate pairs match the batch twin on a replayed batch") {
-    val staged = java.nio.file.Files.createTempDirectory("graft_minhash_stream")
+    val staged = SparkTest.tempDir("minhash_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/documents.parquet"),
       staged.resolve("documents.parquet"))
@@ -538,7 +538,7 @@ class MlStreamSpec extends AnyFunSuite {
   }
 
   test("sampling-at-ingest equals the batch mix filter doc-for-doc") {
-    val staged = java.nio.file.Files.createTempDirectory("graft_mix_stream")
+    val staged = SparkTest.tempDir("mix_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/documents.parquet"),
       staged.resolve("documents.parquet"))
@@ -560,7 +560,7 @@ class MlStreamSpec extends AnyFunSuite {
   }
 
   test("streaming quality flags equal the batch projection doc-for-doc") {
-    val staged = java.nio.file.Files.createTempDirectory("graft_quality_stream")
+    val staged = SparkTest.tempDir("quality_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/documents.parquet"),
       staged.resolve("documents.parquet"))
@@ -580,7 +580,7 @@ class MlStreamSpec extends AnyFunSuite {
   }
 
   test("streaming cdc chunks equal the batch chunk frame chunk-for-chunk") {
-    val staged = java.nio.file.Files.createTempDirectory("graft_cdc_stream")
+    val staged = SparkTest.tempDir("cdc_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/documents.parquet"),
       staged.resolve("documents.parquet"))
@@ -616,7 +616,7 @@ class MlStreamSpec extends AnyFunSuite {
   }
 
   test("stream-static verified dedup matches the batch twin's pair set") {
-    val staged = java.nio.file.Files.createTempDirectory("graft_minhash_verified")
+    val staged = SparkTest.tempDir("minhash_verified")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/documents.parquet"),
       staged.resolve("documents.parquet"))
@@ -642,7 +642,7 @@ class MlStreamSpec extends AnyFunSuite {
   }
 
   test("streaming semantic (embed-LSH) candidates match the batch twin on a replayed batch") {
-    val staged = java.nio.file.Files.createTempDirectory("graft_semantic_stream")
+    val staged = SparkTest.tempDir("semantic_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/embeddings.parquet"),
       staged.resolve("embeddings.parquet"))
@@ -668,7 +668,7 @@ class MlStreamSpec extends AnyFunSuite {
   }
 
   test("streaming frame-fingerprint candidates match the batch twin on a replayed batch") {
-    val staged = java.nio.file.Files.createTempDirectory("graft_frame_stream")
+    val staged = SparkTest.tempDir("frame_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/documents.parquet"),
       staged.resolve("documents.parquet"))
@@ -692,7 +692,7 @@ class MlStreamSpec extends AnyFunSuite {
   }
 
   test("streaming contamination hits roll up to the batch flag table") {
-    val staged = java.nio.file.Files.createTempDirectory("graft_contam_stream")
+    val staged = SparkTest.tempDir("contam_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/documents.parquet"),
       staged.resolve("documents.parquet"))
@@ -716,7 +716,7 @@ class MlStreamSpec extends AnyFunSuite {
 
   test("streaming span-cover starts equal q123's batch cover set") {
     import org.apache.spark.sql.functions._
-    val staged = java.nio.file.Files.createTempDirectory("graft_span_stream")
+    val staged = SparkTest.tempDir("span_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/documents.parquet"),
       staged.resolve("documents.parquet"))
@@ -750,7 +750,7 @@ class MlStreamSpec extends AnyFunSuite {
 
   test("streaming perplexity scores roll up to q96's batch admission scores") {
     import org.apache.spark.sql.functions._
-    val staged = java.nio.file.Files.createTempDirectory("graft_ccnet_stream")
+    val staged = SparkTest.tempDir("ccnet_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/documents.parquet"),
       staged.resolve("documents.parquet"))
@@ -790,7 +790,7 @@ class MlStreamSpec extends AnyFunSuite {
         (0 until 10).map(i => ((200 + i).toLong, 50000L + i, 2L)) ++
         (0 until 30).map(i => ((300 + i).toLong, 900000L + i * 60L, 3L)) ++
         Seq((400L, 500L, 4L))
-    val staged = java.nio.file.Files.createTempDirectory("graft_botgate").toString
+    val staged = SparkTest.tempDir("botgate").toString
     rows.toDF("event_id", "tsec", "user_id")
       .withColumn("ts", timestamp_seconds(col("tsec"))).drop("tsec")
       .withColumn("event_type", lit("view"))
@@ -816,7 +816,7 @@ class MlStreamSpec extends AnyFunSuite {
   }
 
   test("flatMapGroupsWithState milestone alerts match the batch running-sum twin") {
-    val staged = java.nio.file.Files.createTempDirectory("graft_milestone")
+    val staged = SparkTest.tempDir("milestone")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       staged.resolve("events.parquet"))
@@ -850,13 +850,13 @@ class MlStreamSpec extends AnyFunSuite {
     val mid = mn + (mx - mn) / 2
     def stageInto(df: org.apache.spark.sql.DataFrame, staged: java.nio.file.Path,
         name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ms_part")
+      val tmp = SparkTest.tempDir("ms_part")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp).toArray.map(_.toString)
         .find(_.endsWith(".parquet")).get
       java.nio.file.Files.copy(java.nio.file.Paths.get(part), staged.resolve(name))
     }
-    val staged = java.nio.file.Files.createTempDirectory("graft_milestone_ooo")
+    val staged = SparkTest.tempDir("milestone_ooo")
     // the LATE half of the timeline arrives FIRST (its own batch),
     // then the early half, then a far-future sentinel whose watermark
     // advance flushes the buffers via the event-time timeout path
@@ -898,12 +898,12 @@ class MlStreamSpec extends AnyFunSuite {
   }
 
   test("writeStream parquet file sink: exactly-once roundtrip equals the batch filter") {
-    val staged = java.nio.file.Files.createTempDirectory("graft_sink_src")
+    val staged = SparkTest.tempDir("sink_src")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       staged.resolve("events.parquet"))
-    val outDir = java.nio.file.Files.createTempDirectory("graft_sink_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sink_ckpt").toString
+    val outDir = SparkTest.tempDir("sink_out").toString
+    val ckpt = SparkTest.tempDir("sink_ckpt").toString
     val q = StreamOps.clickStream(spark, staged.toString)
       .writeStream.outputMode("append")
       .format("parquet")
@@ -933,7 +933,7 @@ class MlStreamSpec extends AnyFunSuite {
     val batch = graft.operators.FrameOps.hoppingWindow(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(2), math.round(r.getDouble(4) * 10000)))
       .toSet
-    val staged = java.nio.file.Files.createTempDirectory("graft_hop_stream")
+    val staged = SparkTest.tempDir("hop_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       staged.resolve("events.parquet"))
@@ -957,7 +957,7 @@ class MlStreamSpec extends AnyFunSuite {
         math.round(r.getDouble(3) * 10000)))
       .toSet
     // FileStreamSource needs a directory: stage the single parquet file
-    val staged = java.nio.file.Files.createTempDirectory("graft_stream")
+    val staged = SparkTest.tempDir("stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       staged.resolve("events.parquet"))

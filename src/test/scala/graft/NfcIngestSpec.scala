@@ -36,7 +36,7 @@ class NfcIngestSpec extends AnyFunSuite {
   }
 
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_nfc_corpus").toString
+    val d = SparkTest.tempDir("nfc_corpus").toString
     val rows = Seq(
       (1L, body(composed), "fr", "web"),
       (2L, body(decomposed), "fr", "web"),

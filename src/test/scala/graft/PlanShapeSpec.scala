@@ -11,6 +11,10 @@ import graft.operators.{Dedup, FrameOps, SimilaritySearch, TextOps}
 class PlanShapeSpec extends AnyFunSuite {
   import SparkTest._
 
+  /** Where a disk artifact whose name starts with `prefix` lives. */
+  private def artifactPath(prefix: String): String =
+    s"${SessionRegistry.root(spark.sparkContext).getPath}/$prefix"
+
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
@@ -187,7 +191,7 @@ class PlanShapeSpec extends AnyFunSuite {
     val buildSubs = broadcastBuildSides(p)
     assert(buildSubs.nonEmpty, p)
     buildSubs.foreach { h =>
-      assert(h.contains("HashAggregate") || h.contains("graft_contam_hits"),
+      assert(h.contains("HashAggregate") || h.contains(artifactPath("contam_hits-")),
         s"broadcast build side is neither a bounded aggregate nor the hit artifact: $h")
       // the WHOLE build subtree (indent-bounded) must not carry the
       // corpus gram stream
@@ -298,7 +302,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // corpus) per-user rollup artifact (and three ranged quintile
     // artifacts) at first call; the served plan joins only those
     // |users|-slim parquet frames — the event log never re-enters
-    assert(p.contains("graft_rfm_"), p)
+    assert(p.contains(artifactPath("rfm_")), p)
     assert(!p.contains("events.parquet"), p)
   }
 
@@ -648,7 +652,7 @@ class PlanShapeSpec extends AnyFunSuite {
   test("q188 lsh calibration: rides the disk artifacts, no corpus scan") {
     val p = plan(Dedup.lshCalibration(spark, sf))
     assert(!p.contains("documents.parquet"), p)
-    assert(p.contains("graft_"), p) // the staged pair artifacts
+    assert(p.contains(artifactPath("")), p) // the staged pair artifacts
   }
 
   test("q187 signal corr: sample via TopKByKey (no rank window), signals row-local") {

@@ -151,18 +151,17 @@ class PropertySpec extends AnyFunSuite {
     assert(SessionRegistry.isHooked(spark.sparkContext))
     assert(SessionRegistry.liveKeyCount(spark) > 0)
     // the pair artifact is on DISK and must die with its entry
-    def pairDirs = java.nio.file.Files.list(java.nio.file.Paths.get("/tmp"))
-      .toArray.map(_.toString)
-      .filter(_.startsWith(
-        s"/tmp/graft_pairs_${spark.sparkContext.applicationId}_"))
-    assert(pairDirs.nonEmpty, "pair disk artifact missing before evict")
+    val pairDir = java.nio.file.Paths.get(
+      SessionRegistry.builtArtifact(spark, "pairs", sf).get)
+    assert(java.nio.file.Files.isDirectory(pairDir), "pair disk artifact missing before evict")
     // drive the listener body directly — stopping the suite's shared
     // context would kill every other test; the listener is one line
     // that calls exactly this
     SessionRegistry.evictContext(spark.sparkContext)
     assert(SessionRegistry.liveKeyCount(spark) == 0,
       "stopped context's registry entries must be gone")
-    assert(pairDirs.isEmpty, "evicted context's disk artifacts must be deleted")
+    assert(!java.nio.file.Files.exists(pairDir),
+      "evicted context's disk artifacts must be deleted")
     // a live session re-populates (and re-hooks) on next access
     operators.Dedup.jaccardPairs(spark, sf).count()
     assert(SessionRegistry.liveKeyCount(spark) > 0)

@@ -103,7 +103,7 @@ class RecModelsSpec extends AnyFunSuite {
     val m = new LogisticRegression().setMaxIter(2).fit(data)
     val es = new graft.ml.EarlyStopping[LogisticRegressionModel](
       tryCount = 2, initialLearningRate = 1.0, decaySpeed = 2.0,
-      threshold = 0.001, savePath = Some("/tmp/graft_es_unit"),
+      threshold = 0.001, savePath = Some(SparkTest.tempDir("es_unit").toString),
       reader = LogisticRegressionModel.load)
     assert(!es.doesStop(10.0, m))          // improve: checkpoint
     assert(!es.doesStop(10.0, m))          // plateau 1: decay, keep going

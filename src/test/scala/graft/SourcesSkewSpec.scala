@@ -29,7 +29,7 @@ class SourcesSkewSpec extends AnyFunSuite {
   test("partitioned sink: filtered read prunes to matching partitions") {
     import org.apache.spark.sql.functions._
     Sources.partitionedSink(spark, sf) // the write happens eagerly here
-    val base = Sources.stagingDir("part", sf)
+    val base = SessionRegistry.builtArtifact(spark, "part", sf).get
     // assert pruning on the PRODUCT read path, not a hand-built query
     val product = Sources.partitionedRead(spark, base)
     val plan = product.queryExecution.executedPlan.toString
@@ -40,7 +40,7 @@ class SourcesSkewSpec extends AnyFunSuite {
 
   test("stream-stream click->purchase join matches the batch join") {
     import org.apache.spark.sql.functions._
-    val staged = java.nio.file.Files.createTempDirectory("graft_ssj")
+    val staged = SparkTest.tempDir("ssj")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       staged.resolve("events.parquet"))
@@ -239,7 +239,7 @@ class SourcesSkewSpec extends AnyFunSuite {
   }
 
   test("streaming interval matcher equals the q133 batch rule event-for-event") {
-    val staged = java.nio.file.Files.createTempDirectory("graft_ivm")
+    val staged = SparkTest.tempDir("ivm")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       staged.resolve("events.parquet"))
@@ -328,7 +328,7 @@ class SourcesSkewSpec extends AnyFunSuite {
 
   test("suppression-at-ingest: forgotten keys never re-enter, stream == batch") {
     import org.apache.spark.sql.functions._
-    val staged = java.nio.file.Files.createTempDirectory("graft_suppress_stream")
+    val staged = SparkTest.tempDir("suppress_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/documents.parquet"),
       staged.resolve("documents.parquet"))
@@ -398,7 +398,7 @@ class SourcesSkewSpec extends AnyFunSuite {
     * properties asserted. The spec fails if the salting fallback is
     * removed or degenerates to the plain key join. */
   private lazy val plantedSkewDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_skew_corpus").toString
+    val d = SparkTest.tempDir("skew_corpus").toString
     import spark.implicits._
     val hot = (1 to 3000).map(i => (i.toLong, 7L,
       if (i % 2 == 0) "click" else "view", i.toLong))

@@ -163,7 +163,7 @@ class TextOpsSpec extends AnyFunSuite {
     // base64-ish 24-char tokens sits at sup-distance ~1.0 from the
     // short-word blend, far over KsTau
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_ks_plant").toString
+    val d = SparkTest.tempDir("ks_plant").toString
     // the planted source must be token-mass-BOUNDED (2.4% of the
     // blend): a dump big enough to own the blend drags every other
     // source's sup-distance up with it — the same caveat the q198
@@ -223,7 +223,7 @@ class TextOpsSpec extends AnyFunSuite {
   }
 
   test("streaming lang flags equal the batch projection doc-for-doc") {
-    val staged = java.nio.file.Files.createTempDirectory("graft_lang_stream")
+    val staged = SparkTest.tempDir("lang_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/documents.parquet"),
       staged.resolve("documents.parquet"))
@@ -246,7 +246,7 @@ class TextOpsSpec extends AnyFunSuite {
   test("streaming repetition flags equal the batch projection doc-for-doc") {
     // q228's twin: the battery is one row-local kernel + flag
     // columns, so the stream and batch verdicts must be identical
-    val staged = java.nio.file.Files.createTempDirectory("graft_rep_stream")
+    val staged = SparkTest.tempDir("rep_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/documents.parquet"),
       staged.resolve("documents.parquet"))
@@ -311,7 +311,7 @@ class TextOpsSpec extends AnyFunSuite {
     // FAIL branches are planted here — one doc per failure mode,
     // each its own source so the rollup row pins its flags
     import spark.implicits._
-    val dir = "/tmp/graft_rep_spec"
+    val dir = SparkTest.tempDir("rep_spec").toString
     val docs = Seq(
       (1L, "the quick brown fox jumps over a lazy dog near this river bank today", "clean"),
       (2L, Seq.fill(6)("repeat me").mkString("\n"), "dupline"),

@@ -13,9 +13,7 @@ can split the engines).
 Usage:
     python3 tools/make_degenerate.py /root/testdata/sf0.001 /tmp/graft_degen_sf
 then:
-    SPARK_GRAFT_CPUS=8 sbt -batch "runMain graft.VerifyOne /tmp/graft_degen_sf \
-        /tmp/degen_out q20_token_stats q21_quality_score q23_dictionary \
-        q24_tfidf q72_gopher_rules q79_bigram_lm q95_ccnet_buckets q228_repetition_battery"
+    SPARK_GRAFT_CPUS=8 sbt -batch "runMain graft.Verify /tmp/graft_degen_sf /tmp/degen_out"
     python3 tools/check_oracle.py /tmp/degen_out /tmp/graft_degen_sf
 """
 import os
