@@ -2,11 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Library entry point: a SparkSession pre-configured the way graft's
-  * operators expect — UTC (oracle/timestamp determinism), AQE on
-  * (runtime coalesce + skew-join handling), shuffle parallelism sized
-  * to the cluster rather than Spark's 200 default, and graft's native
-  * SQL functions registered.
+/** The one place a SparkSession is built: pre-configured the way
+  * graft's operators expect — UTC (oracle/timestamp determinism), AQE
+  * on (runtime coalesce + skew-join handling), shuffle parallelism
+  * sized to the cluster rather than Spark's 200 default, and graft's
+  * native SQL functions registered. Every session setting an operator
+  * relies on is set here, never by the operator mid-call.
   *
   * On a real cluster, `shufflePartitions` should be ~2-3× total
   * executor cores, and `spark.sql.files.maxPartitionBytes` left at
@@ -26,12 +27,14 @@ object GraftSession {
       // OPTIMIZATION_r08.md)
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      // events.ts ships as TIMESTAMP(NANOS) in some testdata
+      // generations, which the vectorized reader rejects; read it as
+      // raw longs (Tables.events / StreamOps normalize to micros)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // keep the bucketed scan for bucketed tables even when Spark
+      // judges it useless: Sources.bucketedJoin's shuffle-free
+      // sort-merge join depends on it
+      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
-
-  def local(): SparkSession = {
-    val s = builder().getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 }

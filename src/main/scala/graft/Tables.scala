@@ -20,15 +20,14 @@ object Tables {
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
   /** events.ts has shipped as parquet TIMESTAMP(NANOS) in some
     * testdata generations (which Spark's vectorized reader rejects —
-    * read as raw long via the legacy conf, then integer-div to micros)
-    * and as un-adjusted TIMESTAMP(MICROS) in others (inferred as
-    * TIMESTAMP_NTZ). Branch on the type the reader actually infers and
-    * normalize BOTH to TimestampType: the session is pinned to UTC
-    * (GraftSession/Verify/Bench), so NTZ→TZ is the identity on the
+    * read as raw long via GraftSession's legacy conf, then integer-div
+    * to micros) and as un-adjusted TIMESTAMP(MICROS) in others
+    * (inferred as TIMESTAMP_NTZ). Branch on the type the reader
+    * actually infers and normalize BOTH to TimestampType: the session
+    * is pinned to UTC (GraftSession), so NTZ→TZ is the identity on the
     * epoch micros and every downstream consumer (window ops, oracles,
     * Row.getTimestamp) sees one type regardless of encoding. */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = load(spark, dir, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

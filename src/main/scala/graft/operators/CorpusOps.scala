@@ -84,7 +84,7 @@ object CorpusOps {
     * DISK artifact per (session, corpus, cfg) — the round-6/lever-(kk)
     * discipline (opt r08): four oracle-gated consumers otherwise each
     * re-run the corpus gram-explode + broadcast join + rollup per
-    * bench rep; the hit table is hit-mass-bounded (docs with ≥1 eval
+    * call; the hit table is hit-mass-bounded (docs with ≥1 eval
     * collision), not corpus-sized. */
   private[graft] def contamHits(spark: SparkSession, dir: String,
       cfg: PipelineConfig = PipelineConfig.default): DataFrame =
@@ -784,7 +784,7 @@ object CorpusOps {
     * round-6 disk-artifact rule): FOUR oracle-gated queries consume
     * the same per-doc LM score (q79's rollup, q95/q178's buckets,
     * q215's labels, q217's audit), and each re-derived the whole
-    * bigram pyramid per rep under Bench's between-rep clearCache.
+    * bigram pyramid per call once a clearCache() dropped it.
     * The artifact is the slim (doc_id, source, doc_nll) projection —
     * |docs| rows × 3 columns, the q91 corpus-parquet precedent; a
     * re-read is scan-cheap and survives cache clears. In kind this
@@ -869,8 +869,8 @@ object CorpusOps {
     *   Scale shape: one slim per-doc flag frame, materialized as a
     *   DISK artifact per (session, corpus) — it has THREE consumers
     *   (q85's rollup, q91's sink, q109's append bootstrap), so an
-    *   in-memory persist would be silently dropped by Bench's
-    *   between-rep cache clears and every consumer would re-derive
+    *   in-memory persist would be silently dropped by a caller's
+    *   clearCache() and every consumer would re-derive
     *   the full dedup/cluster/contamination pyramid (the round-6
     *   lever, CLAUDE.md); the dedup/cluster/contamination inputs are
     *   the same bounded artifacts the standalone queries use (digest

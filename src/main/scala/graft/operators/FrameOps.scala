@@ -228,7 +228,7 @@ object FrameOps {
     * executable): the per-user rollup is written once (three rankings
     * + the base projection consume it), and each ranked frame is
     * written so its offsets action and final plan see the same frozen
-    * partition assignment. Parquet, not persist — Bench's between-rep
+    * partition assignment. Parquet, not persist — a caller's
     * clearCache() unpersists registry-held frames (the round-6
     * disk-artifact rule), and a clearCache between the offsets action
     * and the final plan must not re-draw range boundaries.
@@ -741,7 +741,7 @@ object FrameOps {
   /** Session-keyed registry for q98's range-partitioned frame: the
     * offsets action and the final plan must see the SAME physical
     * partitioning, so the slim 3-column frame is persisted — and
-    * registered so repeated calls (Bench reps, specs) reuse ONE
+    * registered so repeated calls (benchmark loops, specs) reuse ONE
     * cached copy instead of pinning a new one per invocation. */
   private val rangedCache =
     graft.SessionRegistry.cache[(SparkSession, String), DataFrame]()
@@ -1089,7 +1089,7 @@ object FrameOps {
     * (shared-rule discipline: the thresholds cannot drift). Output is
     * |types|-bounded AND deterministic → served as collected rows per
     * (session, corpus) (lever (j)): the two rank passes over the log
-    * run once, not once per consumer per bench rep — this is also
+    * run once, not once per consumer per call — this is also
     * exactly the published model artifact the ingest stream scores
     * against in production. */
   private val madCache = graft.SessionRegistry.cache[(SparkSession, String),

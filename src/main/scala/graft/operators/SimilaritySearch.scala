@@ -102,7 +102,7 @@ object SimilaritySearch {
 
   /** Per-dim [min, max] corpus bounds for SQ8 (dim-sized driver
     * scalar, one Summarizer pass; registry-cached like the coarse
-    * quantizer so bench reps and downstream composition reuse the
+    * quantizer so repeated calls and downstream composition reuse the
     * trained bounds). */
   private val sqBoundsCache = graft.SessionRegistry
     .cache[(SparkSession, String), (Array[Double], Array[Double])]()

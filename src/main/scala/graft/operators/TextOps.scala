@@ -425,8 +425,8 @@ object TextOps {
   /** Session-keyed DISK artifact for q23's range-partitioned vocab
     * (the q98 pattern): the offsets action and the final plan must
     * see the SAME frozen partition assignment, so the slim (term, df,
-    * pid) frame is parquet — a bare persist dies under Bench's
-    * between-rep clearCache (the round-6 disk-artifact rule) and
+    * pid) frame is parquet — a bare persist dies under a caller's
+    * clearCache() (the round-6 disk-artifact rule) and
     * every consumer would re-draw range boundaries.
     *
     * TrainDictionary (train/train_dictionary.py:9, gensim

@@ -210,8 +210,8 @@ object WordItemApp {
     *
     * DISK artifact per (session, corpus) — the round-6/lever-(kk)
     * discipline (opt r08): two oracle-gated consumers otherwise
-    * re-derive the whole split+rank+join pyramid per bench rep under
-    * the between-rep clearCache; the frame is test-users×K-bounded. */
+    * re-derive the whole split+rank+join pyramid per call once a
+    * clearCache() drops it; the frame is test-users×K-bounded. */
   private[graft] def recScored(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(graft.SessionRegistry.artifact(spark, "rec_scored", dir)(
       recScoredBuild(spark, dir).write.parquet(_)))

@@ -76,9 +76,8 @@ object Sources {
     * specs Spark plans a shuffle-FREE sort-merge join. This is the
     * "pre-partition the 100 TB fact table once, join it many times"
     * pattern. Returns the joined aggregate; SourcesSpec asserts the
-    * plan has no Exchange. */
+    * plan has no Exchange (GraftSession keeps the bucketed scan on). */
   def bucketedJoin(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     // the bucket spec lives in the catalog, so each side is an
     // external catalog table whose files sit in a write-once
     // artifact; the table names follow the artifact's fresh dir, so a

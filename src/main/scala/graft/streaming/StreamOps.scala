@@ -29,13 +29,13 @@ object StreamOps {
 
   /** Shared events stream source: explicit schema (FileStreamSource
     * can't infer). Testdata generations have shipped ts as
-    * TIMESTAMP(NANOS) (read as long via the legacy conf, ÷1000 to µs)
-    * or as plain TIMESTAMP(MICROS) — sniff the type with a one-file
-    * batch read (footer-only driver work) and declare the matching
-    * stream schema so both encodings produce identical timestamps.
+    * TIMESTAMP(NANOS) (read as long via GraftSession's legacy conf,
+    * ÷1000 to µs) or as plain TIMESTAMP(MICROS) — sniff the type with
+    * a one-file batch read (footer-only driver work) and declare the
+    * matching stream schema so both encodings produce identical
+    * timestamps.
     * Every streaming op derives from this one definition. */
   private def streamEvents(spark: SparkSession, eventsDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val fileTsType = spark.read.parquet(eventsDir).schema("ts").dataType
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", fileTsType),

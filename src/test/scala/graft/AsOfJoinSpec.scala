@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,15 +8,7 @@ import graft.plans.AsOfJoin
 
 class AsOfJoinSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-asof-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new GraftExtensions)
-    .getOrCreate()
-  val sf: String = "/root/testdata/sf0.001"
+  import SparkTest._
 
   private def sides = {
     val ev = Tables.events(spark, sf)

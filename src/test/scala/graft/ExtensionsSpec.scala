@@ -1,30 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 class ExtensionsSpec extends AnyFunSuite {
 
-  // separate session: extensions are wired at session BUILD time, and
-  // getOrCreate would silently reuse another suite's extension-less
-  // default session — detach it first (the SparkContext is shared
-  // either way), then restore so later suites are unaffected
-  lazy val spark: SparkSession = {
-    val prevDefault = SparkSession.getDefaultSession
-    val prevActive = SparkSession.getActiveSession
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    prevDefault.foreach(SparkSession.setDefaultSession)
-    prevActive.foreach(SparkSession.setActiveSession)
-    s
-  }
+  import SparkTest.spark
 
   test("native expressions are callable from SQL") {
     val r = spark.sql(

@@ -837,7 +837,6 @@ class MlStreamSpec extends AnyFunSuite {
 
   test("watermark-buffered milestones equal batch under out-of-order multi-batch arrival") {
     import org.apache.spark.sql.functions._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$sf/events.parquet")
     // ts ships as NANOS-as-long in some testdata generations and as
     // TIMESTAMP(MICROS) in others; do the split arithmetic in the

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,14 +11,7 @@ import graft.ml.MlOps
   */
 class RecModelsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-recmodels-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  val sf: String = "/root/testdata/sf0.001"
+  import SparkTest._
 
   test("mf item similarity: top-k shape, cosine bounds, matches re-scored factors") {
     val rows = MlOps.mfItemSimilarity(spark, sf).collect()

@@ -115,9 +115,8 @@ class SourcesSkewSpec extends AnyFunSuite {
     ns.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "2KB")
     ns.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2KB")
     ns.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    // pin explicitly: suite order can leave a different global value
-    // (ExtensionsSpec's builder uses 2), and 2 reduce partitions
-    // changes the median-based skew-detection geometry
+    // pin explicitly: the median-based skew-detection geometry below
+    // is tuned for 4 reduce partitions
     ns.conf.set("spark.sql.shuffle.partitions", "4")
     // downstream must NOT require the join's hash partitioning (a
     // groupBy(k) right after would make AQE refuse to split the
