@@ -35,6 +35,16 @@ object GraftSession {
       // judges it useless: Sources.bucketedJoin's shuffle-free
       // sort-merge join depends on it
       .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
+      // compiled generated classes are kept in an LRU cache of this
+      // many entries (Spark's default 100). One block of the serve
+      // requests (q74, q116, q89, q142, q155, q11) uses about 127
+      // distinct classes and one curation pass about 200, so at 100
+      // every warm call recompiled all of its classes (~26 ms of Janino
+      // each, then the JIT again). 1000 holds that working set with
+      // headroom; a retained class costs about 25 KB of heap. The conf
+      // is static: CodeGenerator reads it once per JVM, when its first
+      // class compiles, so only the JVM's first session can set it.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
 }

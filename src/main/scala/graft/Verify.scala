@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.metrics.source.CodegenMetrics
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -10,6 +11,10 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val queries = SparkEntry.queries
+    // one Janino compile per generated class not found in Spark's codegen
+    // cache: a lost cache setting or a per-call literal shows up here
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val compiledBefore = compiles.getCount
     val failed = queries.toSeq.flatMap { case (name, fn) =>
       // a query that throws before its write must leave no output, not
       // the previous run's, for the oracle compare to pick up
@@ -24,6 +29,7 @@ object Verify {
       }
     }
     System.err.println(s"[verify] failed: ${failed.size} of ${queries.size}" +
+      s" (${compiles.getCount - compiledBefore} generated classes compiled)" +
       failed.sorted.map(" " + _).mkString)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -30,13 +30,13 @@ object StreamOps {
   /** Shared events stream source: explicit schema (FileStreamSource
     * can't infer). Testdata generations have shipped ts as
     * TIMESTAMP(NANOS) (read as long via GraftSession's legacy conf,
-    * ÷1000 to µs) or as plain TIMESTAMP(MICROS) — sniff the type with
-    * a one-file batch read (footer-only driver work) and declare the
-    * matching stream schema so both encodings produce identical
-    * timestamps.
+    * ÷1000 to µs) or as plain TIMESTAMP(MICROS) — sniff the type from
+    * the files' schema (`Tables.schemaOf`, inferred once per file
+    * identity) and declare the matching stream schema so both
+    * encodings produce identical timestamps.
     * Every streaming op derives from this one definition. */
   private def streamEvents(spark: SparkSession, eventsDir: String): DataFrame = {
-    val fileTsType = spark.read.parquet(eventsDir).schema("ts").dataType
+    val fileTsType = Tables.schemaOf(spark, eventsDir)("ts").dataType
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", fileTsType),
       StructField("user_id", LongType), StructField("event_type", StringType),
