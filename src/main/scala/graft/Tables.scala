@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -24,13 +24,21 @@ object Tables {
     * for a read given its schema); every source-table read paid it.
     * The identity is each file's path, length and mtime, so a
     * rewritten table gets a fresh schema: `events` tells NANOS from
-    * MICROS timestamps by it. */
+    * MICROS timestamps by it.
+    *
+    * The identity comes from a `listStatus` walk, not `listFiles`:
+    * `listFiles` builds a `LocatedFileStatus`, whose constructor asks
+    * for the permission, and the local file system without libhadoop
+    * answers that with an `ls -ld` subprocess per file (Spark's
+    * `HadoopFSUtils` avoids the constructor for the same reason). */
   private[graft] def schemaOf(spark: SparkSession, path: String): StructType = {
     val p = new Path(path)
-    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
-    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toVector
-    schemas.getOrElseUpdate((spark, path, files), spark.read.parquet(path).schema)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def files(q: Path): Seq[FileStatus] =
+      fs.listStatus(q).toSeq.flatMap(s => if (s.isDirectory) files(s.getPath) else Seq(s))
+    val identity = files(p)
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted.toVector
+    schemas.getOrElseUpdate((spark, path, identity), spark.read.parquet(path).schema)
   }
 
   def region(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "region")

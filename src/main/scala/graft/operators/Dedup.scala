@@ -491,10 +491,8 @@ object Dedup {
       .agg(sort_array(collect_list(col("doc_id"))).as("docs"))
       .filter(size(col("docs")) <= defaultMaxDf)
     val cand = buckets
-      .select(explode(flatten(transform(col("docs"), (a, i) =>
-        transform(slice(col("docs"), i + 2, size(col("docs"))),
-          b => struct(a.as("doc_a"), b.as("doc_b")))))).as("p"))
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
+      .select(explode(graft.plans.PairExprs.postingPairs(col("docs"))).as("p"))
+      .select(col("p.id_a").as("doc_a"), col("p.id_b").as("doc_b"))
       .distinct()
     // exact re-verification: plain equi-joins against the corpus
     // shingle table. NO broadcast hint — at test SF Catalyst/AQE pick
@@ -650,10 +648,8 @@ object Dedup {
       .select(col("vec_id"), posexplode(codes).as(Seq("t", "bucket")))
       .groupBy(col("t"), col("bucket"))
       .agg(sort_array(collect_list(col("vec_id"))).as("ids"))
-      .select(explode(flatten(transform(col("ids"), (a, i) =>
-        transform(slice(col("ids"), i + 2, size(col("ids"))),
-          b => struct(a.as("vec_a"), b.as("vec_b")))))).as("p"))
-      .select(col("p.vec_a").as("vec_a"), col("p.vec_b").as("vec_b"))
+      .select(explode(graft.plans.PairExprs.postingPairs(col("ids"))).as("p"))
+      .select(col("p.id_a").as("vec_a"), col("p.id_b").as("vec_b"))
       .distinct()
     cand
       .join(emb.select(col("vec_id").as("vec_a"), col("embedding").as("ea")), "vec_a")
@@ -1140,10 +1136,8 @@ object Dedup {
       .agg(sort_array(collect_list(col("doc_id"))).as("docs"))
       .filter(size(col("docs")) > 1 && size(col("docs")) <= defaultMaxDf)
     val cand = buckets
-      .select(explode(flatten(transform(col("docs"), (a, i) =>
-        transform(slice(col("docs"), i + 2, size(col("docs"))),
-          b => struct(a.as("doc_a"), b.as("doc_b")))))).as("p"))
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
+      .select(explode(graft.plans.PairExprs.postingPairs(col("docs"))).as("p"))
+      .select(col("p.id_a").as("doc_a"), col("p.id_b").as("doc_b"))
       .distinct()
     cand
       .join(docs.select(col("doc_id").as("doc_a"), col("shingles").as("sha")), "doc_a")

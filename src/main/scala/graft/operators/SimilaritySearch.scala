@@ -173,6 +173,11 @@ object SimilaritySearch {
       km: org.apache.spark.ml.clustering.KMeansModel): Array[Array[Double]] =
     km.clusterCenters.map(_.toArray)
 
+  /** The coarse quantizer's centroids for `dir` (the registry-shared
+    * fit), for specs that check a probe against its cells. */
+  private[graft] def ivfCentroids(spark: SparkSession, dir: String): Array[Array[Double]] =
+    cellArrays(coarseModel(spark, dir, embWithNorm(spark, dir)))
+
   /** Attach each vector's `keep` nearest cells — ROW-LOCAL via the
     * native CellExprs kernel (centroids ride as a codegen reference
     * object). The earlier crossJoin(centroids) + row_number window
@@ -354,14 +359,14 @@ object SimilaritySearch {
   /** The PERSISTED form of the q69 index — the actual 100 TB serving
     * layout: one parquet table, one row per corpus vector (codes +
     * id), PARTITIONED BY cent_id. Probing then is partition pruning:
-    * the query's probed-cell set (|queries|×nprobe rows by contract —
-    * collected as the ANN "query planning" step) becomes a literal
-    * IN filter on the partition column, so the scan touches ONLY the
-    * probed cells' directories (~nprobe/16 of the index bytes; the
-    * PartitionFilters prune is asserted in DedupSpec, along with
-    * result parity against the in-memory q69 path). Written once per
-    * (session, corpus); reads hit the columnar files like any other
-    * table. */
+    * the broadcast probe join on cent_id (|queries|×nprobe rows by
+    * contract) becomes a dynamic partition filter on the index scan,
+    * built from the SAME broadcast, so the scan touches ONLY the
+    * probed cells' directories (~nprobe/16 of the index bytes) with
+    * no driver round-trip and no per-call literal (DedupSpec asserts
+    * the pruning, the partitions read and result parity against the
+    * in-memory q69 path). Written once per (session, corpus); read
+    * with its schema given, like a source table. */
   def knnIvfPqPersisted(spark: SparkSession, dir: String,
       nprobe: Int = 2): DataFrame = {
     val emb = embWithNorm(spark, dir)
@@ -377,14 +382,14 @@ object SimilaritySearch {
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("nrm").as("qnrm"), col("cent_id"))
       .withColumn("adc", graft.plans.PqExprs.adcTable(col("qv"), pqCents))
-    val probed = queryCells.select(col("cent_id")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val index = spark.read.parquet(indexDir)
-      .filter(col("cent_id").isin(probed.map(x => x: Any): _*))
+    val index = spark.read.schema(graft.Tables.schemaOf(spark, indexDir))
+      .parquet(indexDir)
     val scored = index.join(broadcast(queryCells), Seq("cent_id"))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("neg_adc", negAdcCol)
-    val queries = queryCells.select(col("query_id"), col("qv"), col("qnrm")).distinct()
+    val queries = emb.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
+        col("nrm").as("qnrm"))
     adcRerank(scored, emb, queries, nCandidates = 50)
   }
 

@@ -104,37 +104,42 @@ object WordItemApp {
         col("event_id"))
       .filter(col("item").isNotNull)
 
-  /** THE distinct (user, item) click set — the shared base of q48's
-    * co-click pairs and q142's cosine similarity (shared-rule
-    * discipline: one def, the pair list and the item marginals cannot
-    * drift). */
+  /** THE distinct (user, item) click set, as rows — the base of the
+    * consumers that need rows (q153's HITS edges, recScored's split).
+    * The pair consumers read [[clickPostings]] instead. */
   private[operators] def userItemClicks(spark: SparkSession, dir: String): DataFrame =
     clickEvents(spark, dir)
       .select(col("user_id"), col("item"))
       .distinct()
 
-  /** THE co-click pair rule (q48 + q142 share it): support counts via
-    * per-user posting arrays — one shuffle on user, pair explosion
-    * from the sorted item array, never a self-join of the click log.
-    *
-    * opt r09: the posting build folds the per-user dedup INTO the
-    * collect — `collect_set` over the raw click stream is exactly
+  /** THE per-user posting arrays: each user's sorted distinct clicked
+    * items. `collect_set` over the raw click stream is exactly
     * `collect_list` over the DISTINCT (user, item) set (set equality;
-    * sort_array pins the order), so the old distinct → groupBy chain
-    * (TWO shuffles of the click pairs: hash(user, item) then
-    * hash(user)) becomes ONE user-keyed shuffle with map-side partial
-    * set-collect. userItemClicks stays the row-level distinct def for
-    * the consumers that need rows (q142 marginals, recScored split). */
-  private[operators] def coClickPairs(spark: SparkSession, dir: String): DataFrame =
+    * sort_array pins the order), so this is ONE user-keyed shuffle
+    * with map-side partial set-collect. Both the co-click pairs and
+    * q142's item marginals derive from it (shared-rule discipline:
+    * the pair list and the marginals cannot drift), and a plan that
+    * consumes it twice reuses its one exchange instead of scanning
+    * the click log again. */
+  private def clickPostings(spark: SparkSession, dir: String): DataFrame =
     clickEvents(spark, dir)
       .select(col("user_id"), col("item"))
       .groupBy(col("user_id"))
       .agg(sort_array(collect_set(col("item"))).as("items"))
-      .select(explode(flatten(transform(col("items"), (a, i) =>
-        transform(slice(col("items"), i + 2, size(col("items"))),
-          b => struct(a.as("item_a"), b.as("item_b")))))).as("p"))
-      .groupBy(col("p.item_a").as("item_a"), col("p.item_b").as("item_b"))
+
+  /** Co-click support of each (item_a < item_b) pair: the codegen
+    * pair kernel over the posting arrays, never a self-join of the
+    * click log. */
+  private def pairSupport(postings: DataFrame): DataFrame =
+    postings
+      .select(explode(graft.plans.PairExprs.postingPairs(col("items"))).as("p"))
+      .groupBy(col("p.id_a").as("item_a"), col("p.id_b").as("item_b"))
       .agg(count(lit(1)).as("support"))
+
+  /** THE co-click pair rule (q48, q142 and GraphOps' click-graph
+    * queries share it). */
+  private[operators] def coClickPairs(spark: SparkSession, dir: String): DataFrame =
+    pairSupport(clickPostings(spark, dir))
 
   /** MakeSimilarityData: co-click item pairs with support. */
   def similarityData(spark: SparkSession, dir: String): DataFrame =
@@ -147,17 +152,21 @@ object WordItemApp {
     * (calculate_similarity_with_matrix_factorization.py:21) expressed
     * directly on the interaction sets: cos(a,b) = |U_a ∩ U_b| /
     * √(|U_a|·|U_b|) over distinct click sets. Scale shape: the
-    * intersection counts are [[coClickPairs]] (posting arrays, no
-    * self-join); the per-item marginals are a second bounded agg of
-    * the SAME distinct click set, broadcast onto the pair table.
+    * intersection counts are the co-click pairs and the per-item
+    * marginals |U_a| are an explode-count of the SAME per-user
+    * posting arrays ([[clickPostings]]), broadcast onto the pair
+    * table — the click log is scanned, JSON-parsed and shuffled on
+    * user once, its exchange reused by both consumers.
     * Floats: |U_a|·|U_b| is an exact integer, √ and ÷ are
     * correctly-rounded IEEE on identical operands → bit-identical
     * cross-engine with no decimal bridge; round(,6) only for
     * presentation. */
   def coClickCosine(spark: SparkSession, dir: String): DataFrame = {
-    val itemCounts = userItemClicks(spark, dir)
+    val postings = clickPostings(spark, dir)
+    val itemCounts = postings
+      .select(explode(col("items")).as("item"))
       .groupBy(col("item")).agg(count(lit(1)).as("n_users"))
-    coClickPairs(spark, dir)
+    pairSupport(postings)
       .filter(col("support") >= 2)
       .join(broadcast(itemCounts.select(col("item").as("item_a"),
         col("n_users").as("n_a"))), Seq("item_a"))

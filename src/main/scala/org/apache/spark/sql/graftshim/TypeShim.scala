@@ -15,4 +15,7 @@ object TypeShim {
   def stringArrayOne: Seq[AbstractDataType] = Seq(ArrayType(StringType))
   def stringOne: Seq[AbstractDataType] = Seq(StringType)
   def longOne: Seq[AbstractDataType] = Seq(LongType)
+  /** Either of two array types (PairExprs' posting arrays). */
+  def arrayOf(a: DataType, b: DataType): Seq[AbstractDataType] =
+    Seq(TypeCollection(ArrayType(a), ArrayType(b)))
 }

@@ -510,6 +510,8 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("persisted IVF∘PQ index: partition-pruned probe scan, exact parity with in-memory") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     val mem = SimilaritySearch.knnIvfPq(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
     val disk = SimilaritySearch.knnIvfPqPersisted(spark, sf)
@@ -517,11 +519,47 @@ class DedupSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
     assert(got == mem) // same index artifacts (shared registries) ⇒ same answer
     // the probe must PRUNE the index scan to the probed cells'
-    // partition directories — the whole point of the layout
+    // partition directories — the whole point of the layout — and
+    // the probed cells reach the scan's partition filters at run time,
+    // from the broadcast probe side (dynamic partition pruning), not as
+    // a literal list collected on the driver. (Spark lists the
+    // isnotnull(cent_id) it infers from the join first, so the filter
+    // is matched inside the list, not at its head.)
     val plan = disk.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [cent_id"), plan.take(3000))
-    // the probed-cell list shows as IN (few values) or INSET (many)
-    assert("cent_id#\\d+ (INSET|IN )".r.findFirstIn(plan).isDefined, plan.take(3000))
+    val scanLines = plan.linesIterator.filter(l => l.contains("FileScan") && l.contains("cent_id")).mkString("\n")
+    assert(("PartitionFilters: \\[[^\\]]*dynamicpruningexpression\\(" +
+      "cent_id#\\d+ IN dynamicpruning#\\d+\\)").r.findFirstIn(plan).isDefined, scanLines)
+    assert("cent_id#\\d+ (INSET|IN \\()".r.findFirstIn(plan).isEmpty, scanLines)
+    // what the scan read: exactly the partitions of the distinct
+    // probed cells, computed here from the centroids (top-2 cosine,
+    // id ascending on ties — the default nprobe)
+    val cents = SimilaritySearch.ivfCentroids(spark, sf)
+    def cos(v: Array[Double], c: Array[Double]): Double = {
+      val dot = v.indices.foldLeft(0.0)((s, i) => s + v(i) * c(i))
+      dot / (math.sqrt(v.map(x => x * x).sum) * math.sqrt(c.map(x => x * x).sum))
+    }
+    val probed = Tables.embeddings(spark, sf).filter(col("vec_id") < 10)
+      .select(col("embedding")).collect()
+      .flatMap { r =>
+        val v = r.getSeq[Float](0).map(_.toDouble).toArray
+        cents.indices.sortBy(c => (-cos(v, cents(c)), c)).take(2)
+      }.toSet
+    val scans = new AdaptiveSparkPlanHelper {}.collect(disk.queryExecution.executedPlan) {
+      case s: FileSourceScanExec if s.relation.partitionSchema.fieldNames.contains("cent_id") => s
+    }
+    assert(scans.size == 1, plan.take(3000))
+    val m = scans.head.metrics
+    val root = scans.head.relation.location.rootPaths.head.toString
+    val files = probed.toSeq.map { c =>
+      new java.io.File(new java.net.URI(s"$root/cent_id=$c")).listFiles()
+        .count(f => !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+    }.sum
+    val rows = spark.read.parquet(root)
+      .filter(col("cent_id").isin(probed.toSeq: _*)).count()
+    assert(m("numPartitions").value == probed.size, s"probed cells $probed")
+    assert(m("numFiles").value == files)
+    assert(m("numOutputRows").value == rows)
+    assert(probed.size < cents.length) // the check is not vacuous
   }
 
   test("IVF ANN surfaces planted twins in top-5 (recall >= 0.8)") {

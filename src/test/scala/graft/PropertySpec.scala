@@ -143,6 +143,19 @@ class PropertySpec extends AnyFunSuite {
     // rows with <2 postings contribute no pairs (explode drops them)
     val expEmpty = arrays.zipWithIndex.filter(_._1.size < 2).map(_._2.toLong).toSet
     assert(expEmpty.intersect(got.keySet).isEmpty)
+    // the same kernel over plain id arrays: (id_a, id_b) in i<j order
+    val gotIds = df
+      .select(col("row_id"), explode(graft.plans.PairExprs.postingPairs(
+        transform(col("docs"), x => x.getField("id")))).as("p"))
+      .select(col("row_id"), col("p.id_a"), col("p.id_b"))
+      .collect()
+      .groupBy(_.getLong(0))
+      .view.mapValues(_.map(r => (r.getLong(1), r.getLong(2))).toSeq)
+      .toMap
+    val expIds = arrays.zipWithIndex.filter(_._1.size >= 2).map { case (a, i) =>
+      i.toLong -> (for (x <- a.indices; y <- x + 1 until a.size) yield (a(x), a(y)))
+    }.toMap
+    assert(gotIds == expIds)
   }
 
   test("session registries hook the context and evict its entries on application end") {
