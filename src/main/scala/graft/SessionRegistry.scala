@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graftshim.LocalDirShim
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.graftshim.{ColumnShim, LocalDirShim}
 
 import scala.collection.concurrent.TrieMap
 
@@ -79,34 +81,52 @@ object SessionRegistry {
     c
   }
 
-  private val artifacts = cache[(SparkSession, String, Any), String]()
+  /** A published disk artifact: its dir, and its parquet tables read
+    * through [[read]]. Each table (`sub` under the dir, or the dir
+    * itself) is resolved on its first read, which lists its files and
+    * infers its schema (a one-task footer job); the handle keeps the
+    * analyzed relation, so every later read lists no file, infers no
+    * schema and starts no job. Every read gets fresh attribute ids, so
+    * one plan may read a table twice (a self-join). An artifact's
+    * files never change once published, so the held listing stays
+    * true for the handle's life. */
+  final class Artifact private[SessionRegistry] (spark: SparkSession, val path: String) {
+    private val tables = TrieMap.empty[String, Slot[LogicalPlan]]
+    def read(sub: String = ""): DataFrame = {
+      val slot = new Slot[LogicalPlan](() =>
+        ColumnShim.analyzed(spark.read.parquet(if (sub.isEmpty) path else s"$path/$sub")))
+      val relation = tables.putIfAbsent(sub, slot).getOrElse(slot).value
+      ColumnShim.ofRows(spark, relation.asInstanceOf[MultiInstanceRelation].newInstance())
+    }
+  }
+
+  private val artifacts = cache[(SparkSession, String, Any), Artifact]()
   private val attempt = new java.util.concurrent.atomic.AtomicLong()
 
   /** The disk artifact `name` for `key` (a value or tuple compared by
     * equality — typically the corpus dir plus any parameters), built
     * at most once per session: `write` gets a fresh path that does
-    * not exist yet, under the context's [[root]], and the path is
+    * not exist yet, under the context's [[root]], and the artifact is
     * published only after `write` returns. A throwing `write` leaves
     * the entry unbuilt, so the next call retries into another fresh
     * path — a half-written artifact is never served and a retry never
     * appends onto a failed attempt; the failed attempt's files go
     * with the root when the context ends. */
   def artifact(spark: SparkSession, name: String, key: Any)(
-      write: String => Unit): String =
+      write: String => Unit): Artifact =
     artifacts.getOrElseUpdate((spark, name, key), {
       val path = scratchPath(spark, name)
       write(path)
-      path
+      new Artifact(spark, path)
     })
 
-  /** The artifact's path if this session has built it (spec hooks). */
-  def builtArtifact(spark: SparkSession, name: String, key: Any): Option[String] =
+  /** The artifact if this session has built it (spec hooks). */
+  def builtArtifact(spark: SparkSession, name: String, key: Any): Option[Artifact] =
     artifacts.get((spark, name, key))
 
   /** A fresh, not-yet-existing path under the context's root, for
-    * disk state that is not an [[artifact]] (a fit's side tables, a
-    * checkpoint); it lives until its owner deletes it or the context
-    * ends. */
+    * disk state that is not an [[artifact]] (a training checkpoint);
+    * it lives until its owner deletes it or the context ends. */
   private[graft] def scratchPath(spark: SparkSession, name: String): String =
     new java.io.File(root(spark.sparkContext),
       s"$name-${attempt.incrementAndGet()}").getPath

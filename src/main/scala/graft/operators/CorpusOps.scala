@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.SessionRegistry.Artifact
 import graft.Tables
 import graft.functions.TextFns
 import graft.plans.WordNGrams
@@ -88,13 +89,13 @@ object CorpusOps {
     * collision), not corpus-sized. */
   private[graft] def contamHits(spark: SparkSession, dir: String,
       cfg: PipelineConfig = PipelineConfig.default): DataFrame =
-    spark.read.parquet(graft.SessionRegistry.artifact(spark, "contam_hits",
+    graft.SessionRegistry.artifact(spark, "contam_hits",
         (dir, cfg.evalSource, cfg.contamN))(
       docGrams(Tables.documents(spark, dir), cfg)
         .join(broadcast(evalGrams(spark, dir, cfg)), Seq("g"))
         .groupBy(col("doc_id"), col("source"))
         .agg(count(lit(1)).as("n_hit"))
-        .write.parquet(_)))
+        .write.parquet(_)).read()
 
   def contamination(spark: SparkSession, dir: String): DataFrame =
     contamination(spark, dir, PipelineConfig.default)
@@ -790,13 +791,11 @@ object CorpusOps {
     * re-read is scan-cheap and survives cache clears. In kind this
     * is the reference's gokart task artifact for the trained LM's
     * scores. */
-  private[graft] def docNll(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.SessionRegistry.artifact(spark, "docnll", dir) { p =>
+  private[graft] def docNll(spark: SparkSession, dir: String): DataFrame =
+    graft.SessionRegistry.artifact(spark, "docnll", dir) { p =>
       val docs = Tables.documents(spark, dir)
       bigramModelNll(docs, docs).write.parquet(p)
-    }
-    spark.read.parquet(path)
-  }
+    }.read()
 
   /** The add-one bigram LM's model tables (c2 bigram counts, c1
     * first-token counts, 1-row vocab size) — THE model definition,
@@ -877,8 +876,8 @@ object CorpusOps {
     *   groups, dup-rate-bounded cluster table, broadcast eval
     *   grams). */
   private[graft] def funnelFlags(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(graft.SessionRegistry.artifact(spark, "flags", dir)(
-      writeFlagsArtifact(spark, dir, _)))
+    graft.SessionRegistry.artifact(spark, "flags", dir)(
+      writeFlagsArtifact(spark, dir, _)).read()
 
   private def writeFlagsArtifact(spark: SparkSession, dir: String, out: String): Unit = {
     val docsAll = Tables.documents(spark, dir)
@@ -937,11 +936,6 @@ object CorpusOps {
           .as("n_chunks"))
       .orderBy(col("source"))
 
-  /** The written sink location, if this session has materialized it
-    * (spec hook for partition-pruning asserts). */
-  private[graft] def curatedSinkDir(spark: SparkSession, dir: String): Option[String] =
-    graft.SessionRegistry.builtArtifact(spark, "curated", dir)
-
   /** The funnel as a PIPELINE RUN, not just a report: the sampled
     * (curated) docs are WRITTEN to parquet partitioned by source —
     * the handoff layout a loader consumes (and prunes by source) —
@@ -950,14 +944,12 @@ object CorpusOps {
     * write+read fidelity is hash-checked against the same SQL that
     * gates q85. Write-once per (session, corpus); partitioned by
     * source so a per-source consumer touches one directory. */
-  def curatedSink(spark: SparkSession, dir: String): DataFrame = {
-    val out = graft.SessionRegistry.artifact(spark, "curated", dir)(
+  def curatedSink(spark: SparkSession, dir: String): DataFrame =
+    readCurated(graft.SessionRegistry.artifact(spark, "curated", dir)(
       graft.Tables.writePartitionedKeepSchema(funnelFlags(spark, dir)
         .filter(col("sampled"))
         .select(col("doc_id"), col("lang"), col("n_words"), col("source")),
-        "overwrite", "source", "__schema__", _))
-    readCurated(spark, out)
-  }
+        "overwrite", "source", "__schema__", _)))
 
   /** q111: TEMPERATURE-BASED SOURCE MIXING — the data-mix planning
     * step of an LLM pretrain pipeline (the τ-weighted source
@@ -1326,11 +1318,6 @@ object CorpusOps {
       |FROM mix m LEFT JOIN uniq u USING (source)
       |ORDER BY m.source""".stripMargin
 
-  /** The written append layout, if this session materialized it
-    * (spec hook for the partition-pruning assert). */
-  private[graft] def curatedAppendDir(spark: SparkSession, dir: String): Option[String] =
-    graft.SessionRegistry.builtArtifact(spark, "curated_append", dir)
-
   /** q109: the steady-state funnel's WRITE side, completing q91+q92 —
     * bootstrap the curated store from the funnel's sampled docs
     * RESTRICTED to the store split (the batch residue is excluded:
@@ -1344,10 +1331,10 @@ object CorpusOps {
     * layout is hash-checked against the same SQL fragments that gate
     * the two pipelines it composes. */
   def curatedAppend(spark: SparkSession, dir: String): DataFrame =
-    readCurated(spark, appendLayout(spark, dir))
+    readCurated(appendLayout(spark, dir))
 
   /** q109's bootstrap+append layout, write-once per (session, corpus). */
-  private def appendLayout(spark: SparkSession, dir: String): String =
+  private def appendLayout(spark: SparkSession, dir: String): Artifact =
     graft.SessionRegistry.artifact(spark, "curated_append", dir) { path =>
       graft.Tables.writePartitionedKeepSchema(funnelFlags(spark, dir)
         .filter(col("sampled") && !batchPredicate())
@@ -1364,17 +1351,14 @@ object CorpusOps {
     }
 
   /** Per-source rollup of a curated layout (q85's sink, q109, q113). */
-  private def readCurated(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  private def readCurated(layout: Artifact): DataFrame =
+    layout.read()
       .groupBy(col("source"))
       .agg(
         count(lit(1)).as("n_docs"),
         sum(col("n_words")).as("n_tokens"),
         sum(ceil(col("n_words") / ChunkSize.toDouble).cast("long")).as("n_chunks"))
       .orderBy(col("source"))
-
-  private[graft] def compactedDir(spark: SparkSession, dir: String): Option[String] =
-    graft.SessionRegistry.builtArtifact(spark, "curated_compact", dir)
 
   /** q113: LAYOUT COMPACTION — the maintenance op every append-based
     * lakehouse layout needs: q109's bootstrap+append leaves one file
@@ -1389,14 +1373,12 @@ object CorpusOps {
     * compaction is hash-checked to change nothing but the file
     * layout; the spec additionally asserts the file count shrank to
     * one per partition. */
-  def curatedCompact(spark: SparkSession, dir: String): DataFrame = {
+  def curatedCompact(spark: SparkSession, dir: String): DataFrame =
     // compact the q109 layout, write-once per (session, corpus)
-    val src = appendLayout(spark, dir)
-    readCurated(spark, graft.SessionRegistry.artifact(spark, "curated_compact", dir)(
+    readCurated(graft.SessionRegistry.artifact(spark, "curated_compact", dir)(
       graft.Tables.writePartitionedKeepSchema(
-        spark.read.parquet(src).repartition(col("source")),
+        appendLayout(spark, dir).read().repartition(col("source")),
         "overwrite", "source", "__schema__", _)))
-  }
 
   /** Dedup-AWARE train/test split (leakage guard): a plain hash
     * split leaks — near-identical docs land on opposite sides and

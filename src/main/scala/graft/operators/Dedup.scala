@@ -283,11 +283,10 @@ object Dedup {
     * re-run the posting pyramid + levenshtein verify. The
     * deterministic ORDER BY is re-applied on read (parquet re-reads
     * don't preserve row order). */
-  def editDedup(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.SessionRegistry.artifact(spark, "editpairs", dir)(
+  def editDedup(spark: SparkSession, dir: String): DataFrame =
+    graft.SessionRegistry.artifact(spark, "editpairs", dir)(
       editDedupDerive(spark, dir).write.parquet(_))
-    spark.read.parquet(path).orderBy(col("doc_a"), col("doc_b"))
-  }
+      .read().orderBy(col("doc_a"), col("doc_b"))
 
   private[graft] def editDedupDerive(spark: SparkSession, dir: String,
       maxDf: Int = defaultMaxDf): DataFrame = {
@@ -360,11 +359,10 @@ object Dedup {
     * Disk-artifact wrapper (jaccardPairs's discipline) — the admitted
     * pair list is written once per (session, corpus), deterministic
     * ORDER BY re-applied on read. */
-  def tfidfCosine(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.SessionRegistry.artifact(spark, "cospairs", dir)(
+  def tfidfCosine(spark: SparkSession, dir: String): DataFrame =
+    graft.SessionRegistry.artifact(spark, "cospairs", dir)(
       tfidfCosineDerive(spark, dir).write.parquet(_))
-    spark.read.parquet(path).orderBy(col("doc_a"), col("doc_b"))
-  }
+      .read().orderBy(col("doc_a"), col("doc_b"))
 
   private[graft] def tfidfCosineDerive(spark: SparkSession, dir: String,
       maxDf: Int = defaultMaxDf): DataFrame = {
@@ -454,7 +452,7 @@ object Dedup {
     // re-dedup incremental); disk per (session, corpus) like the
     // pair/cluster artifacts — survives cache clears, shared by
     // q32/q71/q75's batch twins
-    val path = graft.SessionRegistry.artifact(spark, "sigs", dir) { p =>
+    graft.SessionRegistry.artifact(spark, "sigs", dir) { p =>
       val sh = shingled(spark, dir)
         .select(col("doc_id"), explode(col("shingles")).as("sh"))
         .withColumn("x", pmod(xxhash64(col("sh")), lit(minhashP)))
@@ -465,8 +463,7 @@ object Dedup {
         .select(col("doc_id"),
           array((0 until minhashK).map(i => col(s"m$i")): _*).as("sig"))
         .write.parquet(p)
-    }
-    spark.read.parquet(path)
+    }.read()
   }
 
   def minhash(spark: SparkSession, dir: String): DataFrame = {
@@ -675,9 +672,8 @@ object Dedup {
     // re-read (~near-dup-sized) survives spark.catalog.clearCache(),
     // so consumers never re-run the shingle-join pyramid within a
     // session even across a caller's cache clears
-    val path = graft.SessionRegistry.artifact(spark, "pairs", dir)(
-      jaccard(spark, dir).write.parquet(_))
-    spark.read.parquet(path)
+    graft.SessionRegistry.artifact(spark, "pairs", dir)(
+      jaccard(spark, dir).write.parquet(_)).read()
   }
 
   /** Near-dup CLUSTERS from the Jaccard pair list: connected
@@ -703,9 +699,8 @@ object Dedup {
     * persisted copy per (session, corpus) is the right lifetime. */
   def clusters(spark: SparkSession, dir: String): DataFrame = {
     // same disk-artifact discipline as [[jaccardPairs]]
-    val path = graft.SessionRegistry.artifact(spark, "clusters", dir)(
-      clusters(spark, dir, smallGraphEdges).write.parquet(_))
-    spark.read.parquet(path)
+    graft.SessionRegistry.artifact(spark, "clusters", dir)(
+      clusters(spark, dir, smallGraphEdges).write.parquet(_)).read()
   }
 
   private[graft] def clusters(spark: SparkSession, dir: String,
@@ -1047,11 +1042,10 @@ object Dedup {
     * Disk-artifact wrapper (jaccardPairs discipline): q93's verified
     * pair list is written once per (session, corpus) — it now has
     * TWO consumers (the q93 query and q158's quality report). */
-  def minhashExact(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.SessionRegistry.artifact(spark, "pmhpairs", dir)(
+  def minhashExact(spark: SparkSession, dir: String): DataFrame =
+    graft.SessionRegistry.artifact(spark, "pmhpairs", dir)(
       minhashExactDerive(spark, dir).write.parquet(_))
-    spark.read.parquet(path).orderBy(col("doc_a"), col("doc_b"))
-  }
+      .read().orderBy(col("doc_a"), col("doc_b"))
 
   /** q158: LSH INDEX QUALITY report — every exact near-dup pair
     * (q31's Jaccard ≥ 0.5 rule) classified by whether the
@@ -1165,9 +1159,8 @@ object Dedup {
     * pipeline must not re-execute per consumption. */
   private[graft] def embedPairs(spark: SparkSession, dir: String): DataFrame = {
     // disk artifact like [[jaccardPairs]] — survives cache clears
-    val path = graft.SessionRegistry.artifact(spark, "embpairs", dir)(
-      embedNearDup(spark, dir).write.parquet(_))
-    spark.read.parquet(path)
+    graft.SessionRegistry.artifact(spark, "embpairs", dir)(
+      embedNearDup(spark, dir).write.parquet(_)).read()
   }
 
   def semanticClusters(spark: SparkSession, dir: String): DataFrame =

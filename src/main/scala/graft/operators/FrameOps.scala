@@ -245,12 +245,11 @@ object FrameOps {
   private def parallelNtile(spark: SparkSession, dir: String,
       slim: => DataFrame, order: Seq[org.apache.spark.sql.Column], k: Int,
       out: String): DataFrame = {
-    val rangedPath = graft.SessionRegistry.artifact(spark, "rfm_ranged", (dir, out))(
+    val ranged = graft.SessionRegistry.artifact(spark, "rfm_ranged", (dir, out))(
       slim.repartitionByRange(
         math.max(spark.sparkContext.defaultParallelism / 2, 4), order: _*)
         .withColumn("pid", spark_partition_id())
-        .write.parquet(_))
-    val ranged = spark.read.parquet(rangedPath)
+        .write.parquet(_)).read()
     val counts = ranged.groupBy(col("pid")).count()
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
     val n = counts.map(_._2).sum
@@ -272,15 +271,14 @@ object FrameOps {
 
   def rfmSegments(spark: SparkSession, dir: String): DataFrame = {
     val sec = unix_timestamp(date_trunc("second", col("ts")))
-    val perUserPath = graft.SessionRegistry.artifact(spark, "rfm_user", dir)(
+    val perUser = graft.SessionRegistry.artifact(spark, "rfm_user", dir)(
       Tables.events(spark, dir)
         .groupBy(col("user_id"))
         .agg(
           max(sec).as("last_sec"),
           count(lit(1)).as("n_events"),
           sum(col("value").cast(DecimalType(18, 4))).as("mon"))
-        .write.parquet(_))
-    val perUser = spark.read.parquet(perUserPath)
+        .write.parquet(_)).read()
     val r = parallelNtile(spark, dir, perUser.select(col("user_id"), col("last_sec")),
       Seq(col("last_sec").asc, col("user_id").asc), 5, "r_score")
     val f = parallelNtile(spark, dir, perUser.select(col("user_id"), col("n_events")),

@@ -16,7 +16,7 @@ object GraphOps {
     * here are DETERMINISTIC, so each runs once per (session, corpus)
     * — doubly important for q153, whose normalization scalars are
     * per-half-step eager actions. The memo is a DISK artifact
-    * (parquet path in the registry, the jaccardPairs/editPairCache
+    * (artifact handle in the registry, the jaccardPairs/editPairCache
     * discipline), NOT collected rows: the outputs are node-
     * vocabulary-sized, and node vocabulary GROWS with the corpus —
     * a driver-side rows store would be a corpus-growing collect by
@@ -26,8 +26,8 @@ object GraphOps {
     * of MB even at a 10^7-item catalog), never 32 tiny shards. */
   private def staged(spark: SparkSession, dir: String, name: String)(
       run: => DataFrame): DataFrame =
-    spark.read.parquet(graft.SessionRegistry.artifact(spark, s"graph_$name", dir)(
-      run.coalesce(1).write.parquet(_)))
+    graft.SessionRegistry.artifact(spark, s"graph_$name", dir)(
+      run.coalesce(1).write.parquet(_)).read()
 
   /** PageRank iteration count / damping / per-step rounding scale.
     * The q145 oracle SQL is GENERATED from these constants

@@ -24,12 +24,12 @@ object Recommend {
     * double strengths roundtrip parquet exactly, so q56's oracle
     * parity is unaffected while reps survive cache clears. */
   def ratingsExact(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(graft.SessionRegistry.artifact(spark, "ratings_exact", dir)(
+    graft.SessionRegistry.artifact(spark, "ratings_exact", dir)(
       Tables.lineitem(spark, dir)
         .join(Tables.orders(spark, dir), col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_custkey").as("user"), col("l_partkey").as("item"))
         .agg(sum(dec(col("l_quantity"))).cast("double").as("rating"))
-        .write.parquet(_)))
+        .write.parquet(_)).read()
 
   /** Bias-baseline matrix completion: μ (global train mean) and the
     * top-20 user biases b_u = Σr/n − μ, computed in the algebraic

@@ -365,25 +365,24 @@ object SimilaritySearch {
     * probed cells' directories (~nprobe/16 of the index bytes) with
     * no driver round-trip and no per-call literal (DedupSpec asserts
     * the pruning, the partitions read and result parity against the
-    * in-memory q69 path). Written once per (session, corpus); read
-    * with its schema given, like a source table. */
+    * in-memory q69 path). Written once per (session, corpus); a warm
+    * probe reads it through the artifact's held relation, with no
+    * file listing and no schema inference. */
   def knnIvfPqPersisted(spark: SparkSession, dir: String,
       nprobe: Int = 2): DataFrame = {
     val emb = embWithNorm(spark, dir)
     val cents = cellArrays(coarseModel(spark, dir, emb))
     val pqCents = centroidArrays(pqCodebooks(spark, dir, emb))
-    val indexDir = graft.SessionRegistry.artifact(spark, "ivfpq", dir)(
+    val index = graft.SessionRegistry.artifact(spark, "ivfpq", dir)(
       nearestCells(emb, cents, keep = 1)
         .select(col("vec_id"),
           graft.plans.PqExprs.codes(col("embedding"), pqCents).as("codes"),
           col("cent_id"))
-        .write.partitionBy("cent_id").parquet(_))
+        .write.partitionBy("cent_id").parquet(_)).read()
     val queryCells = nearestCells(emb.filter(col("vec_id") < 10), cents, keep = nprobe)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("nrm").as("qnrm"), col("cent_id"))
       .withColumn("adc", graft.plans.PqExprs.adcTable(col("qv"), pqCents))
-    val index = spark.read.schema(graft.Tables.schemaOf(spark, indexDir))
-      .parquet(indexDir)
     val scored = index.join(broadcast(queryCells), Seq("cent_id"))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("neg_adc", negAdcCol)
@@ -454,14 +453,11 @@ object SimilaritySearch {
   }
 
   /** The upserted index contents (exposed for the spec's content-
-    * equality assert against [[oneShotEncoded]]). */
+    * equality assert against [[oneShotEncoded]]): the written
+    * [[indexUpsert]] index (separate from the q74 dir: this one is
+    * bootstrapped from the STORE split only and then mutated by the
+    * append), write-once per (session, corpus). */
   private[graft] def upsertedRows(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(upsertDir(spark, dir))
-
-  /** The written [[indexUpsert]] index (separate from the q74 dir:
-    * this one is bootstrapped from the STORE split only and then
-    * mutated by the append), write-once per (session, corpus). */
-  private def upsertDir(spark: SparkSession, dir: String): String =
     graft.SessionRegistry.artifact(spark, "ivfpq_upsert", dir) { out =>
       val emb = embWithNorm(spark, dir)
       // opt r09: encode the corpus ONCE — the row-local cell+code
@@ -479,7 +475,7 @@ object SimilaritySearch {
         enc.filter(isBatchVec).write
           .mode("append").partitionBy("cent_id").parquet(out)
       } finally enc.unpersist()
-    }
+    }.read()
 
   /** What the index would be if built from the whole corpus in one
     * shot — the spec's ground truth for append integrity. */
@@ -494,11 +490,6 @@ object SimilaritySearch {
         sum(when(isBatchVec, 1L).otherwise(0L)).as("n_new"))
       .orderBy(col("cent_id"))
 
-  /** The q114 compacted index, if this session has written it. */
-  private[graft] def compactedIndexDir(spark: SparkSession,
-      dir: String): Option[String] =
-    graft.SessionRegistry.builtArtifact(spark, "ivfpq_compact", dir)
-
   /** q114: ANN INDEX COMPACTION — q113's maintenance discipline for
     * the q102 serving layout: every upsert batch appends one file
     * set per touched cell directory, and at steady state the
@@ -508,19 +499,16 @@ object SimilaritySearch {
     * partition pruning unchanged for readers. Content invariance vs
     * the upserted layout plus the file accounting are spec-asserted
     * (cell ids come from the seeded KMeans fit → rows-only). */
-  def indexCompact(spark: SparkSession, dir: String): DataFrame = {
-    val src = upsertDir(spark, dir)
-    val out = graft.SessionRegistry.artifact(spark, "ivfpq_compact", dir)(
-      spark.read.parquet(src)
+  def indexCompact(spark: SparkSession, dir: String): DataFrame =
+    graft.SessionRegistry.artifact(spark, "ivfpq_compact", dir)(
+      upsertedRows(spark, dir)
         .repartition(col("cent_id"))
-        .write.partitionBy("cent_id").parquet(_))
-    spark.read.parquet(out)
+        .write.partitionBy("cent_id").parquet(_)).read()
       .groupBy(col("cent_id"))
       .agg(
         count(lit(1)).as("n_vecs"),
         sum(when(isBatchVec, 1L).otherwise(0L)).as("n_new"))
       .orderBy(col("cent_id"))
-  }
 
   /** DimensionReductionModel.fit (dimension_reduction_model.py:21):
     * per-dimension importance = Σ v². Values are quantized to 1e-6 so

@@ -442,7 +442,7 @@ object TextOps {
     * the global rank exactly because range partitions are disjoint
     * and ordered on the rank key. */
   def dictionary(spark: SparkSession, dir: String): DataFrame = {
-    val rangedPath = graft.SessionRegistry.artifact(spark, "vocab", dir) { p =>
+    val ranged = graft.SessionRegistry.artifact(spark, "vocab", dir) { p =>
       val docs = Tables.documents(spark, dir)
       val nDocs = docs.agg(count(lit(1)).as("n_docs"))
       val nPart = math.max(spark.sparkContext.defaultParallelism / 2, 4)
@@ -455,8 +455,7 @@ object TextOps {
         .repartitionByRange(nPart, col("df").desc, col("term").asc)
         .withColumn("pid", spark_partition_id())
         .write.parquet(p)
-    }
-    val ranged = spark.read.parquet(rangedPath)
+    }.read()
     val offsets = {
       val counts = ranged.groupBy(col("pid")).count()
         .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)

@@ -222,8 +222,8 @@ object WordItemApp {
     * re-derive the whole split+rank+join pyramid per call once a
     * clearCache() drops it; the frame is test-users×K-bounded. */
   private[graft] def recScored(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(graft.SessionRegistry.artifact(spark, "rec_scored", dir)(
-      recScoredBuild(spark, dir).write.parquet(_)))
+    graft.SessionRegistry.artifact(spark, "rec_scored", dir)(
+      recScoredBuild(spark, dir).write.parquet(_)).read()
 
   private def recScoredBuild(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window

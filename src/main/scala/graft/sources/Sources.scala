@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.SessionRegistry.Artifact
 import graft.Tables
 
 /** Source/sink operators — re-expression of the reference's file
@@ -31,7 +32,7 @@ object Sources {
       src.write.option("header", "true").csv(s"$out/csv")
       src.write.json(s"$out/json")
       src.write.orc(s"$out/orc")
-    }
+    }.path
     val fromCsv = spark.read.option("header", "true").schema(schema).csv(s"$base/csv")
     val fromJson = spark.read.schema(schema).json(s"$base/json")
       .select(col("event_id").as("jid"), col("value").as("jvalue"))
@@ -56,13 +57,13 @@ object Sources {
     * oracle on the original parquet. Write-once per (session,
     * corpus). */
   def partitionedSink(spark: SparkSession, dir: String): DataFrame =
-    partitionedRead(spark, graft.SessionRegistry.artifact(spark, "part", dir)(
+    partitionedRead(graft.SessionRegistry.artifact(spark, "part", dir)(
       Tables.events(spark, dir)
         .select(col("event_id"), col("event_type"), col("value"), col("user_id"))
         .write.partitionBy("event_type").parquet(_)))
 
-  private[graft] def partitionedRead(spark: SparkSession, base: String): DataFrame =
-    spark.read.parquet(base)
+  private[graft] def partitionedRead(part: Artifact): DataFrame =
+    part.read()
       .filter(col("event_type").isin("click", "purchase"))
       .groupBy(col("event_type"))
       .agg(
@@ -92,7 +93,7 @@ object Sources {
         "l_orderkey", "li")
       bucketed(Tables.orders(spark, dir).select(col("o_orderkey"), col("o_orderstatus")),
         "o_orderkey", "ord")
-    }
+    }.path
     spark.table(table(base, "li"))
       .join(spark.table(table(base, "ord")).hint("merge"),
         col("l_orderkey") === col("o_orderkey"))
@@ -109,7 +110,7 @@ object Sources {
     * appends ONLY its delta, upserts and deletes as rows):
     * v1 = the base corpus; v2 = revisions for the %13 set, DELETES
     * for the %17 set; v3 = the deleted docs restored. */
-  private[graft] def versionedStore(spark: SparkSession, dir: String): String =
+  private[graft] def versionedStore(spark: SparkSession, dir: String): Artifact =
     graft.SessionRegistry.artifact(spark, "versioned", dir) { base =>
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("text"))
@@ -153,16 +154,15 @@ object Sources {
     * commit (src_version — stable across vacuum). Partition-pruned:
     * only commit files ≤ version are listed (plan-asserted in
     * SourcesSkewSpec). */
-  private[graft] def readVersionFrom(spark: SparkSession, base: String,
-      version: Int): DataFrame =
-    lwwRows(spark.read.parquet(base), version)
+  private[graft] def readVersionFrom(store: Artifact, version: Int): DataFrame =
+    lwwRows(store.read(), version)
       .filter(col("op") === "upsert")
       .select(col("doc_id"), col("src_version").as("since_version"),
         md5(col("text").cast("binary")).as("fp"))
 
   private[graft] def readVersion(spark: SparkSession, dir: String,
       version: Int): DataFrame =
-    readVersionFrom(spark, versionedStore(spark, dir), version)
+    readVersionFrom(versionedStore(spark, dir), version)
 
   /** q168 retention horizon: time travel below it is given up by the
     * vacuum; reads at/after it are byte-identical. */
@@ -187,11 +187,11 @@ object Sources {
     * count (spec-asserted: the vacuumed store lists only
     * {horizon..latest}). */
   private[graft] def vacuumedStore(spark: SparkSession, dir: String,
-      horizon: Int = VacuumHorizon): String =
+      horizon: Int = VacuumHorizon): Artifact =
     // keyed by horizon too: a cached horizon-2 store must never be
     // handed to a caller asking for horizon 1 (silent wrong artifact)
     graft.SessionRegistry.artifact(spark, "vacuumed", (dir, horizon)) { base =>
-      val src = spark.read.parquet(versionedStore(spark, dir))
+      val src = versionedStore(spark, dir).read()
       graft.Tables.writePartitionedKeepSchema(lwwRows(src, horizon)
         .filter(col("op") === "upsert") // tombstone removal
         .select(col("doc_id"), col("text"), col("op"), col("src_version"),
@@ -214,7 +214,7 @@ object Sources {
     * at/after the horizon are unchanged, files below it are gone"
     * contract. */
   def vacuumRead(spark: SparkSession, dir: String): DataFrame =
-    readVersionFrom(spark, vacuumedStore(spark, dir), 3)
+    readVersionFrom(vacuumedStore(spark, dir), 3)
       .orderBy(col("doc_id"))
 
   /** q180: CHUNK-INDEX DELTA under store revisions — incremental
@@ -238,12 +238,12 @@ object Sources {
     * sides from the raw corpus with the store's %-rules (q165's
     * pattern) through the SAME generated chunk CTE as q175/q176. */
   def chunkDelta(spark: SparkSession, dir: String): DataFrame = {
-    val base = versionedStore(spark, dir)
-    val deltaIds = spark.read.parquet(base)
+    val store = versionedStore(spark, dir)
+    val deltaIds = store.read()
       .filter(col("version") === 2)
       .select(col("doc_id")).distinct()
     def restricted(version: Int) =
-      lwwRows(spark.read.parquet(base)
+      lwwRows(store.read()
           .join(broadcast(deltaIds), Seq("doc_id")), version)
         .filter(col("op") === "upsert")
         .select(col("doc_id"), col("text"))
@@ -300,9 +300,9 @@ object Sources {
     * row-local anti-filter (an explicit forget list would be a
     * broadcast anti-join of a request-bounded table), partitioned
     * write; no shuffle at all. */
-  private[graft] def erasedStore(spark: SparkSession, dir: String): String =
+  private[graft] def erasedStore(spark: SparkSession, dir: String): Artifact =
     graft.SessionRegistry.artifact(spark, "erased", dir) { base =>
-      val src = spark.read.parquet(versionedStore(spark, dir))
+      val src = versionedStore(spark, dir).read()
       graft.Tables.writePartitionedKeepSchema(src.filter(!isForgotten)
         .select(col("doc_id"), col("text"), col("op"), col("src_version"),
           col("version")),
@@ -321,13 +321,13 @@ object Sources {
     * rows (commit count is bounded — the loop is plan metadata, not
     * data). */
   def forgetAudit(spark: SparkSession, dir: String): DataFrame = {
-    val orig = spark.read.parquet(versionedStore(spark, dir))
-    val erasedBase = erasedStore(spark, dir)
+    val orig = versionedStore(spark, dir).read()
+    val erased = erasedStore(spark, dir)
     val purged = orig.groupBy(col("version").cast("long").as("version"))
       .agg(sum(when(isForgotten, 1L).otherwise(0L)).as("n_purged"),
         sum(when(!isForgotten, 1L).otherwise(0L)).as("n_retained"))
     val live = (1 to 3).map { v =>
-      readVersionFrom(spark, erasedBase, v)
+      readVersionFrom(erased, v)
         .agg(count(lit(1)).as("n_live"),
           coalesce(sum(when(isForgotten, 1L).otherwise(0L)), lit(0L))
             .as("n_forgotten_visible"))
@@ -390,7 +390,7 @@ object Sources {
     * column is an exact long. */
   def storeGrowth(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val store = spark.read.parquet(versionedStore(spark, dir))
+    val store = versionedStore(spark, dir).read()
     val versions = (1 to StoreVersions).map(_.toLong)
     val commits = store.groupBy(col("version").cast("long").as("version"))
       .agg(count(lit(1)).as("n_commit_rows"),
@@ -451,7 +451,7 @@ object Sources {
     * with the store's %-rules (the verified q164/q168 pattern)
     * through the SAME generated signal/rule fragments (lever (t)). */
   def storeQualityDrift(spark: SparkSession, dir: String): DataFrame = {
-    val store = spark.read.parquet(versionedStore(spark, dir))
+    val store = versionedStore(spark, dir).read()
     val versions = (1 to StoreVersions).map(_.toLong)
     val sig = store.select(Seq(col("doc_id"),
       col("version").cast("long").as("version"), col("op")) ++

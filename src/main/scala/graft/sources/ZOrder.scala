@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.SessionRegistry.Artifact
 import graft.Tables
 
 /** q132: Z-order (Morton-curve) clustered write layout — the
@@ -85,7 +86,7 @@ object ZOrder {
     * layout plus a time-sorted control layout written from the SAME
     * frame (the control is what a reasonable single-dimension ingest
     * would produce — the skipping spec measures z against it). */
-  private[graft] def layouts(spark: SparkSession, dir: String): String =
+  private[graft] def layouts(spark: SparkSession, dir: String): Artifact =
     graft.SessionRegistry.artifact(spark, "zorder", dir) { base =>
       val (umin, umax, tmin, tmax) = stats(spark, dir)
       val ev = eventsWithSec(spark, dir)
@@ -125,7 +126,7 @@ object ZOrder {
     * (SourcesSkewSpec measures the merged layout). This is the
     * steady-state write side of the layout, the same role q109 plays
     * for the curated funnel. */
-  private[graft] def appendedLayout(spark: SparkSession, dir: String): String =
+  private[graft] def appendedLayout(spark: SparkSession, dir: String): Artifact =
     graft.SessionRegistry.artifact(spark, "zappend", dir) { base =>
       val ev = eventsWithSec(spark, dir)
       val store = ev.filter(!eventBatchPredicate)
@@ -152,9 +153,8 @@ object ZOrder {
     * answer hash-matches q132's oracle on the original table —
     * read-back fidelity of the incremental write path). */
   def zorderAppendScan(spark: SparkSession, dir: String): DataFrame = {
-    val base = appendedLayout(spark, dir)
     val (ulo, uhi, tlo, thi) = box(spark, dir)
-    spark.read.parquet(s"$base/merged")
+    appendedLayout(spark, dir).read("merged")
       .filter(col("user_id").between(ulo, uhi) &&
         col("sec").between(tlo, thi))
       .groupBy(col("event_type"))
@@ -171,9 +171,8 @@ object ZOrder {
     * the re-layout is content-preserving; the skipping win is
     * measured separately in SourcesSkewSpec. */
   def zorderScan(spark: SparkSession, dir: String): DataFrame = {
-    val base = layouts(spark, dir)
     val (ulo, uhi, tlo, thi) = box(spark, dir)
-    spark.read.parquet(s"$base/z")
+    layouts(spark, dir).read("z")
       .filter(col("user_id").between(ulo, uhi) &&
         col("sec").between(tlo, thi))
       .groupBy(col("event_type"))

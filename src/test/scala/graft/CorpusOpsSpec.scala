@@ -147,7 +147,7 @@ class CorpusOpsSpec extends AnyFunSuite {
     // a per-source consumer must touch ONE partition directory
     val someSource = sink.head.getString(0)
     val plan = spark.read.parquet(
-      CorpusOps.curatedSinkDir(spark, sf).get)
+      SessionRegistry.builtArtifact(spark, "curated", sf).map(_.path).get)
       .filter(col("source") === someSource)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [isnotnull(source"), plan)
@@ -175,7 +175,7 @@ class CorpusOpsSpec extends AnyFunSuite {
     // a per-source consumer of the merged layout touches ONE partition
     val someSource = merged.keySet.min
     val plan = spark.read.parquet(
-      CorpusOps.curatedAppendDir(spark, sf).get)
+      SessionRegistry.builtArtifact(spark, "curated_append", sf).map(_.path).get)
       .filter(col("source") === someSource)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [isnotnull(source"), plan)
@@ -194,8 +194,10 @@ class CorpusOpsSpec extends AnyFunSuite {
           p.substring(p.lastIndexOf('=') + 1) -> n
         }.toMap
     }
-    val srcFiles = parquetFiles(CorpusOps.curatedAppendDir(spark, sf).get)
-    val cpFiles = parquetFiles(CorpusOps.compactedDir(spark, sf).get)
+    val srcFiles = parquetFiles(
+      SessionRegistry.builtArtifact(spark, "curated_append", sf).map(_.path).get)
+    val cpFiles = parquetFiles(
+      SessionRegistry.builtArtifact(spark, "curated_compact", sf).map(_.path).get)
     assert(cpFiles.keySet == srcFiles.keySet)
     cpFiles.foreach { case (src, n) =>
       assert(n == 1, s"partition $src has $n files after compaction")

@@ -60,8 +60,8 @@ class DedupSpec extends AnyFunSuite {
         }.toMap
     }
     // both layouts' dirs come from the registry
-    val compacted = SimilaritySearch.compactedIndexDir(spark, sf).get
-    val src = SessionRegistry.builtArtifact(spark, "ivfpq_upsert", sf).get
+    val compacted = SessionRegistry.builtArtifact(spark, "ivfpq_compact", sf).map(_.path).get
+    val src = SessionRegistry.builtArtifact(spark, "ivfpq_upsert", sf).map(_.path).get
     val (srcFiles, cpFiles) = (files(src), files(compacted))
     assert(cpFiles.keySet == srcFiles.keySet)
     cpFiles.foreach { case (cell, n) => assert(n == 1, s"cell $cell has $n files") }

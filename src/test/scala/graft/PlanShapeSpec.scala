@@ -530,7 +530,7 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("q168 vacuumed-store reads stay partition-pruned") {
     val base = graft.sources.Sources.vacuumedStore(spark, sf)
-    val p = plan(graft.sources.Sources.readVersionFrom(spark, base, 2))
+    val p = plan(graft.sources.Sources.readVersionFrom(base, 2))
     assert(p.contains("PartitionFilters") && p.contains("version"), p)
   }
 

@@ -165,7 +165,7 @@ class PropertySpec extends AnyFunSuite {
     assert(SessionRegistry.liveKeyCount(spark) > 0)
     // the pair artifact is on DISK and must die with its entry
     val pairDir = java.nio.file.Paths.get(
-      SessionRegistry.builtArtifact(spark, "pairs", sf).get)
+      SessionRegistry.builtArtifact(spark, "pairs", sf).get.path)
     assert(java.nio.file.Files.isDirectory(pairDir), "pair disk artifact missing before evict")
     // drive the listener body directly — stopping the suite's shared
     // context would kill every other test; the listener is one line

@@ -185,13 +185,13 @@ class RecModelsSpec extends AnyFunSuite {
     val fit = MlOps.gcmcFitFor(spark, sf)
     val feats = MlOps.gcmcItemFeatures(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
-    val qI = fit.qI(spark).collect()
+    val qI = fit.qI.collect()
       .map(r => r.getInt(0).toLong -> r.getSeq[Float](1).map(_.toDouble).toArray).toMap
-    val biM = fit.bi(spark).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val buM = fit.bu(spark).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val pUM = fit.pU(spark).collect()
+    val biM = fit.bi.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val buM = fit.bu.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val pUM = fit.pU.collect()
       .map(r => r.getInt(0).toLong -> r.getSeq[Float](1).map(_.toDouble).toArray).toMap
-    val convM = fit.convU(spark).collect()
+    val convM = fit.convU.collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
     val d = MlOps.GcmcFeatDim; val k = MlOps.GcmcRank
     val warmIds = (feats.keySet & qI.keySet & biM.keySet).toSeq.sorted
@@ -238,15 +238,15 @@ class RecModelsSpec extends AnyFunSuite {
     val out = MlOps.gcmcFeatures(spark, sf).collect()
     assert(out.length == 10) // 4 users + 3 warm + 3 cold items
     val fit = MlOps.gcmcFitFor(spark, sf)
-    val qI = fit.qI(spark).collect()
+    val qI = fit.qI.collect()
       .map(r => r.getInt(0).toLong -> r.getSeq[Float](1).map(_.toDouble).toArray).toMap
-    val pUM = fit.pU(spark).collect()
+    val pUM = fit.pU.collect()
       .map(r => r.getInt(0).toLong -> r.getSeq[Float](1).map(_.toDouble).toArray).toMap
-    val convM = fit.convU(spark).collect()
+    val convM = fit.convU.collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
     val feats = MlOps.gcmcItemFeatures(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
-    val biM = fit.bi(spark).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val biM = fit.bi.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val d = MlOps.GcmcFeatDim; val k = MlOps.GcmcRank
     def dot(a: Array[Double], b: Array[Double]): Double = {
       var s = 0.0; var i = 0

@@ -29,9 +29,9 @@ class SourcesSkewSpec extends AnyFunSuite {
   test("partitioned sink: filtered read prunes to matching partitions") {
     import org.apache.spark.sql.functions._
     Sources.partitionedSink(spark, sf) // the write happens eagerly here
-    val base = SessionRegistry.builtArtifact(spark, "part", sf).get
+    val part = SessionRegistry.builtArtifact(spark, "part", sf).get
     // assert pruning on the PRODUCT read path, not a hand-built query
-    val product = Sources.partitionedRead(spark, base)
+    val product = Sources.partitionedRead(part)
     val plan = product.queryExecution.executedPlan.toString
     assert(plan.contains("IN (click,purchase)") &&
       plan.contains("PartitionFilters: [event_type"), plan)
@@ -185,7 +185,7 @@ class SourcesSkewSpec extends AnyFunSuite {
   test("z-order layout: box query intersects fewer row-group stat ranges than the time-sorted control") {
     import scala.jdk.CollectionConverters._
     import graft.sources.ZOrder
-    val base = ZOrder.layouts(spark, sf)
+    val base = ZOrder.layouts(spark, sf).path
     val (ulo, uhi, tlo, thi) = ZOrder.box(spark, sf)
     // count row groups whose [min,max] column stats CAN contain box
     // rows — exactly the set a stats-driven reader must fetch
@@ -221,7 +221,7 @@ class SourcesSkewSpec extends AnyFunSuite {
     // the incremental append (q134): store z-files + batch delta
     // z-files keyed with the store's frozen grid — skipping must
     // survive the append without a store rewrite
-    val merged = graft.sources.ZOrder.appendedLayout(spark, sf)
+    val merged = graft.sources.ZOrder.appendedLayout(spark, sf).path
     val (aHit, aTot) = intersecting(s"$merged/merged")
     assert(aTot > zTot, s"append produced no delta files: $aTot vs $zTot")
     assert(aHit.toDouble / aTot <= 0.35, s"appended layout stopped skipping: $aHit/$aTot")
@@ -287,7 +287,7 @@ class SourcesSkewSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     def key(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getAs[Number]("since_version").longValue, r.getString(2))
-    val orig = graft.sources.Sources.versionedStore(spark, sf)
+    val orig = graft.sources.Sources.versionedStore(spark, sf).path
     val vac = graft.sources.Sources.vacuumedStore(spark, sf)
     def versionsOf(base: String) =
       new java.io.File(base).listFiles().filter(_.isDirectory)
@@ -295,18 +295,18 @@ class SourcesSkewSpec extends AnyFunSuite {
     // commit partitions below the horizon are physically gone; the
     // retained tail survives
     assert(versionsOf(orig) == Set("version=1", "version=2", "version=3"))
-    assert(versionsOf(vac) == Set("version=2", "version=3"))
+    assert(versionsOf(vac.path) == Set("version=2", "version=3"))
     // every read at/after the horizon is row-identical to the
     // unvacuumed store (since_version provenance included)
     for (v <- Seq(2, 3)) {
       val a = graft.sources.Sources.readVersion(spark, sf, v).collect().map(key).toSet
       val b = graft.sources.Sources
-        .readVersionFrom(spark, vac, v).collect().map(key).toSet
+        .readVersionFrom(vac, v).collect().map(key).toSet
       assert(a == b, s"as-of $v differs after vacuum")
     }
     // below the horizon, time travel is definitionally gone: no
     // commit files ≤ 1 remain, so the read is empty (never wrong)
-    assert(graft.sources.Sources.readVersionFrom(spark, vac, 1).count() == 0)
+    assert(graft.sources.Sources.readVersionFrom(vac, 1).count() == 0)
   }
 
   test("chunk delta: a revision rewrites at most its trailing chunk") {
@@ -364,12 +364,12 @@ class SourcesSkewSpec extends AnyFunSuite {
     // in the rewritten store carries a forgotten key — erasure
     // destroys history, not just visibility (the tombstone/time-travel
     // loophole is exactly what this closes)
-    val raw = spark.read.parquet(erased)
+    val raw = spark.read.parquet(erased.path)
     assert(raw.filter(col("doc_id") % graft.sources.Sources.ForgetMod
       === graft.sources.Sources.ForgetRem).count() == 0)
     // all three commit partitions survive (erasure rewrites, never
     // truncates retention)
-    val versions = new java.io.File(erased).listFiles().filter(_.isDirectory)
+    val versions = new java.io.File(erased.path).listFiles().filter(_.isDirectory)
       .map(_.getName).filter(_.startsWith("version=")).toSet
     assert(versions == Set("version=1", "version=2", "version=3"))
     // every as-of read equals the original store MINUS the forget
@@ -380,7 +380,7 @@ class SourcesSkewSpec extends AnyFunSuite {
         .filter(!(col("doc_id") % graft.sources.Sources.ForgetMod
           === graft.sources.Sources.ForgetRem))
         .collect().map(key).toSet
-      val got = graft.sources.Sources.readVersionFrom(spark, erased, v)
+      val got = graft.sources.Sources.readVersionFrom(erased, v)
         .collect().map(key).toSet
       assert(got == expected, s"as-of $v differs after erasure")
     }
