@@ -5,7 +5,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.graftshim.{ColumnShim, LocalDirShim}
+import org.apache.spark.sql.graftshim.{ColumnShim, HeldShim, LocalDirShim}
+import org.apache.spark.storage.StorageLevel
 
 import scala.collection.concurrent.TrieMap
 
@@ -25,6 +26,10 @@ import scala.collection.concurrent.TrieMap
   * runs at most once even under concurrent first access (per-key
   * lazy slot), because builders here side-effect (they write disk
   * artifacts) and a double-run would do the work twice.
+  *
+  * The one place that persists: [[persisting]] for frames read inside
+  * one call, [[artifact]] and [[held]] for state reused across calls
+  * (neither in Spark's cache manager, so `clearCache()` keeps them).
   */
 object SessionRegistry {
   /** Declared ceiling for any COLLECTED-ROWS registry entry (mad
@@ -90,8 +95,10 @@ object SessionRegistry {
     * one plan may read a table twice (a self-join). An artifact's
     * files never change once published, so the held listing stays
     * true for the handle's life. */
-  final class Artifact private[SessionRegistry] (spark: SparkSession, val path: String) {
+  final class Artifact private[SessionRegistry] (spark: SparkSession, val path: String,
+      held: Map[String, LogicalPlan] = Map.empty) {
     private val tables = TrieMap.empty[String, Slot[LogicalPlan]]
+    held.foreach { case (sub, plan) => tables.put(sub, new Slot(() => plan)) }
     def read(sub: String = ""): DataFrame = {
       val slot = new Slot[LogicalPlan](() =>
         ColumnShim.analyzed(spark.read.parquet(if (sub.isEmpty) path else s"$path/$sub")))
@@ -119,6 +126,49 @@ object SessionRegistry {
       write(path)
       new Artifact(spark, path)
     })
+
+  /** The in-memory artifact `name` for `key`, for small serving state
+    * probed per request: `build`'s tables, materialized once per
+    * session into persisted RDDs behind a `LogicalRDD` and read with
+    * [[Artifact.read]]. A lost block recomputes from lineage (a local
+    * checkpoint would fail every later read). `build`'s scope lasts
+    * until the tables are materialized. */
+  def held(spark: SparkSession, name: String, key: Any)(
+      build: Scope => Seq[(String, DataFrame)]): Artifact =
+    artifacts.getOrElseUpdate((spark, name, key), persisting { scope =>
+      val rdds = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
+      try new Artifact(spark, "", build(scope).map { case (sub, df) =>
+        val rows = HeldShim.rows(df).persist(StorageLevel.MEMORY_AND_DISK)
+        rdds += rows
+        sub -> HeldShim.relation(df, rows,
+          rows.mapPartitions(it => Iterator(HeldShim.bytes(it))).fold(0L)(_ + _))
+      }.toMap)
+      catch { case e: Throwable => rdds.foreach(_.unpersist(blocking = false)); throw e }
+    })
+
+  /** The frames one [[persisting]] block has persisted. */
+  final class Scope private[SessionRegistry] () {
+    private val frames = new java.util.concurrent.ConcurrentLinkedDeque[DataFrame]()
+    /** `df`, persisted until the block exits. */
+    def persisted(df: DataFrame): DataFrame = {
+      frames.push(df.persist())
+      df
+    }
+    private[SessionRegistry] def release(): Unit =
+      frames.forEach(_.unpersist(blocking = false)) // newest first
+  }
+
+  /** `body` with a [[Scope]] whose frames are unpersisted when `body`
+    * returns or throws: every read of them (a write, a fit, a collect)
+    * runs inside; a plan returned past the block would recompute them. */
+  def persisting[T](body: Scope => T): T = {
+    val scope = new Scope
+    try body(scope) finally scope.release()
+  }
+
+  /** [[persisting]] for one frame: `use(df persisted)`. */
+  def withPersisted[T](df: DataFrame)(use: DataFrame => T): T =
+    persisting(scope => use(scope.persisted(df)))
 
   /** The artifact if this session has built it (spec hooks). */
   def builtArtifact(spark: SparkSession, name: String, key: Any): Option[Artifact] =

@@ -11,7 +11,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.LocalDirShim
 
-import graft.SessionRegistry.Artifact
+import graft.SessionRegistry.{Artifact, Scope, persisting, withPersisted}
 import graft.Tables
 import graft.functions.TextFns
 
@@ -58,7 +58,10 @@ object MlOps {
     * the full corpus is only TRANSFORMED (distributed broadcast
     * lookup). At or under the cap (sf0.001/sf0.01 — the oracle-gate
     * scales) the sample is the whole corpus, so nothing changes
-    * there; the count is one bounded scalar per registry fit. */
+    * there; the count is one bounded scalar per registry fit. MLlib
+    * Word2Vec reads its fit input twice (learnVocab + the sentence
+    * build), so each fit runs `withPersisted` on it: one tokenize,
+    * released when the fit returns (model bytes unchanged). */
   private val W2vFitDocCap = 1000L
   private def w2vFitInput(spark: SparkSession, dir: String): DataFrame = {
     val docs = tokenized(spark, dir)
@@ -70,24 +73,10 @@ object MlOps {
     }
   }
 
-  /** Fit with the INPUT frame cached for the fit's duration (opt
-    * r09): MLlib Word2Vec consumes its input in TWO passes (learnVocab
-    * + the sentence build feeding doFit), so an uncached fit input
-    * re-runs the corpus count + tokenize (+ the interpreted
-    * gram/doc-token augmentation lambdas for the joint fits) once per
-    * pass. The frame is fit-sample-bounded (≤ W2vFitDocCap docs) by
-    * construction and unpersisted as soon as the fit returns — the
-    * trained model holds no reference to it. Model bytes are
-    * UNCHANGED (same rows in, same seed). */
-  private def fitCached[M](input: DataFrame)(fit: DataFrame => M): M = {
-    val cached = input.persist()
-    try fit(cached) finally cached.unpersist()
-  }
-
   private def word2vecModel(spark: SparkSession, dir: String,
       vectorSize: Int): org.apache.spark.ml.feature.Word2VecModel =
     w2vCache.getOrElseUpdate((spark, dir, vectorSize),
-      fitCached(w2vFitInput(spark, dir))(
+      withPersisted(w2vFitInput(spark, dir))(
         new Word2Vec()
           .setInputCol("tokens").setOutputCol("vec")
           .setVectorSize(vectorSize).setMinCount(5).setSeed(42L)
@@ -150,7 +139,7 @@ object MlOps {
   private[graft] def fastTextModel(spark: SparkSession,
       dir: String): org.apache.spark.ml.feature.Word2VecModel =
     ftCache.getOrElseUpdate((spark, dir),
-      fitCached(w2vFitInput(spark, dir).select(
+      withPersisted(w2vFitInput(spark, dir).select(
           flatten(transform(col("tokens"),
             w => concat(array(w), ftGrams(w)))).as("tokens")))(
         new Word2Vec()
@@ -233,7 +222,7 @@ object MlOps {
   private[graft] def doc2vecModel(spark: SparkSession,
       dir: String): org.apache.spark.ml.feature.Word2VecModel =
     d2vCache.getOrElseUpdate((spark, dir),
-      fitCached(w2vFitInput(spark, dir).select(
+      withPersisted(w2vFitInput(spark, dir).select(
           flatten(transform(col("tokens"), (w, i) =>
             when(pmod(i, lit(D2vStride)) === 0,
               array(concat(lit("@"), col("doc_id")), w))
@@ -438,7 +427,8 @@ object MlOps {
     * and served as collected rows thereafter — immune to a caller's
     * clearCache() and to re-execution cost. Only
     * experiments whose output is a bounded eval/summary table go
-    * through here; corpus-shaped outputs never do. */
+    * through here; corpus-shaped outputs never do. `run` gets a
+    * persisting scope that lasts until its output is collected. */
   private val expCache = graft.SessionRegistry.cache[(SparkSession, String, String),
     (org.apache.spark.sql.types.StructType, java.util.List[org.apache.spark.sql.Row])]()
 
@@ -448,9 +438,9 @@ object MlOps {
     expCache.liveValues(spark).map(_._2.size)
 
   private def experiment(spark: SparkSession, dir: String, name: String)(
-      run: => DataFrame): DataFrame = {
-    val (schema, rows) = expCache.getOrElseUpdate((spark, dir, name), {
-      val df = run
+      run: Scope => DataFrame): DataFrame = {
+    val (schema, rows) = expCache.getOrElseUpdate((spark, dir, name), persisting { scope =>
+      val df = run(scope)
       (df.schema, java.util.Arrays.asList(df.collect(): _*))
     })
     spark.createDataFrame(rows, schema)
@@ -460,7 +450,7 @@ object MlOps {
     * .py) → MLlib FMRegressor on the embeddings table (label as
     * regression target); output = one eval-summary row. */
   def fmRegression(spark: SparkSession, dir: String): DataFrame =
-    experiment(spark, dir, "q53")(fmRegressionRun(spark, dir))
+    experiment(spark, dir, "q53")(_ => fmRegressionRun(spark, dir))
 
   /** Uniform loud empty-fit guard for the embeddings-backed
     * experiment runs — otherwise an empty corpus surfaces as opaque
@@ -496,7 +486,7 @@ object MlOps {
     * the reference's calculate_auc (model/utils.py:9, sklearn
     * roc_curve+auc) as MLlib's distributed areaUnderROC. */
   def binaryClassify(spark: SparkSession, dir: String): DataFrame =
-    experiment(spark, dir, "q58")(binaryClassifyRun(spark, dir))
+    experiment(spark, dir, "q58")(_ => binaryClassifyRun(spark, dir))
 
   private def binaryClassifyRun(spark: SparkSession, dir: String): DataFrame = {
     requireFit(spark, dir, "binary classification fit (q58)")
@@ -535,7 +525,7 @@ object MlOps {
     * scores the full corpus row-locally, which is q72/q85's existing
     * admission path with learned weights). */
   def qualityClassifier(spark: SparkSession, dir: String): DataFrame =
-    experiment(spark, dir, "q222")(qualityClassifierRun(spark, dir))
+    experiment(spark, dir, "q222")(qualityClassifierRun(spark, dir, _))
 
   /** The q215 seed set as (features, label, doc_id) — ONE def for
     * the q222 fit/eval and q223's model registry. */
@@ -578,10 +568,11 @@ object MlOps {
       dropSummary(new LogisticRegression().setMaxIter(20).setRegParam(0.01).fit(train))
     })
 
-  private def qualityClassifierRun(spark: SparkSession, dir: String): DataFrame = {
+  private def qualityClassifierRun(spark: SparkSession, dir: String,
+      scope: Scope): DataFrame = {
     import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
     // seed-table-bounded; feeds the fit and the holdout transform
-    val data = qualitySeed(spark, dir).persist()
+    val data = scope.persisted(qualitySeed(spark, dir))
     data.count()
     val test = data.filter(pmod(col("doc_id"), lit(5)) === 0)
     val model = qualityModelFrom(spark, dir, data)
@@ -594,10 +585,7 @@ object MlOps {
         sum(when(col("prediction") === col("label"), 1L).otherwise(0L)).as("n_correct"))
       .withColumn("auc", lit(auc))
       .orderBy(col("label"))
-    val res = spark.createDataFrame(
-      java.util.Arrays.asList(out.collect(): _*), out.schema)
-    data.unpersist()
-    res
+    out
   }
 
   /** q230: CALIBRATION CURVE of the learned quality filter — the
@@ -612,12 +600,12 @@ object MlOps {
     * lever-(j) experiment registry. Completes the learned-filter
     * loop q215 → q222 → q230 → q223. */
   def classifierCalibration(spark: SparkSession, dir: String): DataFrame =
-    experiment(spark, dir, "q230")(classifierCalibrationRun(spark, dir))
+    experiment(spark, dir, "q230")(classifierCalibrationRun(spark, dir, _))
 
   private def classifierCalibrationRun(spark: SparkSession,
-      dir: String): DataFrame = {
+      dir: String, scope: Scope): DataFrame = {
     // seed-table-bounded; feeds the fit and the holdout transform
-    val data = qualitySeed(spark, dir).persist()
+    val data = scope.persisted(qualitySeed(spark, dir))
     data.count()
     val test = data.filter(pmod(col("doc_id"), lit(5)) === 0)
     val model = qualityModelFrom(spark, dir, data)
@@ -631,10 +619,7 @@ object MlOps {
         round(avg(col("label")), 6).as("pos_rate"))
       .withColumn("gap", round(abs(col("mean_pred") - col("pos_rate")), 6))
       .orderBy(col("decile"))
-    val res = spark.createDataFrame(
-      java.util.Arrays.asList(out.collect(): _*), out.schema)
-    data.unpersist()
-    res
+    out
   }
 
   /** q223: LEARNED-FILTER ADMISSION — q222's model DEPLOYED over the
@@ -689,7 +674,7 @@ object MlOps {
     * deterministic key-hash split; output = per-label test counts and
     * hits. */
   def classify(spark: SparkSession, dir: String): DataFrame =
-    experiment(spark, dir, "q54")(classifyRun(spark, dir))
+    experiment(spark, dir, "q54")(_ => classifyRun(spark, dir))
 
   private def classifyRun(spark: SparkSession, dir: String): DataFrame = {
     requireFit(spark, dir, "classification fit (q54)")
@@ -716,7 +701,7 @@ object MlOps {
     * calculate_word_item_similarity.py:52), label = same class.
     * Output = one eval-summary row. */
   def pairwiseSimilarity(spark: SparkSession, dir: String): DataFrame =
-    experiment(spark, dir, "q43")(pairwiseSimilarityRun(spark, dir))
+    experiment(spark, dir, "q43")(_ => pairwiseSimilarityRun(spark, dir))
 
   private def pairwiseSimilarityRun(spark: SparkSession, dir: String): DataFrame = {
     requireFit(spark, dir, "pairwise-similarity fit (q43)")
@@ -775,9 +760,10 @@ object MlOps {
     // seed-fixed fit + eval with a |words|×5-row output → trained-
     // experiment registry (lever (j)); each warm call was re-running
     // the LBFGS fit and the corpus prequery (~1.9 s at sf0.1)
-    experiment(spark, dir, "q45")(wordItemSearchRun(spark, dir))
+    experiment(spark, dir, "q45")(wordItemSearchRun(spark, dir, _))
 
-  private def wordItemSearchRun(spark: SparkSession, dir: String): DataFrame = {
+  private def wordItemSearchRun(spark: SparkSession, dir: String,
+      scope: Scope): DataFrame = {
     import spark.implicits._
     val docs = tokenized(spark, dir)
     val w2v = word2vecModel(spark, dir, 16)
@@ -802,14 +788,11 @@ object MlOps {
     // ONCE (fit + transform would otherwise each recompute it), and
     // repartition(1) — a shuffle barrier, so the prequery above it
     // stays parallel — makes each LBFGS iteration a single task
-    // instead of one per shuffle partition. The cache is NOT
-    // unpersisted: the returned plan still reads it lazily, and its
-    // size is k·|words| rows — bounded and scale-independent.
-    val training = feats.join(labels, Seq("doc_id"))
+    // instead of one per shuffle partition.
+    val training = scope.persisted(feats.join(labels, Seq("doc_id"))
       .withColumn("label", when(array_contains(col("tokens"), col("word")), 1.0).otherwise(0.0))
       .drop("tokens")
-      .repartition(1)
-      .persist()
+      .repartition(1))
     val model = dropSummary(new LogisticRegression().setMaxIter(10).setRegParam(0.01)
       .fit(training))
     model.transform(training)
@@ -849,7 +832,7 @@ object MlOps {
     * TrainValidationSplit over LR regParam; output one row per
     * candidate with its validation metric. */
   def cvTuning(spark: SparkSession, dir: String): DataFrame =
-    experiment(spark, dir, "q57")(cvTuningRun(spark, dir))
+    experiment(spark, dir, "q57")(_ => cvTuningRun(spark, dir))
 
   private def cvTuningRun(spark: SparkSession, dir: String): DataFrame = {
     requireFit(spark, dir, "CV tuning fits (q57)")
@@ -891,9 +874,10 @@ object MlOps {
     * mitigation) and persisted across all rungs. Output = one row
     * per (rung, candidate) with its metric and survival. */
   def adaptiveTuning(spark: SparkSession, dir: String): DataFrame =
-    experiment(spark, dir, "q108")(adaptiveTuningRun(spark, dir))
+    experiment(spark, dir, "q108")(adaptiveTuningRun(spark, dir, _))
 
-  private def adaptiveTuningRun(spark: SparkSession, dir: String): DataFrame = {
+  private def adaptiveTuningRun(spark: SparkSession, dir: String,
+      scope: Scope): DataFrame = {
     requireFit(spark, dir, "adaptive tuning fits (q108)")
     import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
     import scala.concurrent.{Await, ExecutionContext, Future}
@@ -906,8 +890,8 @@ object MlOps {
     // so q57's grid metrics and these are on one scale (the spec
     // compares them within ε)
     val Array(trainRaw, validRaw) = data.randomSplit(Array(0.8, 0.2), 42L)
-    val train = trainRaw.repartition(1).persist()
-    val valid = validRaw.repartition(1).persist()
+    val train = scope.persisted(trainRaw.repartition(1))
+    val valid = scope.persisted(validRaw.repartition(1))
     val rnd = new scala.util.Random(42L)
     // (id, regParam ∈ 10^[-4, 0] log-uniform, elasticNet ∈ [0, 1]
     // biased low — L1 is rarely the winner but worth probing). Two
@@ -947,8 +931,6 @@ object MlOps {
       }
       alive = alive.filter(c => keep.contains(c._1))
     }
-    train.unpersist(blocking = false)
-    valid.unpersist(blocking = false)
     rows.toSeq
       .map { case (rung, id, reg, el, iters, acc, kept) =>
         (rung, id, math.rint(reg * 1e6) / 1e6, math.rint(el * 1e6) / 1e6,
@@ -1007,9 +989,9 @@ object MlOps {
     (set.count(_ == c) + 1.0) / (set.size + TpeFamilies.size)
 
   def tpeTuning(spark: SparkSession, dir: String): DataFrame =
-    experiment(spark, dir, "q169")(tpeTuningRun(spark, dir))
+    experiment(spark, dir, "q169")(tpeTuningRun(spark, dir, _))
 
-  private def tpeTuningRun(spark: SparkSession, dir: String): DataFrame = {
+  private def tpeTuningRun(spark: SparkSession, dir: String, scope: Scope): DataFrame = {
     requireFit(spark, dir, "TPE tuning fits (q169)")
     import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
     import spark.implicits._
@@ -1018,8 +1000,8 @@ object MlOps {
         col("label").cast("double").as("label"))
     // q108's exact split, so all three searches score on one scale
     val Array(trainRaw, validRaw) = data.randomSplit(Array(0.8, 0.2), 42L)
-    val train = trainRaw.repartition(1).persist()
-    val valid = validRaw.repartition(1).persist()
+    val train = scope.persisted(trainRaw.repartition(1))
+    val valid = scope.persisted(validRaw.repartition(1))
     val evaluator = new MulticlassClassificationEvaluator().setMetricName("accuracy")
     def evalAt(fam: String, logReg: Double, el: Double): Double = {
       val est: org.apache.spark.ml.Estimator[_] = fam match {
@@ -1084,8 +1066,6 @@ object MlOps {
       }
       trials += ((t, cf, c1, c2, evalAt(cf, c1, c2)))
     }
-    train.unpersist(blocking = false)
-    valid.unpersist(blocking = false)
     var best = 0.0
     trials.toSeq.map { case (id, fam, u1, u2, acc) =>
       best = math.max(best, acc)
@@ -1218,7 +1198,7 @@ object MlOps {
     // holds 25 rows, not the corpus-scaled pair table (collecting the
     // full pair list was linear-in-corpus — against the registry's
     // scalar-output rule — and re-sorted it per rep)
-    experiment(spark, dir, "q64")(featureAggScored(spark, dir)
+    experiment(spark, dir, "q64")(_ => featureAggScored(spark, dir)
       .select(col("doc_a"), col("doc_b"), round(col("cos"), 6).as("cos"),
         round(col("sim"), 6).as("sim"), col("score"))
       .orderBy(col("sim").desc, col("doc_a"), col("doc_b"))
@@ -1263,9 +1243,10 @@ object MlOps {
     * plateau-escape role) and stops once patience is exhausted.
     * Output = one row per round plus the restored-best row. */
   def earlyStopTrain(spark: SparkSession, dir: String): DataFrame =
-    experiment(spark, dir, "q66")(earlyStopTrainRun(spark, dir))
+    experiment(spark, dir, "q66")(earlyStopTrainRun(spark, dir, _))
 
-  private def earlyStopTrainRun(spark: SparkSession, dir: String): DataFrame = {
+  private def earlyStopTrainRun(spark: SparkSession, dir: String,
+      scope: Scope): DataFrame = {
     requireFit(spark, dir, "early-stopping fits (q66)")
     import org.apache.spark.ml.classification.LogisticRegressionModel
     import spark.implicits._
@@ -1274,8 +1255,8 @@ object MlOps {
         pmod(col("label"), lit(2)).cast("double").as("label"), col("vec_id"))
     // one parquet scan each for the whole training loop (6 fits + a
     // validation aggregation per round would otherwise re-read)
-    val train = data.filter(pmod(col("vec_id"), lit(5)) =!= 0).persist()
-    val valid = data.filter(pmod(col("vec_id"), lit(5)) === 0).persist()
+    val train = scope.persisted(data.filter(pmod(col("vec_id"), lit(5)) =!= 0))
+    val valid = scope.persisted(data.filter(pmod(col("vec_id"), lit(5)) === 0))
     // a fresh path per call under the context's artifact root: two
     // concurrent runs must not overwrite each other's best checkpoint
     // (a plateau restore would load the other run's model)
@@ -1311,10 +1292,6 @@ object MlOps {
       rows += ((round.toLong, best.getMaxIter.toLong, best.getRegParam,
         logLoss(best), "restored"))
     } finally LocalDirShim.deleteRecursively(new java.io.File(ckpt))
-    // the loop is fully eager (every consumer of the cached splits has
-    // run), so the table-sized caches are released before returning
-    train.unpersist(blocking = false)
-    valid.unpersist(blocking = false)
     rows.toSeq
       .toDF("round", "max_iter", "reg_param", "val_logloss", "decision")
       .orderBy(col("round"))
@@ -1417,7 +1394,7 @@ object MlOps {
   private val gcmcFitCache = graft.SessionRegistry.cache[(SparkSession, String), GcmcFit]()
 
   private[graft] def gcmcFitFor(spark: SparkSession, dir: String): GcmcFit =
-    gcmcFitCache.getOrElseUpdate((spark, dir), gcmcFitRun(spark, dir))
+    gcmcFitCache.getOrElseUpdate((spark, dir), persisting(gcmcFitRun(spark, dir, _)))
 
   /** 60/20/20 fit / calibration / test on the deterministic key hash
     * — the single split def both the fit and the q107 eval consume. */
@@ -1441,10 +1418,10 @@ object MlOps {
       coalesce(graft.plans.VecExprs.dot(col("conv_u"), col("q_i")), lit(0.0)).as("f2"))
     .withColumn("resid", col("rating") - lit(mu) - col("b_u") - col("b_i"))
 
-  private def gcmcFitRun(spark: SparkSession, dir: String): GcmcFit = {
+  private def gcmcFitRun(spark: SparkSession, dir: String, scope: Scope): GcmcFit = {
     import org.apache.spark.ml.stat.Summarizer
     // ratings-slice-bounded; every fit stage below re-reads it
-    val r = gcmcSliced(spark, dir).persist()
+    val r = scope.persisted(gcmcSliced(spark, dir))
     val train = r.filter(col("slice") < 8) // fit ∪ calibration
     val fit = r.filter(col("slice") < 6)
     val cal = r.filter(col("slice") >= 6 && col("slice") < 8)
@@ -1454,11 +1431,11 @@ object MlOps {
     // every downstream pyramid (resid, conv, featured) — persist
     // or each action re-runs the ratings join+agg from scratch
     val mu = train.agg(avg(col("rating"))).head().getDouble(0)
-    val bu = train.groupBy(col("user"))
-      .agg((avg(col("rating")) - lit(mu)).as("b_u")).persist()
-    val bi = train.join(bu, Seq("user"))
+    val bu = scope.persisted(train.groupBy(col("user"))
+      .agg((avg(col("rating")) - lit(mu)).as("b_u")))
+    val bi = scope.persisted(train.join(bu, Seq("user"))
       .groupBy(col("item"))
-      .agg(avg(col("rating") - lit(mu) - col("b_u")).as("b_i")).persist()
+      .agg(avg(col("rating") - lit(mu) - col("b_u")).as("b_i")))
 
     // --- low-rank term: seed-fixed ALS on the fit slice's residuals ---
     val resid = fit.join(bu, Seq("user")).join(bi, Seq("item"))
@@ -1470,10 +1447,10 @@ object MlOps {
       .setRank(GcmcRank).setMaxIter(5).setRegParam(0.5).setSeed(42L)
       .setImplicitPrefs(false).setNumBlocks(4)
       .fit(resid)
-    val pU = als.userFactors.select(col("id").as("user"), col("features").as("p_u"))
-      .persist()
-    val qI = als.itemFactors.select(col("id").as("item"), col("features").as("q_i"))
-      .persist()
+    val pU = scope.persisted(
+      als.userFactors.select(col("id").as("user"), col("features").as("p_u")))
+    val qI = scope.persisted(
+      als.itemFactors.select(col("id").as("item"), col("features").as("q_i")))
 
     // --- conv term: q65's per-(user, class) neighborhood mean over
     //     FIT edges, collapsed class-balanced into one user vector ---
@@ -1484,8 +1461,8 @@ object MlOps {
       .join(qI, Seq("item"))
       .groupBy(col("user"), col("rating_class"))
       .agg(Summarizer.mean(array_to_vector(col("q_i"))).as("cv"))
-    val convU = classConv.groupBy(col("user"))
-      .agg(vector_to_array(Summarizer.mean(col("cv"))).as("conv_u")).persist()
+    val convU = scope.persisted(classConv.groupBy(col("user"))
+      .agg(vector_to_array(Summarizer.mean(col("cv"))).as("conv_u")))
 
     // exact least squares for (α, β) on the CALIBRATION slice (held
     // out from the ALS fit, so memorized residual noise can't buy
@@ -1509,7 +1486,6 @@ object MlOps {
       Seq("bu" -> bu, "bi" -> bi, "pU" -> pU, "qI" -> qI, "convU" -> convU)
         .foreach { case (n, df) => df.write.parquet(s"$base/$n") }
     }
-    Seq(bu, bi, pU, qI, convU, r).foreach(_.unpersist(blocking = false))
     GcmcFit(tables, mu, alpha, beta)
   }
 
@@ -1518,8 +1494,8 @@ object MlOps {
     val f = gcmcFitFor(spark, dir)
     val r = gcmcSliced(spark, dir)
     val featured = gcmcFeatured(f.mu, f.bu, f.bi, f.pU, f.qI, f.convU) _
-    val fcal = featured(r.filter(col("slice") >= 6 && col("slice") < 8)).persist()
-    val ftest = featured(r.filter(col("slice") >= 8)).persist()
+    val fcal = featured(r.filter(col("slice") >= 6 && col("slice") < 8))
+    val ftest = featured(r.filter(col("slice") >= 8))
 
     // both models' RMSE (and the row count) in ONE pass per split
     def rmses(side: DataFrame): (Long, Double, Double) = {
@@ -1540,7 +1516,6 @@ object MlOps {
       ("calibration", "gcmc_composed", nCal, calComp),
       ("test", "bias_baseline", nTest, testBias),
       ("test", "gcmc_composed", nTest, testComp))
-    Seq(fcal, ftest).foreach(_.unpersist(blocking = false))
     out
   }
 
@@ -1612,7 +1587,7 @@ object MlOps {
     * μ + b_u + b̂_i + α·⟨p_u, q̂_i⟩ + β·⟨conv_u, q̂_i⟩. Output is
     * roster-sized → the lever-(j) experiment registry. */
   def gcmcColdStart(spark: SparkSession, dir: String): DataFrame =
-    experiment(spark, dir, "gcmc_cold_start")(gcmcColdStartRun(spark, dir))
+    experiment(spark, dir, "gcmc_cold_start")(_ => gcmcColdStartRun(spark, dir))
 
   /** The exact least-squares feature→factor / feature→bias maps
     * learned on WARM items — ONE def shared by the q226 cold-start
@@ -1660,7 +1635,7 @@ object MlOps {
     * q226 least-squares feature map. Roster-sized → the lever-(j)
     * experiment registry. */
   def gcmcFeatures(spark: SparkSession, dir: String): DataFrame =
-    experiment(spark, dir, "gcmc_features")(gcmcFeaturesRun(spark, dir))
+    experiment(spark, dir, "gcmc_features")(_ => gcmcFeaturesRun(spark, dir))
 
   private def gcmcFeaturesRun(spark: SparkSession, dir: String): DataFrame = {
     val f = gcmcFitFor(spark, dir)

@@ -454,8 +454,8 @@ object CorpusOps {
         col("c.n_tok").as("n_tok"), col("c.fp").as("fp"))
 
   def cdcChunks(spark: SparkSession, dir: String): DataFrame = {
-    val ch = cdcChunkFrame(Tables.documents(spark, dir))
-      .persist() // chunk-table-sized; feeds both the copies agg and the join
+    // one fp exchange, shared by the copies agg and the join back
+    val ch = cdcChunkFrame(Tables.documents(spark, dir)).repartition(col("fp"))
     val copies = ch.groupBy(col("fp"))
       .agg(count(lit(1)).as("n_copies"),
         min(struct(col("doc_id"), col("chunk_idx"))).as("keeper"))
@@ -535,7 +535,8 @@ object CorpusOps {
       .join(Tables.documents(spark, dir).select(col("doc_id"), col("source")),
         Seq("doc_id"))
       .withColumn("fg", fg)
-      .persist() // chunk-table-sized; feeds the drop rollup and the fp agg
+      // one fp exchange, shared by the fp agg and the drop rollup
+      .repartition(col("fp"))
     val dropped = ch.filter(col("fg"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("chunks_dropped"),
@@ -569,12 +570,11 @@ object CorpusOps {
     * combines map-side. Keep-rule: first copy in (doc_id, chunk_idx)
     * order survives. */
   def chunkDedup(spark: SparkSession, dir: String): DataFrame = {
-    // persisted: the slim digest frame feeds BOTH the copies agg and
-    // the join back — without it the corpus text is scanned and
-    // chunk-hashed twice
+    // one chunk_hash exchange, shared by the copies agg and the join
+    // back: the corpus text is scanned and chunk-hashed once
     val ch = chunks(spark, dir)
       .select(col("doc_id"), col("source"), col("chunk_idx"), col("chunk_hash"))
-      .persist()
+      .repartition(col("chunk_hash"))
     val copies = ch.groupBy(col("chunk_hash"))
       .agg(count(lit(1)).as("n_copies"),
         min(struct(col("doc_id"), col("chunk_idx"))).as("keeper"))
@@ -634,8 +634,8 @@ object CorpusOps {
       |  FROM t, UNNEST(range(0, CAST(greatest(ceil((len(toks)-$WinSize)/$WinStride.0), 0) AS BIGINT)+1)) AS u(wi))""".stripMargin
 
   def windowDedup(spark: SparkSession, dir: String): DataFrame = {
-    val wins = windowDigests(spark, dir)
-      .persist() // slim; consumed by the shared-hash agg AND the join
+    // one wh exchange, shared by the shared-hash agg and the join
+    val wins = windowDigests(spark, dir).repartition(col("wh"))
     val shared = wins.groupBy(col("wh"))
       .agg(countDistinct(col("doc_id")).as("n_docs_with"))
     val perDoc = wins.join(shared, Seq("wh"))
@@ -804,15 +804,12 @@ object CorpusOps {
     * bigram count → broadcast. */
   private[graft] def bigramModel(model: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val mg = model.select(explode(WordNGrams(toks, 2, distinct = false)).as("g"))
-    // c2 persists and c1 folds out of it (opt r08): c1's count of
-    // first tokens over the raw gram stream == Σ c2 grouped by the
-    // bigram's first token (exact longs), so the model build costs
-    // ONE gram-explode pass instead of two; the persist keeps the
-    // two scoring consumers (threshold pass + batch pass in q96, and
-    // the stream twin) from re-running the model-side corpus scan
-    // per broadcast build. Both tables stay observed-bigram-bounded.
+    // c1 folds out of c2 (opt r08): c1's count of first tokens over
+    // the raw gram stream == Σ c2 grouped by the bigram's first token
+    // (exact longs), so one plan reading both tables shares c2's gram
+    // exchange and runs ONE gram-explode pass. Both tables stay
+    // observed-bigram-bounded.
     val c2 = mg.groupBy(col("g")).agg(count(lit(1)).as("c2"))
-      .persist()
     val c1 = c2
       .select(substring_index(col("g"), " ", 1).as("w1"), col("c2"))
       .groupBy(col("w1")).agg(sum(col("c2")).as("c1"))
@@ -909,16 +906,17 @@ object CorpusOps {
       .withColumn("quality", col("dedup_keep") && TextOps.gopherPass)
       .withColumn("clean", col("quality") && col("n_hit") === 0)
       .withColumn("pr", sampleHash(col("doc_id")))
-      .persist() // consumed by the rates agg AND the write below
-    val rates = base.filter(col("clean"))
-      .groupBy(col("lang")).agg(count(lit(1)).as("n_cnt"))
-    val target = rates.agg(min(col("n_cnt")).as("target"))
-    base
-      .join(broadcast(rates.crossJoin(broadcast(target))), Seq("lang"), "left")
-      .withColumn("sampled",
-        col("clean") && col("pr") % col("n_cnt") < col("target"))
-      .write.mode("overwrite").parquet(out)
-    base.unpersist()
+    // base feeds the rates agg AND the write below
+    graft.SessionRegistry.withPersisted(base) { base =>
+      val rates = base.filter(col("clean"))
+        .groupBy(col("lang")).agg(count(lit(1)).as("n_cnt"))
+      val target = rates.agg(min(col("n_cnt")).as("target"))
+      base
+        .join(broadcast(rates.crossJoin(broadcast(target))), Seq("lang"), "left")
+        .withColumn("sampled",
+          col("clean") && col("pr") % col("n_cnt") < col("target"))
+        .write.mode("overwrite").parquet(out)
+    }
   }
 
   /** The funnel report (q85): per-source stage counts over the
@@ -1261,14 +1259,13 @@ object CorpusOps {
       .select(col("doc_id"), col("source"),
         md5(Dedup.normText).as("content_hash"),
         TextFns.tokenCount(col("text")).as("n_tok"))
-      // slim digest projection with heavy row-local compute
-      // (NFC-normalize + md5 + tokenCount) consumed by BOTH the
-      // keep-first agg and the semi-join left side — the q89-perDoc
-      // persist class (opt r09 sweep: 2 text scans → 1)
-      .persist()
-    val keep = docs.groupBy(col("content_hash"))
-      .agg(min(col("doc_id")).as("doc_id"))
-    val uniq = docs.join(keep, Seq("content_hash", "doc_id"), "left_semi")
+    // keep-first per digest as ONE window pass over the slim digest
+    // projection (NFC-normalize + md5 + tokenCount run once; was a
+    // min-id agg semi-joined back, which also dropped null digests)
+    val uniq = docs
+      .withColumn("keep_id", min(col("doc_id")).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("content_hash"))))
+      .filter(col("doc_id") === col("keep_id") && col("content_hash").isNotNull)
       .groupBy(col("source"))
       .agg(sum(col("n_tok")).cast("long").as("unique_tokens"))
     mixWeights(spark, dir, budget = 100000L)
@@ -1865,34 +1862,31 @@ object CorpusOps {
     * md5(norm) is the exact-match key (q30/q86's rule). At 100 TB
     * the store digest frame is a materialized artifact of the store,
     * not a rescan — here it is derived inline (store-sized, slim). */
-  /** Session-keyed registry for q99's store-side artifacts: the
-    * persisted digest frame backs THREE consumers (sizing count,
-    * bloom build, exact join) — one store scan per (session, corpus),
-    * and the built filter is itself an artifact (in production it is
+  /** q99's store side, built once per (session, corpus): the store
+    * digest frame is a held artifact (one store scan; it backs the
+    * sizing count, the bloom build and the exact join), and the built
+    * filter is registry-held per fpp (in production both are
     * published alongside the store, not rebuilt per batch). */
   private val bloomCache = graft.SessionRegistry
-    .cache[(SparkSession, String, Double),
-      (DataFrame, org.apache.spark.util.sketch.BloomFilter)]()
+    .cache[(SparkSession, String, Double), org.apache.spark.util.sketch.BloomFilter]()
 
   private[graft] def bloomPrefiltered(spark: SparkSession, dir: String,
       fpp: Double = 0.01): (DataFrame, DataFrame, DataFrame) = {
     val docs = Tables.documents(spark, dir)
     val isBatch = batchPredicate()
-    val (store, bloom) = bloomCache.getOrElseUpdate((spark, dir, fpp), {
-      val s = docs.filter(!isBatch).select(
+    val store = graft.SessionRegistry.held(spark, "bloom_store", dir)(_ => Seq(
+      "" -> docs.filter(!isBatch).select(
         col("doc_id").as("sid"),
-        xxhash64(Dedup.normText).as("h64"), md5(Dedup.normText).as("h"))
-        .persist()
-      val n = s.count() // materializes the one store scan
+        xxhash64(Dedup.normText).as("h64"), md5(Dedup.normText).as("h")))).read()
+    val bloom = bloomCache.getOrElseUpdate((spark, dir, fpp), {
+      val n = store.count()
       // an EMPTY store must yield an explicit empty bloom: the
       // zero-row stat.bloomFilter aggregate returns a filter with a
       // null bit buffer that NPEs inside the codegen probe (the
       // empty-corpus sweep class); an empty created bloom answers
       // false everywhere — correct, nothing can be a store dup
-      val bloom =
-        if (n == 0L) org.apache.spark.util.sketch.BloomFilter.create(1L, fpp)
-        else s.stat.bloomFilter("h64", n, fpp)
-      (s, bloom)
+      if (n == 0L) org.apache.spark.util.sketch.BloomFilter.create(1L, fpp)
+      else store.stat.bloomFilter("h64", n, fpp)
     })
     val batch = docs.filter(isBatch).select(
       col("doc_id"),
@@ -2447,13 +2441,12 @@ object CorpusOps {
     // separate ct/cr subtrees each re-ran the corpus gram-explode
     // pass (sum(when) over the same rows == count over the filtered
     // slice, exact longs)
-    // persisted: the densified table feeds BOTH the totals agg and
-    // the λ projection — unpersisted, each re-ran the corpus bucket
-    // count; the table is DsirBuckets-bounded
+    // the densified table feeds BOTH the totals agg and the λ
+    // projection; the two share the bucket agg's exchange, so the
+    // corpus bucket count runs once; the table is DsirBuckets-bounded
     val bucketCounts = grams.groupBy(col("bucket")).agg(
       sum(when(col("source") === EvalSource, 1L).otherwise(0L)).as("ct"),
       sum(when(col("source") =!= EvalSource, 1L).otherwise(0L)).as("cr"))
-      .persist()
     val dense = spark.range(0, DsirBuckets.toLong)
       .select(col("id").as("bucket"))
       .join(bucketCounts, Seq("bucket"), "left")
@@ -2790,9 +2783,10 @@ object CorpusOps {
     * output is |sources|²-bounded and the per-source counts ride a
     * |sources|-row broadcast. */
   def sourceOverlap(spark: SparkSession, dir: String): DataFrame = {
+    // one wh exchange, shared by the distinct, the per-source counts
+    // and both sides of the self-join
     val c = windowDigests(spark, dir)
-      .select(col("source"), col("wh")).distinct()
-      .persist() // slim; feeds the per-source counts AND both join sides
+      .select(col("source"), col("wh")).repartition(col("wh")).distinct()
     val perSource = c.groupBy(col("source"))
       .agg(count(lit(1)).as("n_win"))
     val shared = c.as("a")
@@ -2949,12 +2943,11 @@ object CorpusOps {
     def gramRows(df: DataFrame, keep: Seq[Column]): DataFrame =
       df.select(keep :+ explode(tagged).as("s"): _*)
         .select(keep ++ Seq(col("s.n").as("n"), explode(col("s.grams")).as("g")): _*)
-    // persisted (opt r08): feeds the per-n gram counts AND the hit
-    // broadcast — unpersisted, the eval n-gram explode ran twice; the
+    // feeds the per-n gram counts AND the hit broadcast, which share
+    // the distinct's exchange (the eval n-gram explode runs once); the
     // table is eval-suite-bounded
     val ev = gramRows(docs.filter(col("source") === EvalSource), Seq.empty)
       .distinct()
-      .persist()
     val evCounts = ev.groupBy(col("n")).agg(count(lit(1)).as("n_eval_grams"))
     val train = docs.filter(col("source") =!= EvalSource)
     val hits = gramRows(train, Seq(col("doc_id")))
@@ -3046,8 +3039,8 @@ object CorpusOps {
     * gopherPass + langPredCol — the same defs q72/q194 gate, so the
     * counts cannot drift) into one |sources|-row agg; (2) a token
     * scan into ONE (source, wlen, anchor) count cube (bounded:
-    * |sources|·|lengths|·2 rows, persisted — lever (g): two
-    * consumers must not re-derive the explode), whose wlen marginal
+    * |sources|·|lengths|·2 rows; its two consumers share its
+    * exchange, so the explode runs once — lever (g)), whose wlen marginal
     * feeds THE q197 KS machinery (tokenLenKsFromCounts) and whose
     * anchor marginal feeds THE q198 binomial test
     * (anchorHealthFromCounts). Every rate is one IEEE division of
@@ -3074,8 +3067,8 @@ object CorpusOps {
       .groupBy(col("source"), col("wlen"), col("anchor"))
       .agg(count(lit(1)).as("c"))
       // (source × wlen × anchor)-bounded rollup — feeds both the KS
-      // reduction and the anchor-health reduction below
-      .persist()
+      // reduction and the anchor-health reduction below, which share
+      // its exchange
     val ks = T.tokenLenKsFromCounts(
         cube.groupBy(col("source"), col("wlen")).agg(sum(col("c")).as("c")))
       .select(col("source"), col("ks"), col("drifted"))

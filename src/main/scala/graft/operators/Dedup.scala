@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.SessionRegistry.Scope
 import graft.Tables
 import graft.functions.{TextFns, VecFns}
 import graft.plans.SimHash64
@@ -519,12 +520,7 @@ object Dedup {
     * shared by q33 (FNV family) and q199 (oracle-mirrorable poly
     * family): 4×16-bit band bucketing (pigeonhole: Hamming ≤ 3 ⟹ at
     * least one equal band) and an exact Hamming check on candidates. */
-  private def simhashPairsFrom(sigsIn: DataFrame): DataFrame = {
-    // persisted (opt r08): the band self-join consumes the signature
-    // frame on BOTH sides — unpersisted, the per-token polynomial
-    // fold over the whole corpus ran twice; (doc_id, sig) is the slim
-    // per-doc projection class (docNll's shape)
-    val sigs = sigsIn.persist()
+  private def simhashPairsFrom(sigs: DataFrame): DataFrame = {
     val bandCols = array((0 until 4).map { j =>
       struct(lit(j).as("band"),
         shiftrightunsigned(col("sig"), j * 16).bitwiseAND(lit(0xffffL)).as("key"))
@@ -533,6 +529,9 @@ object Dedup {
       .select(col("doc_id"), col("sig"), explode(bandCols).as("bk"))
       .select(col("doc_id"), col("sig"),
         col("bk.band").as("band"), col("bk.key").as("band_key"))
+      // ONE exchange on the join keys, shared by both sides of the
+      // band self-join: the per-token signature fold runs once
+      .repartition(col("band"), col("band_key"))
     val cand = bands.as("a")
       .join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
@@ -696,33 +695,36 @@ object Dedup {
     * [[jaccardPairs]]: the cluster table is a pipeline artifact
     * consumed by multiple downstream ops (q35's rollup, q80's
     * representative selection), and it is near-dup-sized, so one
-    * persisted copy per (session, corpus) is the right lifetime. */
+    * disk copy per (session, corpus) is the right lifetime. */
   def clusters(spark: SparkSession, dir: String): DataFrame = {
     // same disk-artifact discipline as [[jaccardPairs]]
-    graft.SessionRegistry.artifact(spark, "clusters", dir)(
-      clusters(spark, dir, smallGraphEdges).write.parquet(_)).read()
+    graft.SessionRegistry.artifact(spark, "clusters", dir)(p =>
+      graft.SessionRegistry.persisting(
+        clusters(spark, dir, _, smallGraphEdges).write.parquet(p))).read()
   }
 
-  private[graft] def clusters(spark: SparkSession, dir: String,
+  private[graft] def clusters(spark: SparkSession, dir: String, scope: Scope,
       smallGraphMax: Long): DataFrame =
     componentsOf(spark,
       jaccardPairs(spark, dir)
         .select(col("doc_a").as("src"), col("doc_b").as("dst")),
-      smallGraphMax)
+      scope, smallGraphMax)
 
   /** Connected components over ANY (src, dst) pair frame — the
     * cluster machinery factored off its edge source so every pair
     * generator (shingle Jaccard q35, embedding LSH q100) shares one
     * implementation: size-adaptive single-task union-find for
     * dup-rate-bounded graphs, min-label propagation above the
-    * threshold. */
+    * threshold. The edge list and every label round stay persisted in
+    * `scope`, so the caller writes or collects the cluster table
+    * inside it. */
   private[graft] def componentsOf(spark: SparkSession, edges: DataFrame,
-      smallGraphMax: Long = smallGraphEdges): DataFrame = {
+      scope: Scope, smallGraphMax: Long = smallGraphEdges): DataFrame = {
     // materialize the symmetric edge list ONCE (the pair scan never
     // re-runs) and shrink it: the graph is tiny relative to the corpus
-    val sym = edges.unionByName(
+    val sym = scope.persisted(edges.unionByName(
       edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(4).persist()
+      .repartition(4))
     val nEdges = sym.count()
     if (nEdges <= smallGraphMax) {
       // The near-dup graph is dup-rate-bounded — orders of magnitude
@@ -751,14 +753,10 @@ object Dedup {
         // root = min member by construction (always parent to the min)
         parent.keysIterator.map(id => (id, find(id)))
       }.toDF("id", "label")
-      val out = clusterRollup(labels).persist()
-      out.count() // materialize before dropping the edge cache
-      sym.unpersist()
-      return out
+      return clusterRollup(labels)
     }
     var labels = sym.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
-    var cached = labels.persist() // persisted frame currently backing `labels`
     var changed = 1L
     var rounds = 0
     val maxRounds = 30 // >= diameter of any plausible near-dup chain
@@ -768,28 +766,18 @@ object Dedup {
         .withColumnRenamed("src", "id")
       // new label + per-row changed flag in one frame; `least` skips
       // the null nbr of rows with no lower-labeled neighbor
-      val prop = labels.join(nbrMin, Seq("id"), "left")
+      val prop = scope.persisted(labels.join(nbrMin, Seq("id"), "left")
         .select(col("id"),
           least(col("label"), col("nbr")).as("label"),
-          (col("nbr") < col("label")).as("ch"))
-        .persist()
+          (col("nbr") < col("label")).as("ch")))
       changed = prop.filter(col("ch")).count() // the round's only action
-      cached.unpersist()
-      cached = prop
       labels = prop.select(col("id"), col("label"))
       rounds += 1
     }
     // fail loudly rather than emit silently-split components
     require(changed == 0,
       s"connected components did not converge in $maxRounds rounds")
-    val out = clusterRollup(labels)
-    // materialize before dropping the lineage caches (the cluster
-    // table is near-dup-sized — small by construction)
-    val materialized = out.persist()
-    materialized.count()
-    cached.unpersist()
-    sym.unpersist()
-    materialized
+    clusterRollup(labels)
   }
 
   /** (id, label) → the cluster table (min-label id, size, members). */
@@ -1164,7 +1152,9 @@ object Dedup {
   }
 
   def semanticClusters(spark: SparkSession, dir: String): DataFrame =
-    componentsOf(spark,
-      embedPairs(spark, dir)
-        .select(col("vec_a").as("src"), col("vec_b").as("dst")))
+    graft.SessionRegistry.artifact(spark, "semclusters", dir)(p =>
+      graft.SessionRegistry.persisting(scope => componentsOf(spark,
+        embedPairs(spark, dir)
+          .select(col("vec_a").as("src"), col("vec_b").as("dst")), scope)
+        .write.parquet(p))).read()
 }

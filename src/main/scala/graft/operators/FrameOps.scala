@@ -223,20 +223,10 @@ object FrameOps {
     * same contract); at any tested SF the user table is thousands of
     * rows. Monetary goes through DECIMAL(18,4) (oracle float rule);
     * ntile ties break deterministically on user_id. */
-  /** Session-keyed DISK artifacts for q124's parallel
-    * quintiles (the q98 pattern, round-7 verdict item 6 made
-    * executable): the per-user rollup is written once (three rankings
-    * + the base projection consume it), and each ranked frame is
-    * written so its offsets action and final plan see the same frozen
-    * partition assignment. Parquet, not persist — a caller's
-    * clearCache() unpersists registry-held frames (the round-6
-    * disk-artifact rule), and a clearCache between the offsets action
-    * and the final plan must not re-draw range boundaries.
-    *
-    * Global NTILE(k) without the single-task window: range-partition
-    * on the order key, row_number per partition IN PARALLEL, add the
-    * bounded per-partition offset table (one scheduler-metadata-sized
-    * collect), then apply the standard ntile arithmetic row-local to
+  /** Global NTILE(k) for q124's quintiles without the single-task
+    * window (the per-user rollup is a disk artifact, written once for
+    * the three rankings + the base projection): the [[globalRank]]
+    * of `slim`, then the standard ntile arithmetic row-local on
     * (global rank, N) — first N mod k tiles get ceil(N/k) rows, the
     * SQL semantics both Spark and DuckDB implement, in exact integer
     * form (ceil(a/b) = floor((a+b-1)/b); quotients ≤ k, so the double
@@ -245,28 +235,46 @@ object FrameOps {
   private def parallelNtile(spark: SparkSession, dir: String,
       slim: => DataFrame, order: Seq[org.apache.spark.sql.Column], k: Int,
       out: String): DataFrame = {
-    val ranged = graft.SessionRegistry.artifact(spark, "rfm_ranged", (dir, out))(
+    val (ranked, n) = globalRank(spark, "rfm_ranged", (dir, out), order)(slim)
+    val rank = col("rank")
+    val q = n / k; val r = n % k; val cut = r * (q + 1)
+    val tile = when(rank <= lit(cut),
+        floor((rank + lit(q)) / lit((q + 1).toDouble)))
+      .otherwise(lit(r) +
+        floor((rank - lit(cut) + lit(q) - 1) / lit(math.max(q, 1L).toDouble)))
+    ranked.select(col("user_id"), tile.cast("long").as(out))
+  }
+
+  /** THE global rank without a single-task window (q23's dictionary
+    * ids, q98's stable ids, q124's quintiles): `slim` is written once
+    * as artifact `name` for `key`, range-partitioned on `order` with
+    * its partition id, so the offsets action and the ranking plan see
+    * one frozen partition assignment; each range partition ranks IN
+    * PARALLEL and adds its base offset from the bounded per-partition
+    * count table (≤ numPartitions rows, one scheduler-metadata-sized
+    * collect). Range partitions are disjoint and ordered on `order`,
+    * so base + row_number is exactly the global ROW_NUMBER() OVER
+    * (ORDER BY `order`) whatever boundaries the sampler draws.
+    * Returns `slim`'s columns plus the 1-based `rank`, and the row
+    * count. */
+  private[graft] def globalRank(spark: SparkSession, name: String, key: Any,
+      order: Seq[org.apache.spark.sql.Column])(slim: => DataFrame): (DataFrame, Long) = {
+    val ranged = graft.SessionRegistry.artifact(spark, name, key)(
       slim.repartitionByRange(
         math.max(spark.sparkContext.defaultParallelism / 2, 4), order: _*)
         .withColumn("pid", spark_partition_id())
         .write.parquet(_)).read()
     val counts = ranged.groupBy(col("pid")).count()
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val n = counts.map(_._2).sum
-    var acc = 0L
-    val offs = counts.map { case (pid, c) => val b = acc; acc += c; (pid, b) }
+    val bases = counts.scanLeft(0L)(_ + _._2)
     import spark.implicits._
-    val offsets = offs.toSeq.toDF("pid", "base")
-    val rank = col("base") + row_number().over(
-      Window.partitionBy(col("pid")).orderBy(order: _*))
-    val q = n / k; val r = n % k; val cut = r * (q + 1)
-    val tile = when(rank <= lit(cut),
-        floor((rank + lit(q)) / lit((q + 1).toDouble)))
-      .otherwise(lit(r) +
-        floor((rank - lit(cut) + lit(q) - 1) / lit(math.max(q, 1L).toDouble)))
-    ranged
+    val offsets = counts.map(_._1).zip(bases).toSeq.toDF("pid", "base")
+    val ranked = ranged
+      .withColumn("rn", row_number().over(Window.partitionBy(col("pid")).orderBy(order: _*)))
       .join(broadcast(offsets), Seq("pid"))
-      .select(col("user_id"), tile.cast("long").as(out))
+      .withColumn("rank", col("base") + col("rn"))
+      .drop("pid", "rn", "base")
+    (ranked, bases.last)
   }
 
   def rfmSegments(spark: SparkSession, dir: String): DataFrame = {
@@ -736,40 +744,11 @@ object FrameOps {
     * legitimate driver-side cumsum). Output values are independent
     * of where the range sampler happens to place boundaries, so the
     * result is exact and deterministic → DuckDB ROW_NUMBER oracle. */
-  /** Session-keyed registry for q98's range-partitioned frame: the
-    * offsets action and the final plan must see the SAME physical
-    * partitioning, so the slim 3-column frame is persisted — and
-    * registered so repeated calls (benchmark loops, specs) reuse ONE
-    * cached copy instead of pinning a new one per invocation. */
-  private val rangedCache =
-    graft.SessionRegistry.cache[(SparkSession, String), DataFrame]()
-
-  def stableIds(spark: SparkSession, dir: String): DataFrame = {
-    val nPart = math.max(spark.sparkContext.defaultParallelism / 2, 4)
-    val ranged = rangedCache.getOrElseUpdate((spark, dir),
-      // slim (doc_id, source) range layout — registry-held so the
-      // offsets scan and the ranked read share one materialization;
-      // a clearCache demotes it to re-execution, never to wrong ids
-      Tables.documents(spark, dir).select(col("doc_id"), col("source"))
-        .repartitionByRange(nPart, col("source"), col("doc_id"))
-        .withColumn("pid", spark_partition_id())
-        .persist())
-    val offsets = {
-      val counts = ranged.groupBy(col("pid")).count()
-        .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-      var acc = 0L
-      val rows = counts.map { case (pid, n) => val base = acc; acc += n; (pid, base) }
-      spark.createDataFrame(rows.toSeq).toDF("pid", "base")
-    }
-    val w = Window.partitionBy(col("pid"))
-      .orderBy(col("source").asc, col("doc_id").asc)
-    ranged
-      .withColumn("rn", row_number().over(w))
-      .join(broadcast(offsets), Seq("pid"))
-      .select(col("doc_id"), col("source"),
-        (col("base") + col("rn")).as("new_id"))
+  def stableIds(spark: SparkSession, dir: String): DataFrame =
+    globalRank(spark, "stable_ids", dir, Seq(col("source").asc, col("doc_id").asc))(
+      Tables.documents(spark, dir).select(col("doc_id"), col("source")))._1
+      .select(col("doc_id"), col("source"), col("rank").as("new_id"))
       .orderBy(col("doc_id"))
-  }
 
   /** q136: time-DECAYED recency feature per user (the EWMA-family
     * feature every event-driven recommender/scoring pipeline derives
@@ -1031,10 +1010,9 @@ object FrameOps {
     // (days × types)-bounded aggregate; days/types DERIVE from it
     // (every ev row lands in exactly one counts group, so the
     // distinct day/type sets are identical) — the old distincts each
-    // re-scanned the event log (opt r09 sweep: 3 scans → 1); three
-    // consumers → persist
+    // re-scanned the event log (opt r09 sweep: 3 scans → 1); the
+    // three consumers share the agg's exchange
     val counts = ev.groupBy(col("day"), col("event_type")).agg(count(lit(1)).as("n"))
-      .persist()
     val days = counts.select(col("day")).distinct()
     val types = counts.select(col("event_type")).distinct()
     val grid = days.crossJoin(broadcast(types))

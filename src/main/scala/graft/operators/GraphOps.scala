@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.SessionRegistry.Scope
+
 /** Graph analytics over the interaction graph — the item-graph
   * counterpart of the reference's similarity apps (a PageRank over
   * the co-click graph is the classic "item importance" prior next to
@@ -23,11 +25,13 @@ object GraphOps {
     * construction (the round-5 judge's one `weak` finding). Disk
     * artifacts also survive a caller's clearCache().
     * coalesce(1) on write: one vocab-bounded file (~16 B/node — tens
-    * of MB even at a 10^7-item catalog), never 32 tiny shards. */
+    * of MB even at a 10^7-item catalog), never 32 tiny shards. `run`
+    * gets a persisting scope that lasts until the write returns, for
+    * the frames its iterations re-read. */
   private def staged(spark: SparkSession, dir: String, name: String)(
-      run: => DataFrame): DataFrame =
-    graft.SessionRegistry.artifact(spark, s"graph_$name", dir)(
-      run.coalesce(1).write.parquet(_)).read()
+      run: Scope => DataFrame): DataFrame =
+    graft.SessionRegistry.artifact(spark, s"graph_$name", dir)(p =>
+      graft.SessionRegistry.persisting(run(_).coalesce(1).write.parquet(p))).read()
 
   /** PageRank iteration count / damping / per-step rounding scale.
     * The q145 oracle SQL is GENERATED from these constants
@@ -61,10 +65,10 @@ object GraphOps {
     * from numpy similarity matrices; this plan never materializes
     * anything denser than the edge list. */
   def pagerank(spark: SparkSession, dir: String): DataFrame =
-    staged(spark, dir, "q145")(pagerankRun(spark, dir))
+    staged(spark, dir, "q145")(pagerankRun(spark, dir, _))
       .orderBy(col("item")) // parquet re-reads don't preserve order
 
-  private def pagerankRun(spark: SparkSession, dir: String): DataFrame = {
+  private def pagerankRun(spark: SparkSession, dir: String, scope: Scope): DataFrame = {
     val unit = math.pow(10, PrScale).toLong // 10^9 fixed-point units
     val pairs = WordItemApp.coClickPairs(spark, dir)
       .filter(col("support") >= PrSupport)
@@ -74,8 +78,8 @@ object GraphOps {
     // both pair-graph-bounded (the ≥support co-click graph is orders
     // of magnitude smaller than the corpus): deg feeds the node-count
     // scalar + the degree join; edges feeds every PageRank iteration
-    val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("deg")).persist()
-    val edges = sym.join(deg, Seq("src")).persist()
+    val deg = scope.persisted(sym.groupBy(col("src")).agg(count(lit(1)).as("deg")))
+    val edges = scope.persisted(sym.join(deg, Seq("src")))
     val n = deg.count() // one bounded driver scalar (item vocabulary)
     var ranks = deg.select(col("src").as("item"),
       lit(unit / n).as("r")) // floor(10^9 / N), exact
@@ -147,20 +151,20 @@ object GraphOps {
     * re-deriving the lineage exponentially. Scale shape: iterations shuffle only the
     * (user, item) distinct-click edge list — never raw events. */
   def hits(spark: SparkSession, dir: String): DataFrame =
-    staged(spark, dir, "q153")(hitsRun(spark, dir))
+    staged(spark, dir, "q153")(hitsRun(spark, dir, _))
       .orderBy(col("role"), col("id"))
 
-  private def hitsRun(spark: SparkSession, dir: String): DataFrame =
-    hitsOnEdges(WordItemApp.userItemClicks(spark, dir))
+  private def hitsRun(spark: SparkSession, dir: String, scope: Scope): DataFrame =
+    hitsOnEdges(WordItemApp.userItemClicks(spark, dir), scope)
 
   /** The HITS loop over an arbitrary (user_id, item) edge list —
     * hitsRun feeds it the click graph; HitsScaleSpec feeds it a
     * synthetic 10^5-node graph to pin the adaptive-unit overflow
     * contract. */
-  private[graft] def hitsOnEdges(edgeList: DataFrame): DataFrame = {
+  private[graft] def hitsOnEdges(edgeList: DataFrame, scope: Scope): DataFrame = {
     // click-edge-bounded; consumed by the size scalars and every
     // HITS half-step join
-    val edges = edgeList.persist()
+    val edges = scope.persisted(edgeList)
     // one action for both side sizes (driver scalars, bounded)
     val sizes = edges.agg(
       countDistinct(col("user_id")).as("nu"),
@@ -189,14 +193,12 @@ object GraphOps {
         .groupBy(col("item")).agg(sum(col("h")).as("raw"))
         .coalesce(1)
         .withColumn("s_tot", sum(col("raw")).over(all))
-      auth = rawA.select(col("item"), expr(s"(raw * $kI) div s_tot").as("a"))
-        .persist()
+      auth = scope.persisted(rawA.select(col("item"), expr(s"(raw * $kI) div s_tot").as("a")))
       val rawH = edges.join(auth, Seq("item"))
         .groupBy(col("user_id")).agg(sum(col("a")).as("raw"))
         .coalesce(1)
         .withColumn("s_tot", sum(col("raw")).over(all))
-      hub = rawH.select(col("user_id"), expr(s"(raw * $kU) div s_tot").as("h"))
-        .persist()
+      hub = scope.persisted(rawH.select(col("user_id"), expr(s"(raw * $kU) div s_tot").as("h")))
     }
     val items = auth.select(lit("item").as("role"), col("item").as("id"),
       col("a").as("score_scaled"),
@@ -216,7 +218,7 @@ object GraphOps {
     * and the cumulative share is a window over that bounded table.
     * Shares divide exact integers → identical IEEE cross-engine. */
   def degreeProfile(spark: SparkSession, dir: String): DataFrame =
-    staged(spark, dir, "q155")(degreeProfileRun(spark, dir))
+    staged(spark, dir, "q155")(_ => degreeProfileRun(spark, dir))
       .orderBy(col("deg"))
 
   private def degreeProfileRun(spark: SparkSession, dir: String): DataFrame = {
@@ -261,14 +263,15 @@ object GraphOps {
     * id-ordered 3-way edge join; the plan never runs one (lever (h)
     * generalized: value equality is what the gate checks). */
   def triangleCensus(spark: SparkSession, dir: String): DataFrame =
-    staged(spark, dir, "q177")(triangleCensusRun(spark, dir))
+    staged(spark, dir, "q177")(triangleCensusRun(spark, dir, _))
       .orderBy(col("node"))
 
-  private def triangleCensusRun(spark: SparkSession, dir: String): DataFrame = {
-    val edges = WordItemApp.coClickPairs(spark, dir)
+  private def triangleCensusRun(spark: SparkSession, dir: String,
+      scope: Scope): DataFrame = {
+    // pair-list-sized; feeds degrees, orientation, closing join
+    val edges = scope.persisted(WordItemApp.coClickPairs(spark, dir)
       .filter(col("support") >= PrSupport)
-      .select(col("item_a"), col("item_b"))
-      .persist() // pair-list-sized; feeds degrees, orientation, closing join
+      .select(col("item_a"), col("item_b")))
     val sym = edges.unionByName(
       edges.select(col("item_b").as("item_a"), col("item_a").as("item_b")))
     val deg = sym.groupBy(col("item_a").as("node"))
@@ -280,11 +283,11 @@ object GraphOps {
         Seq("item_b"))
     val ka = struct(col("da"), col("item_a"))
     val kb = struct(col("db"), col("item_b"))
-    val oriented = withDeg.select(
+    // consumed by adjacency build AND the closing join
+    val oriented = scope.persisted(withDeg.select(
       when(ka < kb, col("item_a")).otherwise(col("item_b")).as("src"),
       when(ka < kb, struct(col("item_b").as("id"), col("db").as("w")))
-        .otherwise(struct(col("item_a").as("id"), col("da").as("w"))).as("e"))
-      .persist() // consumed by adjacency build AND the closing join
+        .otherwise(struct(col("item_a").as("id"), col("da").as("w"))).as("e")))
     // wedges (apex; x, y) from the out-adjacency posting array; the
     // closing pair is re-oriented by (degree, id) so it matches the
     // oriented edge's direction exactly; each closing-edge match is

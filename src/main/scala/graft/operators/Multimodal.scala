@@ -324,9 +324,10 @@ object Multimodal {
     val assets = Tables.documents(spark, dir)
       .select(col("doc_id"), col("text").cast("binary").as("payload"))
       .as[(Long, Array[Byte])]
-    // persisted: the slim fingerprint frame is consumed twice (the
-    // shared-hash agg and the join back) — without it the codec
-    // decode pass, the dominant cost under a real codec, runs twice
+    // the slim fingerprint frame is consumed twice (the shared-hash
+    // agg and the join back); both read ONE fhash exchange, so the
+    // codec decode pass, the dominant cost under a real codec, runs
+    // once
     val frames = assets.mapPartitions { it =>
       val c = codec
       it.flatMap { case (id, payload) =>
@@ -335,11 +336,7 @@ object Multimodal {
             FrameFp(id, idx, c.frameFingerprint(payload, off.toInt, nb.toInt))
         }
       }
-    }.toDF()
-      // frame-fingerprint-table-bounded (docs × sampled frames);
-      // feeds the shared-hash rollup AND the join back — the decode
-      // pass must run once
-      .persist()
+    }.toDF().repartition(col("fhash"))
     val shared = frames.groupBy(col("fhash"))
       .agg(countDistinct(col("doc_id")).as("n_docs_with"))
     frames.join(shared, Seq("fhash"))
@@ -389,9 +386,10 @@ object Multimodal {
       codec: AssetCodec = DeterministicFakeCodec): DataFrame = {
     val assets = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"), col("text").as("payload"))
-    // persisted: consumed by both cluster-size aggs and the join back
-    // (the decode pass, dominant under a real codec, must run once)
-    val hashes = perceptualHashes(spark, assets, codec).persist()
+    // consumed by both cluster-size aggs and the join back, all
+    // above ONE ahash exchange (the decode pass, dominant under a
+    // real codec, runs once)
+    val hashes = perceptualHashes(spark, assets, codec).repartition(col("ahash"))
     val byAhash = hashes.groupBy(col("ahash"))
       .agg(countDistinct(col("doc_id")).as("n_docs_ahash"))
     val byFp = hashes.groupBy(col("fp"))
@@ -441,7 +439,7 @@ object Multimodal {
       .select(col("doc_id"), col("source"),
         col("c.chunk_idx").as("chunk_idx"),
         col("c.n_tok").as("n_bytes"), col("c.fp").as("fp"))
-      .persist() // chunk-table-sized; feeds the keeper agg and the rollup
+      .repartition(col("fp")) // one exchange for the keeper agg and the join
     val keepers = ch.groupBy(col("fp"))
       .agg(min(struct(col("doc_id"), col("chunk_idx"))).as("keeper"))
     ch.join(keepers, Seq("fp"))

@@ -47,7 +47,7 @@ object Recommend {
     val byUser = train.groupBy(col("user"))
       .agg(count(lit(1)).as("n_train"),
         sum(dec(col("rating"))).as("sum_user_dec"))
-      .persist() // users-sized; consumed by both μ and the output join
+    // users-sized; μ and the output join share its exchange
     val glob = byUser.agg(
       sum(col("n_train")).as("n_global"),
       sum(col("sum_user_dec")).as("sum_global_dec"))

@@ -242,20 +242,21 @@ object SimilaritySearch {
         "PQ codebook fit (q67/q69/q74/q225): empty embeddings table")
       // persisted for the concurrent fits only: the ¼-sampled
       // sub-vector frame feeds pqM KMeans fits (each is ≥2 passes) —
-      // fit-sample-bounded, unpersisted in the finally below
-      val trainSample = emb.filter(pmod(col("vec_id"), lit(4)) === 0)
-        .select((0 until pqM).map(j => array_to_vector(
-          slice(col("embedding"), j * pqSubDim + 1, pqSubDim)).as(s"sub_$j")): _*)
-        .repartition(2).persist()
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(pqM)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      try Await.result(Future.sequence((0 until pqM).map { j =>
-        Future(new KMeans().setK(pqK).setSeed(42L + j).setMaxIter(6)
-          .setInitMode("random")
-          .setFeaturesCol(s"sub_$j").setPredictionCol(s"code_$j")
-          .fit(trainSample))
-      }), Duration.Inf)
-      finally { pool.shutdown(); trainSample.unpersist(blocking = false) }
+      // fit-sample-bounded
+      graft.SessionRegistry.withPersisted(emb.filter(pmod(col("vec_id"), lit(4)) === 0)
+          .select((0 until pqM).map(j => array_to_vector(
+            slice(col("embedding"), j * pqSubDim + 1, pqSubDim)).as(s"sub_$j")): _*)
+          .repartition(2)) { trainSample =>
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(pqM)
+        implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+        try Await.result(Future.sequence((0 until pqM).map { j =>
+          Future(new KMeans().setK(pqK).setSeed(42L + j).setMaxIter(6)
+            .setInitMode("random")
+            .setFeaturesCol(s"sub_$j").setPredictionCol(s"code_$j")
+            .fit(trainSample))
+        }), Duration.Inf)
+        finally pool.shutdown()
+      }
     })
   }
 
@@ -469,12 +470,11 @@ object SimilaritySearch {
       // upsert contract the spec asserts) are unchanged. The encoded
       // table is the slim (vec_id, codes, cent_id) projection —
       // persisted only until both commits land.
-      val enc = encodedRows(spark, dir, emb).persist()
-      try {
+      graft.SessionRegistry.withPersisted(encodedRows(spark, dir, emb)) { enc =>
         enc.filter(!isBatchVec).write.partitionBy("cent_id").parquet(out)
         enc.filter(isBatchVec).write
           .mode("append").partitionBy("cent_id").parquet(out)
-      } finally enc.unpersist()
+      }
     }.read()
 
   /** What the index would be if built from the whole corpus in one
@@ -579,9 +579,8 @@ object SimilaritySearch {
     * the centroid agg is map-side partial to a |labels|-row table
     * that broadcasts back; d² is a row-local 64-term codegen chain;
     * both rollups move |labels|-sized rows. The slim (vec_id, label,
-    * d²) frame is persisted for its two consumers (stats + flag
-    * count) — at 100 TB that second consumer re-scans instead
-    * (documented; both passes are map-side). */
+    * d²) frame feeds its two consumers (stats + flag count) from one
+    * label exchange. */
   /** The shared q186/q190 building blocks, one def each (copies
     * drift): fixed-point vector columns, integer centroid, row-local
     * d² against a broadcast centroid table. */
@@ -623,9 +622,9 @@ object SimilaritySearch {
     val d2f = base.join(broadcast(cent), Seq("label"))
       .select(col("label"), col("vec_id"), d2Col.as("d2"))
       // slim per-vector (label, id, d2) projection — feeds BOTH the
-      // per-label stats agg and the outlier filter below (docNll's
-      // persist class; the 64-wide distance kernel runs once)
-      .persist()
+      // per-label stats agg and the outlier filter below, through ONE
+      // label exchange (the 64-wide distance kernel runs once)
+      .repartition(col("label"))
     val stats = d2f.groupBy(col("label"))
       .agg(count(lit(1)).as("n_vecs"),
         sum(col("d2").cast("decimal(38,0)")).as("sd2"),
@@ -1301,7 +1300,7 @@ object SimilaritySearch {
   def embedSeparation(spark: SparkSession, dir: String): DataFrame = {
     val dims = 1 to EmbDim
     val base = fixedVectors(Tables.embeddings(spark, dir))
-    val ct = labelSums(base).persist() // |labels|-row, two consumers
+    val ct = labelSums(base) // |labels|-row; two consumers share its exchange
     val cents = centroidFromSums(ct)
     val glob = ct
       .agg(sum(col("n")).as("gn"),
@@ -1386,7 +1385,7 @@ object SimilaritySearch {
     * ONE probe join at the DEEPEST level with the probe rank kept
     * (posexplode of the ordered cell list); per-(query, probe-rank)
     * bounded top-K heaps reduce the candidate stream to
-    * |queries|·maxProbe·K rows (persisted — lever (g)), and every
+    * |queries|·maxProbe·K rows (read twice through one exchange), and every
     * shallower level's exact top-K is re-derived from those heaps
     * alone (a level's true top-K member is necessarily top-K within
     * its own probe rank), so the curve costs one corpus pass, not
@@ -1412,17 +1411,13 @@ object SimilaritySearch {
       .agg(graft.plans.TopKByKey.topK(RecallK)(col("vec_id"), col("cosine"))
           .as("top"),
         count(lit(1)).as("n_cand"))
-      .persist() // |queries|·maxProbe rows — bounded
-    // persisted: the 50-row exact baseline is consumed SIX times (the
-    // nq count below + one left_semi build per probe level) and static
-    // plans get no exchange reuse across the per-level union arms —
-    // without the persist every consumer re-runs knnBrute's full
-    // corpus pass (opt r08: 6 corpus passes → 1; bounded at
-    // |queries|·RecallK rows)
+    // perCr (|queries|·maxProbe rows) is read twice below, through
+    // its one exchange; the 50-row exact baseline is read twice (the query count and the
+    // left_semi build), both in the one returned plan, so the two
+    // reads share knnBrute's query_id exchange: ONE corpus pass
     val exact = knnBrute(spark, dir)
       .select(col("query_id").as("xq"), col("neighbor_id").as("xn"))
-      .persist()
-    val nq = exact.select(col("xq")).distinct().count()
+    val nq = exact.agg(countDistinct(col("xq")).cast("double").as("nq"))
     // ONE pass for all five levels (opt r08): the old per-level loop
     // unioned five arms, each re-aggregating the heaps and re-joining
     // the baseline — ~35 one-task stages whose per-stage scheduling
@@ -1452,12 +1447,12 @@ object SimilaritySearch {
       .groupBy(col("nprobe")).agg(count(lit(1)).as("n_hits"))
     scanned.join(hits, Seq("nprobe"), "left")
       .na.fill(0L, Seq("n_hits"))
+      .crossJoin(broadcast(nq))
       .select(col("nprobe"),
         col("n_hits"),
-        (col("n_hits").cast("double") /
-          lit((nq * RecallK).toDouble)).as("recall_at_5"),
-        (col("n_scanned").cast("double") / lit(nq.toDouble))
-          .as("avg_candidates"))
+        (col("n_hits").cast("double") / (col("nq") * RecallK.toDouble))
+          .as("recall_at_5"),
+        (col("n_scanned").cast("double") / col("nq")).as("avg_candidates"))
       .orderBy(col("nprobe"))
   }
 

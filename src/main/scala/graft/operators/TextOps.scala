@@ -65,10 +65,10 @@ object TextOps {
       .repartition(1)
 
   def bpeTrain(spark: SparkSession, dir: String): DataFrame = {
-    val rows = bpeCache.getOrElseUpdate((spark, dir), {
-      var vocab = bpeVocab0(spark, dir)
-        .persist()
-      vocab.count()
+    // each step's vocab stays persisted until training ends: the next
+    // step's argmax and merge read it, never its fold lineage
+    val rows = bpeCache.getOrElseUpdate((spark, dir), graft.SessionRegistry.persisting { scope =>
+      var vocab = scope.persisted(bpeVocab0(spark, dir))
       val merges = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
       var step = 1
       var exhausted = false
@@ -93,16 +93,11 @@ object TextOps {
             val pr = row.getString(0)
             val Array(a, b) = pr.split(" ", 2)
             merges += ((step.toLong, pr, a + b, row.getLong(1)))
-            val next = vocab
-              .select(bpeMergeFold(col("sym"), a, b, a + b).as("sym"), col("freq"))
-              .persist()
-            next.count()
-            vocab.unpersist()
-            vocab = next
+            vocab = scope.persisted(vocab
+              .select(bpeMergeFold(col("sym"), a, b, a + b).as("sym"), col("freq")))
         }
         step += 1
       }
-      vocab.unpersist()
       merges.toSeq
     })
     import spark.implicits._
@@ -422,54 +417,24 @@ object TextOps {
       .orderBy(col("tf").desc, col("term"))
       .limit(20)
 
-  /** Session-keyed DISK artifact for q23's range-partitioned vocab
-    * (the q98 pattern): the offsets action and the final plan must
-    * see the SAME frozen partition assignment, so the slim (term, df,
-    * pid) frame is parquet — a bare persist dies under a caller's
-    * clearCache() (the round-6 disk-artifact rule) and
-    * every consumer would re-draw range boundaries.
-    *
-    * TrainDictionary (train/train_dictionary.py:9, gensim
+  /** TrainDictionary (train/train_dictionary.py:9, gensim
     * filter_extremes): vocabulary filtered to df ∈ [5, 0.9·N], ids
-    * assigned deterministically by (df desc, term asc). Round 8
-    * swapped the global one-task row_number for the q98 shape
-    * (FrameOps.stableIds): range-partition on the rank key, rank per
-    * partition IN PARALLEL, then add a bounded per-partition offset
-    * table (nPart rows, one scheduler-metadata-sized collect) — at a
-    * 10⁸-term multilingual web vocab the single-task sort was the
+    * assigned deterministically by (df desc, term asc) through
+    * [[FrameOps.globalRank]] (the vocab is its "vocab" artifact) — at
+    * a 10⁸-term multilingual web vocab a single-task sort was the
     * round-7 verdict's watch item. The oracle statement (ROW_NUMBER
-    * OVER (ORDER BY df DESC, term)) is unchanged: base+rn reproduces
-    * the global rank exactly because range partitions are disjoint
-    * and ordered on the rank key. */
+    * OVER (ORDER BY df DESC, term)) is unchanged. */
   def dictionary(spark: SparkSession, dir: String): DataFrame = {
-    val ranged = graft.SessionRegistry.artifact(spark, "vocab", dir) { p =>
-      val docs = Tables.documents(spark, dir)
-      val nDocs = docs.agg(count(lit(1)).as("n_docs"))
-      val nPart = math.max(spark.sparkContext.defaultParallelism / 2, 4)
+    val docs = Tables.documents(spark, dir)
+    val nDocs = docs.agg(count(lit(1)).as("n_docs"))
+    FrameOps.globalRank(spark, "vocab", dir, Seq(col("df").desc, col("term").asc))(
       docs.select(col("doc_id"), explode(toks).as("term"))
         .groupBy(col("term"))
         .agg(countDistinct(col("doc_id")).as("df"))
         .crossJoin(broadcast(nDocs))
         .filter(col("df") >= 5 && col("df") <= lit(0.9) * col("n_docs"))
-        .select(col("term"), col("df"))
-        .repartitionByRange(nPart, col("df").desc, col("term").asc)
-        .withColumn("pid", spark_partition_id())
-        .write.parquet(p)
-    }.read()
-    val offsets = {
-      val counts = ranged.groupBy(col("pid")).count()
-        .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-      var acc = 0L
-      val rows = counts.map { case (pid, n) => val base = acc; acc += n; (pid, base) }
-      spark.createDataFrame(rows.toSeq).toDF("pid", "base")
-    }
-    val w = Window.partitionBy(col("pid"))
-      .orderBy(col("df").desc, col("term").asc)
-    ranged
-      .withColumn("rn", row_number().over(w))
-      .join(broadcast(offsets), Seq("pid"))
-      .select(col("term"), col("df"),
-        (col("base") + col("rn") - 1).cast("long").as("token_id"))
+        .select(col("term"), col("df")))._1
+      .select(col("term"), col("df"), (col("rank") - 1).cast("long").as("token_id"))
       .orderBy(col("token_id"))
   }
 
@@ -483,14 +448,12 @@ object TextOps {
     val docs = Tables.documents(spark, dir)
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     val terms = docs.select(col("doc_id"), explode(toks).as("term"))
-    // tf persists and df folds out of it (opt r08): tf holds exactly
-    // one row per (doc, term), so count(*) per term == the old
-    // countDistinct(doc_id) over the raw token stream — the separate
-    // df subtree re-ran the corpus tokenize+explode pass (3 tokenizing
-    // scans → 1); tf is the aggregation output the shuffle already
-    // materialized.
+    // df folds out of tf (opt r08): tf holds exactly one row per
+    // (doc, term), so count(*) per term == the old
+    // countDistinct(doc_id) over the raw token stream; tf's two
+    // readers share its (doc_id, term) exchange, so the corpus is
+    // tokenized once (3 tokenizing scans → 1).
     val tf = terms.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-      .persist()
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val scored = tf
       .join(broadcast(df.crossJoin(broadcast(nDocs))), Seq("term"))
@@ -519,27 +482,28 @@ object TextOps {
     val terms = Seq("spark", "table", "join", "data", "query")
     val k1 = 1.2
     val b = 0.75
-    val docs = Tables.documents(spark, dir)
-    // ONE tokenizing corpus pass (opt r09; was two in r08): dl and
-    // the query-term postings come out of the SAME projection —
-    // explode(filter(toks, isin)) is the same multiset as
-    // explode(toks).filter(isin) — and dl rides the tf groupBy keys
-    // (functionally dependent on doc_id), so the old corpus-keyed
-    // contrib⋈dl join disappears entirely. perDoc persists (2
-    // consumers: stats + tf) — the slim per-doc projection class
-    // (docNll's shape: doc_id + int + the ≤5-term match list); tf
-    // persists (2 consumers: df rollup + contrib) — bounded by the
-    // 5-term posting mass. df folds to count(*) over tf (one row per
-    // (doc, term) ⇒ count == countDistinct(doc_id), the q24 fold).
-    val perDoc = docs.select(col("doc_id"),
-      TextFns.tokenCount(col("text")).as("dl"),
-      filter(toks, t => t.isin(terms.map(x => x: Any): _*)).as("qt"))
-      .persist()
-    val stats = perDoc.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_dl"))
-    val tf = perDoc.select(col("doc_id"), col("dl"), explode(col("qt")).as("term"))
-      .groupBy(col("doc_id"), col("term"), col("dl"))
-      .agg(count(lit(1)).as("tf"))
-      .persist()
+    // the postings are held state, built once per (session, corpus):
+    // tf (doc_id, term, dl, tf over the query terms) and the one-row
+    // (n_docs, total_dl); a request probes them. ONE tokenizing corpus
+    // pass builds both: dl and the query-term postings come out of the
+    // SAME projection — explode(filter(toks, isin)) is the same
+    // multiset as explode(toks).filter(isin) — and dl rides the tf
+    // groupBy keys (functionally dependent on doc_id), so no
+    // corpus-keyed contrib⋈dl join exists. df folds to count(*) over
+    // tf (one row per (doc, term) ⇒ count == countDistinct(doc_id),
+    // the q24 fold).
+    val postings = graft.SessionRegistry.held(spark, "bm25_postings", dir) { scope =>
+      val perDoc = scope.persisted(Tables.documents(spark, dir).select(col("doc_id"),
+        TextFns.tokenCount(col("text")).as("dl"),
+        filter(toks, t => t.isin(terms.map(x => x: Any): _*)).as("qt")))
+      Seq(
+        "tf" -> perDoc.select(col("doc_id"), col("dl"), explode(col("qt")).as("term"))
+          .groupBy(col("doc_id"), col("term"), col("dl"))
+          .agg(count(lit(1)).as("tf")),
+        "stats" -> perDoc.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_dl")))
+    }
+    val tf = postings.read("tf")
+    val stats = postings.read("stats")
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val contrib = tf
       .join(broadcast(df), Seq("term"))
@@ -1086,13 +1050,11 @@ object TextOps {
     val pairCol = SkipGramPairs(toks, PmiWindow)
     val cab = docs.select(explode(pairCol).as("pair"))
       .groupBy(col("pair")).agg(count(lit(1)).as("n_pair"))
-    // uni persists (opt r08): it feeds TWO broadcast join sides (w1,
-    // w2) and the static plan re-ran the corpus tokenize pass per
-    // broadcast build; the table is the vocab-bounded aggregation
-    // output the shuffle already materialized.
+    // uni feeds TWO broadcast join sides (w1, w2), which share its
+    // exchange: the corpus tokenize pass runs once for both; the
+    // table is vocab-bounded.
     val uni = docs.select(explode(toks).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("n_w"))
-      .persist()
     // totals are ROW-LOCAL (opt r08): the skip-gram pair count is
     // purely positional (i + j <= len for j in 1..W — the oracle's
     // range predicate), so per doc it is Σ_j max(0, len−j), an exact
@@ -1117,11 +1079,10 @@ object TextOps {
         (col("n_pair").cast("double") * col("n_tok").cast("double") * col("n_tok").cast("double")) /
           (col("n_pairs").cast("double") * col("n_a").cast("double") * col("n_b").cast("double"))), 6))
       .select(col("pair"), col("n_pair"), col("pmi"))
-      // persisted (opt r08): cutTop consumes its input TWICE (K-th
-      // score agg + the filter) and this frame's upstream is the
-      // whole pair-explode pyramid; the survivor table itself is the
-      // ≥MinCount slice — vocab²-bounded, far smaller than the corpus
-      .persist()
+    // cutTop reads `scored` TWICE (K-th score agg + the filter); both
+    // reads share cab's pair exchange and the broadcasts, so the
+    // pair-explode pyramid runs once and only the slim ≥MinCount
+    // projection above it runs twice
     // round 8: the rank window's input is pre-cut to the rows that
     // can rank ≤ K (bounded-heap K-th score as a broadcast scalar) —
     // the ≥MinCount survivor table is vocab²-bounded but at a
@@ -1189,14 +1150,12 @@ object TextOps {
   def keyness(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, dir)
-    // persisted (opt r08): cells feeds FOUR consumers (word totals,
-    // source totals, the grand total, and the scored join) —
-    // unpersisted, each re-ran the corpus tokenize+explode+groupBy
-    // pass; the table is (vocab × |sources|)-bounded aggregation
-    // output the shuffle already materialized
+    // cells feeds FOUR consumers (word totals, source totals, the
+    // grand total, and the scored join), which share its exchange: the
+    // corpus tokenize+explode runs once; the table is
+    // (vocab × |sources|)-bounded
     val cells = docs.select(col("source"), explode(toks).as("w"))
       .groupBy(col("source"), col("w")).agg(count(lit(1)).as("a"))
-      .persist()
     val wordTot = cells.groupBy(col("w")).agg(sum(col("a")).as("cw"))
     val srcTot = cells.groupBy(col("source")).agg(sum(col("a")).as("ns"))
     val nTot = cells.agg(sum(col("a")).as("n"))

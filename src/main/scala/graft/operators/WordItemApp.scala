@@ -58,14 +58,13 @@ object WordItemApp {
       .select(col("user_id"), itemFromProps.as("item"))
       .filter(col("item").isNotNull)
       // slim (user, item) projection with per-row JSON extraction —
-      // consumed by pos, users and items; unpersisted, the event log
-      // was scanned and props-parsed three times (opt r09 sweep)
-      .persist()
+      // consumed by pos, users and items through ONE user_id
+      // exchange, so the event log is scanned and props-parsed once
+      .repartition(col("user_id"))
+    // distinct-pair-bounded aggregate; feeds the negative anti-join
+    // AND the positive stats row
     val pos = clicks.groupBy(col("user_id"), col("item"))
       .agg(count(lit(1)).as("n_clicks"))
-      // distinct-pair-bounded aggregate; feeds the negative anti-join
-      // AND the positive stats row
-      .persist()
     val users = clicks.select(col("user_id")).distinct()
     val items = clicks.select(col("item")).distinct()
     // (u·31 + i) % 20 == 0  ⟺  i % 20 == (20 − (u·31 % 20)) % 20
@@ -237,11 +236,10 @@ object WordItemApp {
     // rows that can rank ≤ M (bounded-heap M-th count as a broadcast
     // scalar) — at 10⁸ items the |items| table must not serialize
     // through one window task; the oracle keeps the plain window
-    // persisted (opt r08): cutTop consumes its input twice (the M-th
-    // count agg + the filter) — without the persist the click-log
-    // groupBy pyramid runs twice; the table is |items|-bounded
+    // cutTop consumes its input twice (the M-th count agg + the
+    // filter); both reads share the item agg's exchange, so the
+    // click-log groupBy pyramid runs once; the table is |items|-bounded
     val counts = train.groupBy(col("item")).agg(count(lit(1)).as("n_clicks"))
-      .persist()
     val topM = graft.plans.TopKByKey.cutTop(counts, col("n_clicks"), RecTopM)
       .withColumn("pop_rank", row_number().over(
         Window.orderBy(col("n_clicks").desc, col("item"))).cast("long"))
@@ -378,34 +376,37 @@ object WordItemApp {
   def temporalSplit(spark: SparkSession, dir: String): DataFrame = {
     // slim click projection (user, item, tsec, event_id) — consumed
     // by the boundary scalar and the per-granularity audits; bounded
-    // by the click-event mass, cleared by session clearCache
-    val ev = clickEvents(spark, dir).persist()
-    // one bounded action: the span scalars (null on an empty log —
-    // then every coalesced count below is 0 and the rate is null)
-    val b = ev.agg(min(col("tsec")).as("mn"), max(col("tsec")).as("mx")).head
-    val boundary =
-      if (b.isNullAt(0)) 0L
-      else b.getLong(0) + (b.getLong(1) - b.getLong(0)) * SplitNum / SplitDen
-    def audit(key: String, label: String): DataFrame = {
-      val trainKeys = ev.filter(col("tsec") < boundary)
-        .select(col(key)).distinct().withColumn("seen", lit(true))
-      val cold = col("tsec") >= boundary && col("seen").isNull
-      ev.join(trainKeys, Seq(key), "left")
-        .agg(
-          coalesce(sum(when(col("tsec") < boundary, 1L).otherwise(0L)), lit(0L))
-            .as("n_train"),
-          coalesce(sum(when(col("tsec") >= boundary, 1L).otherwise(0L)), lit(0L))
-            .as("n_eval"),
-          coalesce(sum(when(cold, 1L).otherwise(0L)), lit(0L)).as("n_cold_events"),
-          countDistinct(when(cold, col(key))).as("n_cold_keys"))
-        .select(lit(label).as("granularity"), col("n_train"), col("n_eval"),
-          col("n_cold_events"), col("n_cold_keys"),
-          when(col("n_eval") === 0L, lit(null).cast("double"))
-            .otherwise(col("n_cold_events").cast("double") /
-              col("n_eval").cast("double")).as("cold_event_rate"))
+    // by the click-event mass. The 2-row report is collected inside
+    // the scope, so nothing reads `ev` after its release.
+    graft.SessionRegistry.withPersisted(clickEvents(spark, dir)) { ev =>
+      // one bounded action: the span scalars (null on an empty log —
+      // then every coalesced count below is 0 and the rate is null)
+      val b = ev.agg(min(col("tsec")).as("mn"), max(col("tsec")).as("mx")).head
+      val boundary =
+        if (b.isNullAt(0)) 0L
+        else b.getLong(0) + (b.getLong(1) - b.getLong(0)) * SplitNum / SplitDen
+      def audit(key: String, label: String): DataFrame = {
+        val trainKeys = ev.filter(col("tsec") < boundary)
+          .select(col(key)).distinct().withColumn("seen", lit(true))
+        val cold = col("tsec") >= boundary && col("seen").isNull
+        ev.join(trainKeys, Seq(key), "left")
+          .agg(
+            coalesce(sum(when(col("tsec") < boundary, 1L).otherwise(0L)), lit(0L))
+              .as("n_train"),
+            coalesce(sum(when(col("tsec") >= boundary, 1L).otherwise(0L)), lit(0L))
+              .as("n_eval"),
+            coalesce(sum(when(cold, 1L).otherwise(0L)), lit(0L)).as("n_cold_events"),
+            countDistinct(when(cold, col(key))).as("n_cold_keys"))
+          .select(lit(label).as("granularity"), col("n_train"), col("n_eval"),
+            col("n_cold_events"), col("n_cold_keys"),
+            when(col("n_eval") === 0L, lit(null).cast("double"))
+              .otherwise(col("n_cold_events").cast("double") /
+                col("n_eval").cast("double")).as("cold_event_rate"))
+      }
+      val out = audit("user_id", "user").unionByName(audit("item", "item"))
+        .orderBy(col("granularity"))
+      spark.createDataFrame(java.util.Arrays.asList(out.collect(): _*), out.schema)
     }
-    audit("user_id", "user").unionByName(audit("item", "item"))
-      .orderBy(col("granularity"))
   }
 
   /** The q201 oracle, generated from [[SplitNum]]/[[SplitDen]] — the

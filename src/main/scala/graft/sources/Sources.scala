@@ -257,7 +257,9 @@ object Sources {
         when(col("text_new").isNull, lit("delete"))
           .when(col("text_old").isNull, lit("add"))
           .otherwise(lit("revise")))
-      .persist() // delta-sized; feeds both chunk passes and the rollup
+      // delta-sized; ONE doc_id exchange feeds both chunk passes and
+      // the rollup join, so the version-diff pyramid runs once
+      .repartition(col("doc_id"))
     def fpCounts(textCol: String, cName: String) =
       graft.operators.CorpusOps.cdcChunkFrame(
           changed.filter(col(textCol).isNotNull)

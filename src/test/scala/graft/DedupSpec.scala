@@ -391,7 +391,7 @@ class DedupSpec extends AnyFunSuite {
     assert(got == expected)
     // the arbitrarily-large-graph path (label propagation, forced by
     // a zero small-graph bound) must produce the identical clusters
-    val loop = Dedup.clusters(spark, sf, smallGraphMax = -1L).collect()
+    val loop = SessionRegistry.persisting(Dedup.clusters(spark, sf, _, smallGraphMax = -1L).collect())
       .map(r => (r.getLong(0), r.getString(2))).toSet
     assert(loop == expected)
   }

@@ -72,6 +72,15 @@ class EmptyCorpusSpec extends AnyFunSuite {
       SparkEntry.queries("q223_learned_admission")(spark, dir).collect()
     }
     assert(qm.getMessage.contains("empty train slice"), qm.getMessage)
+    // q222 and q230 persist the seed set before their fit: a raising
+    // fit must still release it
+    for (name <- Seq("q222_quality_classifier", "q230_classifier_calibration")) {
+      val e = intercept[IllegalArgumentException] {
+        SparkEntry.queries(name)(spark, dir).collect()
+      }
+      assert(e.getMessage.contains("empty train slice"), s"$name: ${e.getMessage}")
+      assert(SparkTest.cacheManagerEmpty, s"$name left its persisted seed set behind")
+    }
     // the embeddings-backed index/experiment family: the quantizer/
     // codebook builders and the experiment runs must fail at the
     // require, not as a mid-job Summarizer task failure

@@ -23,6 +23,12 @@ object SparkTest {
   /** A new, empty fixture dir named by `prefix`. */
   def tempDir(prefix: String): java.nio.file.Path =
     java.nio.file.Files.createTempDirectory(fixtures, prefix)
+
+  /** True when Spark's cache manager holds no persisted plan: no call
+    * left a frame persisted past its return. */
+  def cacheManagerEmpty: Boolean =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty
 }
 
 class FrameOpsSpec extends AnyFunSuite {
@@ -34,6 +40,7 @@ class FrameOpsSpec extends AnyFunSuite {
       // Catalyst prune a column that throws
       val n = fn(spark, sf).queryExecution.toRdd.count()
       assert(n > 0, s"$name returned 0 rows")
+      assert(cacheManagerEmpty, s"$name left a persisted frame in the cache manager")
     }
   }
 

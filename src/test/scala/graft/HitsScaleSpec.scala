@@ -59,24 +59,25 @@ class HitsScaleSpec extends AnyFunSuite {
         when(col("user_id") % 100 === 0, lit(0L))
           .otherwise((col("user_id") * 29 % 50000)).as("c"))).as("item"))
       .distinct()
-    val out = GraphOps.hitsOnEdges(edges).persist()
-    val items = out.filter(col("role") === "item")
-    val users = out.filter(col("role") === "user")
-    // no overflow wraparound anywhere (a negative score is the int64
-    // wrap signature; zeros are legitimate floor-division underflow
-    // when authority mass concentrates on the planted hub)
-    assert(out.filter(col("score_scaled") < 0L).count() == 0L)
-    // L1 renormalization: each side's mass is unit·N_side up to the
-    // per-row floor-division loss (< 1 unit per row)
-    val unit = GraphOps.hitsUnitFor(nU, 50000L)
-    assert(unit == 10000L)
-    val itemMass = items.agg(sum("score_scaled")).head.getLong(0)
-    val nItems = items.count()
-    assert(itemMass <= unit * nItems && itemMass >= unit * nItems - nItems,
-      s"item mass $itemMass vs ${unit * nItems}")
-    // the planted hub is the top authority
-    val top = items.orderBy(col("score_scaled").desc).select("id").head.getLong(0)
-    assert(top == 0L, s"expected planted hub item 0 on top, got $top")
-    out.unpersist()
+    SessionRegistry.persisting { scope =>
+      val out = scope.persisted(GraphOps.hitsOnEdges(edges, scope))
+      val items = out.filter(col("role") === "item")
+      val users = out.filter(col("role") === "user")
+      // no overflow wraparound anywhere (a negative score is the int64
+      // wrap signature; zeros are legitimate floor-division underflow
+      // when authority mass concentrates on the planted hub)
+      assert(out.filter(col("score_scaled") < 0L).count() == 0L)
+      // L1 renormalization: each side's mass is unit·N_side up to the
+      // per-row floor-division loss (< 1 unit per row)
+      val unit = GraphOps.hitsUnitFor(nU, 50000L)
+      assert(unit == 10000L)
+      val itemMass = items.agg(sum("score_scaled")).head.getLong(0)
+      val nItems = items.count()
+      assert(itemMass <= unit * nItems && itemMass >= unit * nItems - nItems,
+        s"item mass $itemMass vs ${unit * nItems}")
+      // the planted hub is the top authority
+      val top = items.orderBy(col("score_scaled").desc).select("id").head.getLong(0)
+      assert(top == 0L, s"expected planted hub item 0 on top, got $top")
+    }
   }
 }
