@@ -6,10 +6,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.plans.{RollingHash, SimHash64, WordNGrams, VecExprs}
 
-/** SparkSessionExtensions entry point: registers graft's native
-  * expressions as SQL functions so the engine is usable from pure
-  * SQL (`spark.sql("SELECT rolling_hash(text) ...")`) and from
-  * spark.sql.extensions config:
+/** SparkSessionExtensions entry point: plans graft's as-of join,
+  * sorts small results in one task (`SingleTaskSort`), and registers
+  * graft's native expressions as SQL functions so the engine is
+  * usable from pure SQL (`spark.sql("SELECT rolling_hash(text) ...")`)
+  * and from spark.sql.extensions config:
   *
   *   SparkSession.builder()
   *     .config("spark.sql.extensions", "graft.GraftExtensions")
@@ -25,6 +26,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    ext.injectQueryStagePrepRule(_ => graft.plans.SingleTaskSort)
     ext.injectFunction((
       FunctionIdentifier("rolling_hash"),
       info("rolling_hash", "rolling_hash(str) - polynomial fingerprint mod 1e9+7"),

@@ -679,12 +679,15 @@ object TextOps {
   private[graft] def gopherSignalCols: Seq[org.apache.spark.sql.Column] = {
     val t = toks
     val stopArr = array(TextFns.Stopwords.map(lit): _*)
+    // codegen built-ins only: an interpreted lambda would re-evaluate
+    // the tokenizer `t` it captures once per element it visits. The
+    // joined length is the summed word length; array_intersect counts
+    // the distinct stopwords present (0 for null text)
     Seq(
       TextFns.tokenCount(col("text")).as("n_words"),
-      (aggregate(t, lit(0L), (acc, w) => acc + length(w)).cast("double") /
-        size(t)).as("mean_wlen"),
+      (length(array_join(t, "")).cast("double") / size(t)).as("mean_wlen"),
       (size(array_distinct(t)).cast("double") / size(t)).as("ttr"),
-      size(filter(stopArr, s => array_contains(t, s))).as("n_stop_kinds"))
+      coalesce(size(array_intersect(stopArr, t)), lit(0)).as("n_stop_kinds"))
   }
 
   /** The Gopher rule BOUNDS as named constants — interpolated into

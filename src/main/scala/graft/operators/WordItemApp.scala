@@ -114,17 +114,24 @@ object WordItemApp {
   /** THE per-user posting arrays: each user's sorted distinct clicked
     * items. `collect_set` over the raw click stream is exactly
     * `collect_list` over the DISTINCT (user, item) set (set equality;
-    * sort_array pins the order), so this is ONE user-keyed shuffle
-    * with map-side partial set-collect. Both the co-click pairs and
-    * q142's item marginals derive from it (shared-rule discipline:
-    * the pair list and the marginals cannot drift), and a plan that
-    * consumes it twice reuses its one exchange instead of scanning
-    * the click log again. */
-  private def clickPostings(spark: SparkSession, dir: String): DataFrame =
-    clickEvents(spark, dir)
-      .select(col("user_id"), col("item"))
-      .groupBy(col("user_id"))
-      .agg(sort_array(collect_set(col("item"))).as("items"))
+    * sort_array pins the order), so the build is ONE user-keyed
+    * shuffle with map-side partial set-collect. Both the co-click
+    * pairs and q142's item marginals derive from it (shared-rule
+    * discipline: the pair list and the marginals cannot drift). Held
+    * serving state, built once per (session, corpus) like q89's BM25
+    * postings: the postings (`read()`) and each item's user count
+    * (`read("item_users")`, q142's marginals |U_a|) — a request
+    * probes them and never scans or JSON-parses the click log again. */
+  private def clickPostings(spark: SparkSession, dir: String): graft.SessionRegistry.Artifact =
+    graft.SessionRegistry.held(spark, "click_postings", dir) { scope =>
+      val postings = scope.persisted(clickEvents(spark, dir)
+        .select(col("user_id"), col("item"))
+        .groupBy(col("user_id"))
+        .agg(sort_array(collect_set(col("item"))).as("items")))
+      Seq("" -> postings,
+        "item_users" -> postings.select(explode(col("items")).as("item"))
+          .groupBy(col("item")).agg(count(lit(1)).as("n_users")))
+    }
 
   /** Co-click support of each (item_a < item_b) pair: the codegen
     * pair kernel over the posting arrays, never a self-join of the
@@ -138,7 +145,7 @@ object WordItemApp {
   /** THE co-click pair rule (q48, q142 and GraphOps' click-graph
     * queries share it). */
   private[operators] def coClickPairs(spark: SparkSession, dir: String): DataFrame =
-    pairSupport(clickPostings(spark, dir))
+    pairSupport(clickPostings(spark, dir).read())
 
   /** MakeSimilarityData: co-click item pairs with support. */
   def similarityData(spark: SparkSession, dir: String): DataFrame =
@@ -153,19 +160,17 @@ object WordItemApp {
     * √(|U_a|·|U_b|) over distinct click sets. Scale shape: the
     * intersection counts are the co-click pairs and the per-item
     * marginals |U_a| are an explode-count of the SAME per-user
-    * posting arrays ([[clickPostings]]), broadcast onto the pair
-    * table — the click log is scanned, JSON-parsed and shuffled on
-    * user once, its exchange reused by both consumers.
+    * posting arrays ([[clickPostings]]), held beside them and
+    * broadcast onto the pair table — a warm request reads no click
+    * log.
     * Floats: |U_a|·|U_b| is an exact integer, √ and ÷ are
     * correctly-rounded IEEE on identical operands → bit-identical
     * cross-engine with no decimal bridge; round(,6) only for
     * presentation. */
   def coClickCosine(spark: SparkSession, dir: String): DataFrame = {
-    val postings = clickPostings(spark, dir)
-    val itemCounts = postings
-      .select(explode(col("items")).as("item"))
-      .groupBy(col("item")).agg(count(lit(1)).as("n_users"))
-    pairSupport(postings)
+    val held = clickPostings(spark, dir)
+    val itemCounts = held.read("item_users")
+    pairSupport(held.read())
       .filter(col("support") >= 2)
       .join(broadcast(itemCounts.select(col("item").as("item_a"),
         col("n_users").as("n_a"))), Seq("item_a"))

@@ -4,6 +4,9 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.ListenerShim
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Host-independent regression gate for serve: each request function,
@@ -11,25 +14,32 @@ import org.scalatest.funsuite.AnyFunSuite
   * job is per-call scheduling cost (a serve request's stages are
   * nearly all single-task), so a new collect, a second scan or an
   * inferring read shows here as a count, whatever the host's speed. */
-class JobBudgetSpec extends AnyFunSuite {
+class JobBudgetSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   import SparkTest._
 
   private val Key = "graft.call"
 
-  /** Jobs per warm call. The budgets are the counts measured when the
-    * q74 probe moved to dynamic partition pruning and q142 to one
-    * click-log scan (before, q74 ran 11 and q142 8 jobs here). A warm
-    * artifact read starts no schema-inference job (q155's staged
-    * degree table). q89 probes held postings (5 jobs; 6 when it
-    * matched frames its last call left in the cache manager). Each
-    * count must hold again after `clearCache()`. */
+  /** Jobs per warm call. q74 prunes its index by dynamic partition
+    * pruning. A warm artifact read starts no schema-inference job
+    * (q155's staged degree table). q89 and q142 probe held postings
+    * (q142's item marginals are held too, so it reads no click log).
+    * A small global sort runs in one task with no range exchange
+    * (`SingleTaskSort`): no bounds-sampling job and no range shuffle
+    * stage in q74, q116, q142, q155 or q11. Each count must hold
+    * again after `clearCache()`. */
   private val budgets = Seq(
-    "q74_ivfpq_disk" -> 7,
-    "q116_knn_sq8" -> 5,
+    "q74_ivfpq_disk" -> 5,
+    "q116_knn_sq8" -> 3,
     "q89_bm25" -> 5,
-    "q142_cooccur_sim" -> 7,
-    "q155_degree_profile" -> 3,
-    "q11_event_rollup" -> 4)
+    "q142_cooccur_sim" -> 3,
+    "q155_degree_profile" -> 1,
+    "q11_event_rollup" -> 2)
+
+  /** The root paths of every file scan in the plan a frame ran. */
+  private def scannedPaths(df: DataFrame): Seq[String] =
+    collectWithSubqueries(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toString)
+    }.flatten
 
   test("every serve request stays within its warm job budget") {
     val jobs = TrieMap.empty[String, Int]
@@ -39,10 +49,14 @@ class JobBudgetSpec extends AnyFunSuite {
           .foreach(k => jobs.updateWith(k)(n => Some(n.getOrElse(0) + 1)))
     }
     val sc = spark.sparkContext
+    val ran = TrieMap.empty[String, DataFrame]
     def block(tag: String): Unit = budgets.foreach { case (name, _) =>
       sc.setLocalProperty(Key, s"$tag:$name")
-      try SparkEntry.queries(name)(spark, sf).queryExecution.toRdd.count()
-      finally sc.setLocalProperty(Key, null)
+      try {
+        val df = SparkEntry.queries(name)(spark, sf)
+        df.queryExecution.toRdd.count()
+        ran.put(s"$tag:$name", df)
+      } finally sc.setLocalProperty(Key, null)
     }
     sc.addSparkListener(listener)
     try {
@@ -70,5 +84,11 @@ class JobBudgetSpec extends AnyFunSuite {
     assert(colder.isEmpty, colder.mkString("; "))
     // the listener saw the calls (the check is not vacuous)
     assert(budgets.forall { case (name, _) => jobs.getOrElse(s"warm:$name", 0) > 0 })
+    // a warm q142 probes the held click postings: its plan reads no
+    // click log, where q11's rollup over the same log does
+    def readsEvents(tag: String): Boolean =
+      scannedPaths(ran(tag)).exists(_.stripSuffix("/").endsWith("/events.parquet"))
+    assert(readsEvents("warm:q11_event_rollup"), scannedPaths(ran("warm:q11_event_rollup")))
+    assert(!readsEvents("warm:q142_cooccur_sim"), scannedPaths(ran("warm:q142_cooccur_sim")))
   }
 }
